@@ -28,6 +28,8 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  private final val SpreadCapConf = "spark.graft.spread.maxInputBytes"
+
   /** Scan-parallelism fix for kernel-heavy projections (optimization guide
    *  §2.4/§6.1): every gate table is a single-row-group parquet file, and a
    *  parquet row group is assigned to the ONE split holding its midpoint —
@@ -49,8 +51,11 @@ object SparkEntry {
   private def spread(df: DataFrame, keys: Column*): DataFrame = {
     val sess = df.sparkSession
     val n = sess.sparkContext.defaultParallelism
-    val cap = sess.conf.getOption("spark.graft.spread.maxInputBytes")
-      .map(_.toLong).getOrElse(256L << 20)
+    val cap = sess.conf.getOption(SpreadCapConf).map { v =>
+      try v.toLong catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$SpreadCapConf must be a whole number of bytes, got '$v'") }
+    }.getOrElse(256L << 20)
     // cap <= 0 is the documented hard-off switch (a 0-byte empty relation
     // must not slip past a 0 cap via <=)
     if (n > 1 && cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap)

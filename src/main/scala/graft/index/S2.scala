@@ -150,10 +150,56 @@ object S2 {
 
   def coverRect(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
                 lvl: Int): Array[Long] = {
+    val rects = faceRects(minLat, minLon, maxLat, maxLon, lvl)
+    val n = rectArea(rects)
+    require(n <= Int.MaxValue - 8, s"covering of $n cells at level $lvl does not fit an array")
+    // distinct (face, i, j) at one level are distinct cells: no dedupe needed
+    val cellShift = MaxLevel - lvl
+    val out = new Array[Long](n.toInt)
+    var k = 0
+    var f = 0
+    while (f < 6) {
+      var i = rects(4 * f)
+      while (i <= rects(4 * f + 1)) {
+        var j = rects(4 * f + 2)
+        while (j <= rects(4 * f + 3)) {
+          out(k) = parent(fromFaceIj(f, i << cellShift, j << cellShift), lvl)
+          k += 1
+          j += 1
+        }
+        i += 1
+      }
+      f += 1
+    }
+    out
+  }
+
+  /** Number of cells [[coverRect]] returns for the same arguments, without
+   *  building them: the sum of the per-face ij rectangle areas. */
+  def coverCount(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
+                 lvl: Int): Long =
+    rectArea(faceRects(minLat, minLon, maxLat, maxLon, lvl))
+
+  private def rectArea(rects: Array[Int]): Long = {
+    var n = 0L
+    var f = 0
+    while (f < 6) {
+      val di = rects(4 * f + 1) - rects(4 * f) + 1
+      val dj = rects(4 * f + 3) - rects(4 * f + 2) + 1
+      if (di > 0 && dj > 0) n += di.toLong * dj
+      f += 1
+    }
+    n
+  }
+
+  /** The covering's clamped ij rectangle on each face at level `lvl`, as
+   *  (i0, i1, j0, j1) at offset 4 * face; a face the rect misses holds an
+   *  empty range (i1 < i0). */
+  private def faceRects(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
+                        lvl: Int): Array[Int] = {
     val cellShift = MaxLevel - lvl
     val maxIj = (1 << lvl) - 1
-    val set = new scala.collection.mutable.HashSet[Long]
-
+    val rects = new Array[Int](24)
     var f = 0
     while (f < 6) {
       // unclamped uv bound over the augmented samples of the rect clipped to
@@ -205,18 +251,14 @@ object S2 {
         val i1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, uMax))) >> cellShift) + 1)
         val j0 = math.max(0, (stToIj(uvToSt(math.max(-1, vMin))) >> cellShift) - 1)
         val j1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, vMax))) >> cellShift) + 1)
-        var i = i0
-        while (i <= i1) {
-          var j = j0
-          while (j <= j1) {
-            set += parent(fromFaceIj(f, i << cellShift, j << cellShift), lvl)
-            j += 1
-          }
-          i += 1
-        }
+        rects(4 * f) = i0; rects(4 * f + 1) = i1
+        rects(4 * f + 2) = j0; rects(4 * f + 3) = j1
+      } else {
+        rects(4 * f) = 0; rects(4 * f + 1) = -1
+        rects(4 * f + 2) = 0; rects(4 * f + 3) = -1
       }
       f += 1
     }
-    set.toArray
+    rects
   }
 }

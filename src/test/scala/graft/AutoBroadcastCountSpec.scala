@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.join.SpatialJoin
@@ -8,7 +9,8 @@ import graft.join.SpatialJoin
  *  `right.count()` on every call — a second complete pass when the right
  *  side is computed rather than a parquet scan. With a caller-supplied row
  *  count the estimate must (a) run one fewer Spark job (the bounded sample
- *  job only) and (b) produce the identical estimate. */
+ *  job only) and (b) produce the identical estimate. `joinAutoBroadcast`
+ *  then takes both its level and its estimate from one sample query. */
 class AutoBroadcastCountSpec extends SparkSpec {
 
   // a COMPUTED, storage-backed right side — the scenario the fix targets: a
@@ -55,5 +57,39 @@ class AutoBroadcastCountSpec extends SparkSpec {
     assert(withRows < withCount,
       s"expected fewer jobs with rightRows supplied " +
         s"(counted=$withCount, supplied=$withRows)")
+  }
+
+  /** Distinct SQL executions (one per DataFrame action) among the jobs
+   *  `body` starts. Under AQE one aggregate over a limit runs as two jobs
+   *  (the limit's shuffle stage, then the result), so jobs over-count
+   *  actions. */
+  private def actionsFor(group: String)(body: => Unit): Int = {
+    val seenJobs = new java.util.concurrent.atomic.AtomicInteger
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          executions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+          seenJobs.incrementAndGet()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val jobs = jobsFor(group)(body)
+      // this listener's queue is drained apart from the status store's
+      var spins = 0
+      while (seenJobs.get < jobs && spins < 250) { Thread.sleep(20); spins += 1 }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    executions.size
+  }
+
+  test("joinAutoBroadcast with AutoLevel and rightRows runs exactly one decision action") {
+    val right = boxes
+    val n = right.count()
+    val actions = actionsFor("acb-auto") {
+      SpatialJoin.joinAutoBroadcast(right.limit(10), right, cellLevel = SpatialJoin.AutoLevel,
+        leftPointsOnly = true, rightRows = Some(n))
+    }
+    assert(actions == 1, s"expected one sample action for level and estimate, got $actions")
   }
 }

@@ -138,6 +138,39 @@ class IndexSpec extends AnyFunSuite {
     assert(small.length < 120, s"small covering too big: ${small.length}")
   }
 
+  test("s2: coverCount equals coverRect's length, and coverRect's ids are distinct") {
+    // seeded random rects at every level 0-12, sized so the covering stays
+    // small, plus rects around the poles, the antimeridian, face boundaries
+    // (lon = ±45°, ±135°), cube corners and the equator
+    val rnd = new scala.util.Random(31337)
+    val anchors = Seq((90.0, 0.0), (-90.0, 77.0), (89.99, -179.99), (0.0, 180.0),
+      (0.0, -180.0), (12.0, 179.95), (0.0, 45.0), (20.0, -135.0), (-30.0, 135.0),
+      (35.264, 45.0), (-35.264, -45.0), (0.0, 0.0), (45.0, 90.0))
+    def clampRect(la0: Double, lo0: Double, la1: Double, lo1: Double) =
+      (math.max(-90.0, la0), math.max(-180.0, lo0), math.min(90.0, la1), math.min(180.0, lo1))
+    for (lvl <- 0 to 12) {
+      val e = math.min(60.0, 240.0 / (1 << lvl)) // ~ a few dozen cells per axis
+      val random = (0 until 40).map { _ =>
+        val la0 = rnd.nextDouble() * 180 - 90
+        val lo0 = rnd.nextDouble() * 360 - 180
+        clampRect(la0, lo0, la0 + rnd.nextDouble() * e, lo0 + rnd.nextDouble() * e)
+      }
+      val special = anchors.map { case (la, lo) =>
+        val h = e * (0.05 + rnd.nextDouble())
+        clampRect(la - h, lo - h, la + h, lo + h)
+      }
+      // degenerate (zero-width or zero-height) rects
+      val thin = Seq(clampRect(10.0, -50.0, 10.0, -50.0 + e), clampRect(-60.0, 120.0, -60.0 + e, 120.0))
+      for ((la0, lo0, la1, lo1) <- random ++ special ++ thin) {
+        val ids = S2.coverRect(la0, lo0, la1, lo1, lvl)
+        val where = s"lvl=$lvl rect=($la0,$lo0,$la1,$lo1)"
+        assert(S2.coverCount(la0, lo0, la1, lo1, lvl) == ids.length, where)
+        assert(ids.distinct.length == ids.length, s"duplicate ids: $where")
+        assert(ids.forall(S2.level(_) == lvl), s"wrong level: $where")
+      }
+    }
+  }
+
   test("s2: all six faces reachable") {
     val faces = Seq((0.0, 0.0), (0.0, 90.0), (89.0, 0.0), (0.0, 180.0), (0.0, -90.0),
       (-89.0, 0.0)).map { case (la, lo) => S2.face(S2.leafCell(la, lo)) }.toSet

@@ -242,6 +242,34 @@ class SpatialJoinSpec extends SparkSpec {
     assert(out == Set((1L, 7L), (2L, -1L), (3L, -1L)))
   }
 
+  // continent-sized boxes (~60 deg): covering at level 9 would be huge
+  private lazy val bigBoxes: DataFrame = spark.createDataFrame((0 until 20).map(i =>
+    (i.toLong, polyWkb((-150.0 + i, -30.0), (-90.0 + i, -30.0),
+      (-90.0 + i, 30.0), (-150.0 + i, 30.0))))).toDF("id", "geometry")
+
+  // city-block boxes (~0.02 deg)
+  private lazy val smallBoxes: DataFrame = spark.createDataFrame((0 until 20).map(i =>
+    (i.toLong, polyWkb((i * 1.0, 0.0), (i + 0.02, 0.0),
+      (i + 0.02, 0.02), (i * 1.0, 0.02))))).toDF("id", "geometry")
+
+  // 300 seeded star-shaped polygons (16-160 vertices, 0.15-0.6 deg radius)
+  // over an 80 x 60 degree extent: an irregular layer of mixed sizes
+  private lazy val starLayer: DataFrame = {
+    val rnd = new scala.util.Random(2025)
+    spark.createDataFrame((0 until 300).map { k =>
+      val cx = rnd.nextDouble() * 80 - 40
+      val cy = rnd.nextDouble() * 60 - 30
+      val r = 0.15 + 0.45 * rnd.nextDouble()
+      val v = 16 + rnd.nextInt(145)
+      val ring = (0 until v).map { i =>
+        val a = (i + 0.8 * rnd.nextDouble()) / v * 2 * math.Pi
+        val rad = r * (0.55 + 0.45 * rnd.nextDouble())
+        (cx + rad * math.cos(a), cy + rad * math.sin(a))
+      }
+      (k.toLong, polyWkb(ring: _*))
+    }).toDF("id", "geometry")
+  }
+
   test("joinAutoBroadcast: sampled size estimate picks broadcast for a small " +
     "layer, shuffle when over budget; rows identical (verdict r4 item 6)") {
     val auto = SpatialJoin.joinAutoBroadcast(points, polys, SpatialPredicate.Intersects)
@@ -271,17 +299,8 @@ class SpatialJoinSpec extends SparkSpec {
 
   test("autoCellLevel: measured fan-out picks coarse levels for big polygons, " +
     "fine for small; join rows are level-invariant") {
-    import spark.implicits._
-    // continent-sized boxes (~60 deg): covering at level 9 would be huge
-    val big = (0 until 20).map(i =>
-      (i.toLong, polyWkb((-150.0 + i, -30.0), (-90.0 + i, -30.0),
-        (-90.0 + i, 30.0), (-150.0 + i, 30.0)))).toDF("id", "geometry")
-    // city-block boxes (~0.02 deg)
-    val small = (0 until 20).map(i =>
-      (i.toLong, polyWkb((i * 1.0, 0.0), (i + 0.02, 0.0),
-        (i + 0.02, 0.02), (i * 1.0, 0.02)))).toDF("id", "geometry")
-    val lBig = SpatialJoin.autoCellLevel(big)
-    val lSmall = SpatialJoin.autoCellLevel(small)
+    val lBig = SpatialJoin.autoCellLevel(bigBoxes)
+    val lSmall = SpatialJoin.autoCellLevel(smallBoxes)
     assert(lBig < lSmall, s"big=$lBig small=$lSmall")
     assert(lBig <= 4 && lSmall >= 8, s"big=$lBig small=$lSmall")
     // the picked levels honor the fan-out budget on the sample
@@ -325,5 +344,68 @@ class SpatialJoinSpec extends SparkSpec {
       .select("pid_left", "gid_right").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(shuffled == bcast)
+  }
+
+  test("auto decisions are pinned: level, covering estimate and broadcast choice") {
+    // (fixture, auto level, estimate at that level), recorded from the
+    // estimator that averaged the lengths of materialized coverings
+    val pins = Seq(
+      ("polys", polys, 3, 2064L),
+      ("bigBoxes", bigBoxes, 1, 16380L),
+      ("smallBoxes", smallBoxes, 12, 36972L),
+      ("starLayer", starLayer, 6, 5534094L))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // silence Spark's own size-based broadcast so the plan shows our choice
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((name, layer, level, est) <- pins) {
+        assert(SpatialJoin.autoCellLevel(layer) == level, name)
+        assert(SpatialJoin.estimateCoveringBytes(layer, level) == est, name)
+        // joinAutoBroadcast decides from the same level and estimate: a
+        // budget of exactly the estimate broadcasts, one byte less does not
+        def broadcasts(budget: Long): Boolean =
+          SpatialJoin.joinAutoBroadcast(points, layer, cellLevel = SpatialJoin.AutoLevel,
+            maxBroadcastBytes = budget).queryExecution.executedPlan.toString
+            .contains("BroadcastHashJoin")
+        assert(broadcasts(est) && !broadcasts(est - 1), name)
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // fixed levels and a sample smaller than the layer
+    assert(SpatialJoin.estimateCoveringBytes(starLayer, 9) == 25036687L)
+    assert(SpatialJoin.estimateCoveringBytes(bigBoxes, 0) == 4095L)
+    assert(SpatialJoin.autoCellLevel(starLayer, sampleRows = 50) == 6)
+    assert(SpatialJoin.estimateCoveringBytes(starLayer, 6, sampleRows = 50) == 5745413L)
+  }
+
+  test("cellCountFor equals the size of cellsFor, for points, clamped boxes and nulls") {
+    import org.apache.spark.sql.functions._
+    def layer(geoms: Array[Byte]*): DataFrame =
+      spark.createDataFrame(geoms.map(Tuple1(_))).toDF("geometry")
+    val small = starLayer.select("geometry").union(layer(pointWkb(10.0, 20.0),
+      polyWkb((170.0, 80.0), (180.0, 80.0), (180.0, 90.0), (170.0, 90.0)),
+      polyWkb((44.0, 0.0), (46.0, 0.0), (46.0, 1.0), (44.0, 1.0)), null))
+    // beyond the lat/lon domain on every side: clamped to the whole sphere
+    val huge = layer(polyWkb((-200.0, -100.0), (200.0, -100.0), (200.0, 100.0), (-200.0, 100.0)))
+    for ((df, levels) <- Seq(small -> (0 to 12), huge -> (0 to 5)); l <- levels) {
+      df.select(SpatialJoin.cellCountFor(col("geometry"), l),
+          size(SpatialJoin.cellsFor(col("geometry"), l)))
+        .collect().foreach(r => assert(r.getLong(0) == r.getInt(1), s"level $l"))
+    }
+  }
+
+  test("auto decisions reject bad arguments, naming the argument and its value") {
+    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    assert(message(SpatialJoin.estimateCoveringBytes(polys, 9, rightRows = Some(-5)))
+      .contains("rightRows must be >= 0, got -5"))
+    assert(message(SpatialJoin.estimateCoveringBytes(polys, 9, sampleRows = 0))
+      .contains("sampleRows must be > 0, got 0"))
+    assert(message(SpatialJoin.joinAutoBroadcast(points, polys, rightRows = Some(-1L)))
+      .contains("rightRows must be >= 0, got -1"))
+    assert(message(SpatialJoin.joinAutoBroadcast(points, polys, sampleRows = -3))
+      .contains("sampleRows must be > 0, got -3"))
+    assert(message(SpatialJoin.autoCellLevel(polys, maxLevel = 31))
+      .contains("maxLevel must be in 0..30, got 31"))
+    assert(message(SpatialJoin.autoCellLevel(polys, targetFanOut = 0.5))
+      .contains("targetFanOut must be >= 1, got 0.5"))
   }
 }

@@ -49,4 +49,15 @@ class SpreadSpec extends SparkSpec {
         s"gate closed but plan still repartitions:\n$plan")
     } finally spark.conf.unset("spark.graft.spread.maxInputBytes")
   }
+
+  test("a malformed spread size gate fails naming the conf key and the value") {
+    spark.conf.set("spark.graft.spread.maxInputBytes", "256MB")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        SparkEntry.queries("q_geodesic")(spark, sf)
+      }
+      assert(e.getMessage.contains("spark.graft.spread.maxInputBytes") &&
+        e.getMessage.contains("'256MB'"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.spread.maxInputBytes")
+  }
 }
