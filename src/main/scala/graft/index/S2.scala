@@ -115,23 +115,10 @@ object S2 {
   /** Approximate cell edge length in degrees at `level` (for coverings). */
   def approxEdgeDeg(level: Int): Double = 90.0 / (1L << level)
 
-  /**
-   * Complete covering of a lat/lon rectangle with cell ids at `level`.
-   *
-   * Per-face analytic bound: on every face, u and v restricted to the rect
-   * are monotone between critical lines, so their extrema over the rect are
-   * attained at rect corners/edge endpoints, on cardinal meridians
-   * (lon ≡ 0 mod 45° — face centers AND face boundaries of the equatorial
-   * faces, u/v axes of the polar faces), or at the equator. Evaluating the
-   * (unclamped) gnomonic u/v of that augmented sample grid on each face and
-   * clamping to the face square [-1,1]² therefore bounds the projection of
-   * every rect point that lands on that face — including points on the face
-   * boundary, where a sample from the far side clamps to exactly ±1. The ij
-   * rectangle of the clamped bound (± one cell of float-safety margin) is a
-   * complete covering. False-positive cells are fine (refinement removes
-   * them); missing a cell is not. Used by the polygon side of the
-   * cell-bucketed spatial join.
-   */
+  /** Float-safety margin added to each side of a face's exact uv bound in
+   *  [[coverRect]]; see the error argument there. */
+  private final val UvMargin = 1e-12
+
   // lat/lon bounding box of each face's point set (with FP-safety margin):
   // equatorial faces reach |lat| 45° (at the centre meridian) and span 90° of
   // lon; polar faces start at the corner latitude asin(1/sqrt(3)) = 33.557°.
@@ -148,6 +135,38 @@ object S2 {
       Array((-90.0, -180.0, -33.0, 180.0)))                            // face 5 (S pole)
   }
 
+  /**
+   * Complete covering of a lat/lon rectangle with cell ids at `level`.
+   *
+   * Per-face analytic bound: on every face, u and v restricted to the rect
+   * are monotone between critical lines, so their extrema over the rect are
+   * attained at rect corners/edge endpoints, on cardinal meridians
+   * (lon ≡ 0 mod 45° — face centers AND face boundaries of the equatorial
+   * faces, u/v axes of the polar faces), or at the equator. Evaluating the
+   * (unclamped) gnomonic u/v of that augmented sample grid on each face and
+   * clamping to the face square [-1,1]² therefore bounds the projection of
+   * every rect point that lands on that face — including points on the face
+   * boundary, where a sample from the far side clamps to exactly ±1. The ij
+   * rectangle of that bound is a complete covering, and a tight one: a rect
+   * inside one cell covers that cell alone. False-positive cells are fine
+   * (refinement removes them); missing a cell is not. Used by the polygon
+   * side of the cell-bucketed spatial join.
+   *
+   * The bound is exact in real arithmetic; in floating point it widens by
+   * [[UvMargin]] (1e-12) on every side before `uvToSt`/`stToIj`. A point's
+   * cell comes from [[leafCell]], which evaluates the same formulas as the
+   * samples (toRadians, cos/sin, one product, one quotient). Each step is
+   * within an ulp or two; the quotient's denominator stays above 0.49 on a
+   * face's clip box, and on a face |u|, |v| <= 1 with derivatives of order 1
+   * in the angles, so the point's computed u/v and the exact value differ
+   * by a few 1e-16 — and so do the samples'. That covers
+   * `Math.sin`/`cos` intrinsics that differ by an ulp between the
+   * interpreter and the JIT. A margin four orders of magnitude above that
+   * error keeps every rect point's computed u/v inside the widened bound;
+   * `uvToSt` and `stToIj` are monotone, so its cell is in the ij range. The
+   * margin widens a covering only for rects within 1e-12 in uv (a few
+   * micrometres on the ground) of a cell edge.
+   */
   def coverRect(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
                 lvl: Int): Array[Long] = {
     val rects = faceRects(minLat, minLon, maxLat, maxLon, lvl)
@@ -198,7 +217,6 @@ object S2 {
   private def faceRects(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
                         lvl: Int): Array[Int] = {
     val cellShift = MaxLevel - lvl
-    val maxIj = (1 << lvl) - 1
     val rects = new Array[Int](24)
     var f = 0
     while (f < 6) {
@@ -243,14 +261,17 @@ object S2 {
           }
         }
       }
-      // skip faces whose uv box misses the face square entirely: no rect
-      // point projects onto this face (points exactly on a face boundary are
-      // caught by the >= comparisons plus the one-cell margin below)
+      // widen the exact bound by the float margin, then skip faces whose uv
+      // box misses the face square entirely: no rect point projects onto
+      // this face (a point exactly on a face boundary, whose face the
+      // largest-component test may assign either way, lies within the margin
+      // of ±1 on both faces and is kept on both)
+      uMin -= UvMargin; uMax += UvMargin; vMin -= UvMargin; vMax += UvMargin
       if (any && uMax >= -1 && uMin <= 1 && vMax >= -1 && vMin <= 1) {
-        val i0 = math.max(0, (stToIj(uvToSt(math.max(-1, uMin))) >> cellShift) - 1)
-        val i1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, uMax))) >> cellShift) + 1)
-        val j0 = math.max(0, (stToIj(uvToSt(math.max(-1, vMin))) >> cellShift) - 1)
-        val j1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, vMax))) >> cellShift) + 1)
+        val i0 = stToIj(uvToSt(math.max(-1, uMin))) >> cellShift
+        val i1 = stToIj(uvToSt(math.min(1, uMax))) >> cellShift
+        val j0 = stToIj(uvToSt(math.max(-1, vMin))) >> cellShift
+        val j1 = stToIj(uvToSt(math.min(1, vMax))) >> cellShift
         rects(4 * f) = i0; rects(4 * f + 1) = i1
         rects(4 * f + 2) = j0; rects(4 * f + 3) = j1
       } else {

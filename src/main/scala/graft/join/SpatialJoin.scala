@@ -103,7 +103,7 @@ object SpatialJoin {
   val AutoLevel: Int = -1
 
   // autoCellLevel's defaults, which AutoLevel uses too
-  private val AutoTargetFanOut = 16.0
+  private val AutoTargetFanOut = 4.0
   private val AutoMaxLevel = 12
 
   /**
@@ -153,10 +153,11 @@ object SpatialJoin {
    * covering); finer levels mean fewer false candidate pairs per cell, so
    * the finest affordable level wins.
    *
-   * The default budget sits above the covering's structural floor: coverRect
-   * pads its ij range with a one-cell safety margin, so even a point-sized
-   * geometry covers 3x3 = 9 cells once the level outresolves its bbox — 16
-   * admits "bbox spans about two cells per axis plus the margin".
+   * The default budget of 4 admits "the bbox spans about two cells per
+   * axis": coverRect is tight (a bbox inside one cell covers that cell
+   * alone), so a geometry smaller than a cell covers 1 to 4 cells depending
+   * on where the cell edges fall, and the finest level whose average stays
+   * within 4 is about the one where a cell matches the typical bbox.
    */
   def autoCellLevel(right: DataFrame, targetFanOut: Double = AutoTargetFanOut,
                     maxLevel: Int = AutoMaxLevel, sampleRows: Int = 2048): Int = {

@@ -56,12 +56,21 @@ object BenchExtra {
         .select((xxhash64(col("url"))).as("doc_id"), col("text"))
 
     // listener events arrive asynchronously after the action returns; wait
-    // for the counter to go quiet before reading it so a pass's bytes are
-    // not attributed to the next pass
+    // until the counter stays unchanged for three consecutive 150 ms windows
+    // (at most 100 windows) before reading it, so a pass's bytes are not
+    // attributed to the next pass
     def settledShuffle(): Long = {
-      var prev = -1L
       var cur = shuffleWritten
-      while (cur != prev) { Thread.sleep(150); prev = cur; cur = shuffleWritten }
+      var quiet = 0
+      var windows = 0
+      while (quiet < 3 && windows < 100) {
+        Thread.sleep(150)
+        val next = shuffleWritten
+        if (next == cur) quiet += 1 else { cur = next; quiet = 0 }
+        windows += 1
+      }
+      if (quiet < 3)
+        System.err.println(s"EXTRA warning: shuffle counter still moving after $windows windows")
       cur
     }
     def measure(tag: String, rows: Long)(df: => org.apache.spark.sql.DataFrame): Unit = {

@@ -171,6 +171,122 @@ class IndexSpec extends AnyFunSuite {
     }
   }
 
+  /** Cube-corner latitude atan(1/sqrt(2)), where three faces meet at lon ±45°/±135°. */
+  private val CubeCornerLat = math.toDegrees(math.atan(1 / math.sqrt(2)))
+
+  /** Seeded rects for every level 0-14 — random ones on all six faces plus
+   *  rects around the poles, the antimeridian, face boundaries (lon
+   *  ±45°/±135°), cube corners and the equator, degenerate ones, and thin
+   *  strips across the critical lines — sized so each covering stays small. */
+  private def coverRects(f: (Int, (Double, Double, Double, Double)) => Unit): Unit = {
+    val rnd = new scala.util.Random(4242L)
+    val c = CubeCornerLat
+    val anchors = Seq((90.0, 0.0), (-90.0, 77.0), (89.99, -179.99), (0.0, 180.0),
+      (0.0, -180.0), (12.0, 179.95), (0.0, 45.0), (0.0, -45.0), (20.0, -135.0),
+      (-30.0, 135.0), (c, 45.0), (-c, -45.0), (c, -135.0), (-c, 135.0), (0.0, 0.0),
+      (45.0, 90.0), (-60.0, 0.0), (0.0, 90.0), (0.0, -90.0))
+    def clampRect(la0: Double, lo0: Double, la1: Double, lo1: Double) =
+      (math.max(-90.0, la0), math.max(-180.0, lo0), math.min(90.0, la1), math.min(180.0, lo1))
+    for (lvl <- 0 to 14) {
+      val e = math.min(60.0, 240.0 / (1 << lvl))
+      val random = (0 until 30).map { _ =>
+        val la0 = rnd.nextDouble() * 180 - 90
+        val lo0 = rnd.nextDouble() * 360 - 180
+        clampRect(la0, lo0, la0 + rnd.nextDouble() * e, lo0 + rnd.nextDouble() * e)
+      }
+      val special = anchors.map { case (la, lo) =>
+        val h = e * (0.05 + rnd.nextDouble())
+        clampRect(la - h, lo - h * rnd.nextDouble(), la + h * rnd.nextDouble(), lo + h)
+      }
+      val degenerate = Seq(clampRect(10.0, -50.0, 10.0, -50.0 + e),
+        clampRect(-60.0, 120.0, -60.0 + e, 120.0), (c, 45.0, c, 45.0), (0.0, -135.0, 0.0, -135.0),
+        (-90.0, -180.0, -90.0, 180.0), (0.0, 180.0, e, 180.0))
+      // long thin strips across the critical meridians, where u/v peak
+      // between the rect's corners: a few cells thick and up to 60° (or
+      // 1,000 cells) long. A parallel bends in uv, so a strip's covering
+      // grows with its length squared; off the equatorial band strips run
+      // only to level 8
+      val half = math.min(30.0, 500 * S2.approxEdgeDeg(lvl))
+      val meridians = Seq(0.0, 45.0, -90.0, 135.0)
+      def strip(la: Double, lo: Double) = clampRect(la, lo - half * rnd.nextDouble(),
+        la + e * rnd.nextDouble(), lo + half * rnd.nextDouble())
+      val strips = meridians.map(strip(rnd.nextDouble() * 60 - 30, _)) ++
+        (if (lvl > 8) Nil
+         else meridians.map(strip((rnd.nextDouble() * 45 + 40) * (if (rnd.nextBoolean()) 1 else -1), _)))
+      (random ++ special ++ degenerate ++ strips).foreach(r => f(lvl, r))
+    }
+  }
+
+  test("s2: tight coverRect is complete at levels 0-14 — interior, edge, corner " +
+    "and critical-line points") {
+    val rnd = new scala.util.Random(20261019L)
+    var checked = 0L
+    coverRects { case (lvl, (la0, lo0, la1, lo1)) =>
+      val cover = S2.coverRect(la0, lo0, la1, lo1, lvl).toSet
+      def lat() = la0 + rnd.nextDouble() * (la1 - la0)
+      def lon() = lo0 + rnd.nextDouble() * (lo1 - lo0)
+      val corners = for (la <- Seq(la0, la1); lo <- Seq(lo0, lo1)) yield (la, lo)
+      val interior = Seq.fill(100)((lat(), lon()))
+      val edges = Seq.fill(10)(Seq((la0, lon()), (la1, lon()), (lat(), lo0), (lat(), lo1))).flatten
+      // the lines where u or v turns: every multiple of 45° lon, the equator,
+      // and the cube-corner latitudes, each crossed with the rect's bounds
+      val critLon = (math.ceil(lo0 / 45.0).toInt to math.floor(lo1 / 45.0).toInt).map(_ * 45.0)
+      val critLat = Seq(0.0, CubeCornerLat, -CubeCornerLat).filter(la => la >= la0 && la <= la1)
+      val critical = critLon.flatMap(lo => Seq((la0, lo), (la1, lo), (lat(), lo))) ++
+        critLat.flatMap(la => Seq((la, lo0), (la, lo1), (la, lon()))) ++
+        (for (la <- critLat; lo <- critLon) yield (la, lo))
+      (corners ++ interior ++ edges ++ critical).foreach { case (la, lo) =>
+        if (!cover.contains(S2.cellId(la, lo, lvl)))
+          fail(s"uncovered ($la,$lo) lvl=$lvl rect=($la0,$lo0,$la1,$lo1)")
+        checked += 1
+      }
+    }
+    assert(checked > 100000, s"only $checked points checked")
+  }
+
+  /** (lat, lon) degrees of the point at (s, t) on `face`: the inverse
+   *  of S2's face projection, quadratic ST -> UV -> gnomonic xyz. */
+  private def faceStToLatLon(face: Int, s: Double, t: Double): (Double, Double) = {
+    def uv(s: Double) = if (s >= 0.5) (4 * s * s - 1) / 3 else (1 - 4 * (1 - s) * (1 - s)) / 3
+    val (u, v) = (uv(s), uv(t))
+    val (x, y, z) = face match {
+      case 0 => (1.0, u, v);   case 1 => (-u, 1.0, v);  case 2 => (-u, -v, 1.0)
+      case 3 => (-1.0, -v, -u); case 4 => (v, -1.0, -u); case _ => (-v, u, -1.0)
+    }
+    (math.toDegrees(math.atan2(z, math.hypot(x, y))), math.toDegrees(math.atan2(y, x)))
+  }
+
+  test("s2: tight coverRect — a rect inside one cell covers exactly that cell, " +
+    "a rect smaller than a cell covers at most 4") {
+    val rnd = new scala.util.Random(77L)
+    def clamped(la: Double, lo: Double, h: Double) =
+      (math.max(-90.0, la - h), math.max(-180.0, lo - h),
+        math.min(90.0, la + h), math.min(180.0, lo + h))
+    for (lvl <- 0 to 14; _ <- 0 until 40) {
+      val n = 1 << lvl
+      val face = rnd.nextInt(6)
+      val (i, j) = (rnd.nextInt(n), rnd.nextInt(n))
+      // a cell's centre is >= (2/3) 2^-lvl from its edges in uv, and the
+      // gnomonic uv moves < 3 per radian of lat or lon, so a rect of
+      // half-size 1e-3 * 90 / 2^lvl degrees stays strictly inside the cell
+      val (la, lo) = faceStToLatLon(face, (i + 0.5) / n, (j + 0.5) / n)
+      val cell = S2.cellId(la, lo, lvl)
+      assert(S2.face(cell) == face, s"inverse projection off: lvl=$lvl face=$face")
+      val (a0, b0, a1, b1) = clamped(la, lo, 1e-3 * 90.0 / n)
+      val inside = S2.coverRect(a0, b0, a1, b1, lvl)
+      assert(inside.toSeq == Seq(cell), s"lvl=$lvl cell ($face,$i,$j): ${inside.length} cells")
+      // a rect spanning 10 * 2^-lvl degrees moves uv by < 6 * 10 * 2^-lvl
+      // radians = 1.05 * 2^-lvl, below a cell's uv width of >= (4/3) 2^-lvl:
+      // at most 2 cells per axis; away from the face edges (st in
+      // [0.1, 0.9]), on one face only
+      val (pa, po) = faceStToLatLon(face, 0.1 + 0.8 * rnd.nextDouble(), 0.1 + 0.8 * rnd.nextDouble())
+      val (c0, d0, c1, d1) = clamped(pa, po, math.min(2.5, 5.0 / n))
+      val small = S2.coverRect(c0, d0, c1, d1, lvl)
+      assert(small.length <= 4 && small.forall(S2.face(_) == face),
+        s"lvl=$lvl rect ($c0,$d0,$c1,$d1): ${small.length} cells")
+    }
+  }
+
   test("s2: all six faces reachable") {
     val faces = Seq((0.0, 0.0), (0.0, 90.0), (89.0, 0.0), (0.0, 180.0), (0.0, -90.0),
       (-89.0, 0.0)).map { case (la, lo) => S2.face(S2.leafCell(la, lo)) }.toSet

@@ -347,13 +347,13 @@ class SpatialJoinSpec extends SparkSpec {
   }
 
   test("auto decisions are pinned: level, covering estimate and broadcast choice") {
-    // (fixture, auto level, estimate at that level), recorded from the
-    // estimator that averaged the lengths of materialized coverings
+    // (fixture, auto level, estimate at that level), recorded from the tight
+    // covering and the default fan-out budget of 4
     val pins = Seq(
-      ("polys", polys, 3, 2064L),
-      ("bigBoxes", bigBoxes, 1, 16380L),
-      ("smallBoxes", smallBoxes, 12, 36972L),
-      ("starLayer", starLayer, 6, 5534094L))
+      ("polys", polys, 2, 516L),
+      ("bigBoxes", bigBoxes, 0, 4212L),
+      ("smallBoxes", smallBoxes, 11, 7020L),
+      ("starLayer", starLayer, 6, 1027161L))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // silence Spark's own size-based broadcast so the plan shows our choice
@@ -371,10 +371,65 @@ class SpatialJoinSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     // fixed levels and a sample smaller than the layer
-    assert(SpatialJoin.estimateCoveringBytes(starLayer, 9) == 25036687L)
-    assert(SpatialJoin.estimateCoveringBytes(bigBoxes, 0) == 4095L)
+    assert(SpatialJoin.estimateCoveringBytes(starLayer, 9) == 13660050L)
+    assert(SpatialJoin.estimateCoveringBytes(bigBoxes, 0) == 4212L)
     assert(SpatialJoin.autoCellLevel(starLayer, sampleRows = 50) == 6)
-    assert(SpatialJoin.estimateCoveringBytes(starLayer, 6, sampleRows = 50) == 5745413L)
+    assert(SpatialJoin.estimateCoveringBytes(starLayer, 6, sampleRows = 50) == 1156143L)
+  }
+
+  test("point joins on the star layer equal brute-force JTS contains in full, " +
+    "at the auto level (broadcast and shuffled) and at fixed levels") {
+    import org.apache.spark.sql.functions.col
+    import org.locationtech.jts.geom.Polygon
+    val layer = starLayer.collect().map(r =>
+      (r.getLong(0), Wkb.read(r.getAs[Array[Byte]](1)).asInstanceOf[Polygon]))
+    // ~2k points: gaussian clusters around 40 star centres (hits and near
+    // misses), uniform background, and vertices (on the boundary: never a
+    // match under contains-not-covers)
+    val rnd = new scala.util.Random(4711)
+    val centres = Seq.fill(40)(layer(rnd.nextInt(layer.length))._2.getEnvelopeInternal.centre())
+    val clustered = Seq.fill(1600) {
+      val c = centres(rnd.nextInt(centres.length))
+      (c.x + rnd.nextGaussian() * 0.3, c.y + rnd.nextGaussian() * 0.3)
+    }
+    val background = Seq.fill(300)((rnd.nextDouble() * 80 - 40, rnd.nextDouble() * 60 - 30))
+    val vertices = Seq.fill(100) {
+      val cs = layer(rnd.nextInt(layer.length))._2.getCoordinates
+      val v = cs(rnd.nextInt(cs.length))
+      (v.x, v.y)
+    }
+    val pts = (clustered ++ background ++ vertices).zipWithIndex.map { case ((x, y), i) =>
+      (i.toLong, x, y)
+    }
+    val ptsDf = spark.createDataFrame(pts.map { case (i, x, y) => (i, pointWkb(x, y)) })
+      .toDF("pid", "geometry")
+    val expected = (for {
+      (pid, x, y) <- pts
+      (id, poly) <- layer
+      if poly.contains(Wkb.factory.createPoint(new Coordinate(x, y)))
+    } yield (pid, id)).sorted
+    assert(expected.length > 500, s"fixture too sparse: ${expected.length} matches")
+    def pairs(df: DataFrame): Seq[(Long, Long)] =
+      df.select(col("pid_left"), col("id_right")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val runs = Seq(
+      "auto, broadcast" -> SpatialJoin.joinAutoBroadcast(ptsDf, starLayer,
+        cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true),
+      "auto, shuffled" -> SpatialJoin.joinAutoBroadcast(ptsDf, starLayer,
+        cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true, maxBroadcastBytes = 1L)) ++
+      Seq(3, 6, 9).map(l => s"level $l" ->
+        SpatialJoin.join(ptsDf, starLayer, cellLevel = l, leftPointsOnly = true)) :+
+      ("level 6, generic path" -> SpatialJoin.join(ptsDf, starLayer, cellLevel = 6))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // silence Spark's own size-based broadcast so a budget of 1 shuffles
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((name, df) <- runs) {
+        assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin") ==
+          !name.contains("shuffled"), name)
+        assert(pairs(df) == expected, name)
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("cellCountFor equals the size of cellsFor, for points, clamped boxes and nulls") {
