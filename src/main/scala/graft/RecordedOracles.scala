@@ -3,7 +3,7 @@ package graft
 /** Recorded-literal oracle VALUES (the q_simhash pattern, applied per
  *  VERDICT r3 item 5): outputs of the self-defined S2/H3 packings on the
  *  first 65 lattice points, and the per-admin census of the 2000-page
- *  pipeline run — generated once by graft.tools.Scratch and pinned so any
+ *  pipeline run — generated once by graft.tools.RefDataGen and pinned so any
  *  cross-round change in cell-id bytes or pipeline output fails the gate.
  *  Regenerate ONLY for a deliberate, documented packing change. */
 object RecordedOracles {

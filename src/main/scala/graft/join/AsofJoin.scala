@@ -64,10 +64,10 @@ object AsofJoin {
    * [[join]], but the running window partitions by (key, time bucket) so a
    * single hot key spreads over `~timeSpan/bucketWidth` tasks instead of one.
    *
-   * Opt-in, not the default: measured at 4M rows (AsofSkewBench, BENCH.md)
-   * this wins 4.9x when 90% of rows share one key but costs ~2x on
-   * unskewed data (the boundary pass is pure overhead when no key
-   * dominates) — choose by whether one key CAN dominate, or gate on a
+   * Opt-in, not the default: measured at 4M rows (BENCH.md, "As-of join
+   * under hot-key skew") this wins 4.9x when 90% of rows share one key but
+   * costs ~2x on unskewed data (the boundary pass is pure overhead when no
+   * key dominates) — choose by whether one key CAN dominate, or gate on a
    * cheap key census.
    *
    * Two passes:

@@ -228,7 +228,7 @@ object SpatialJoin {
    * :558-624). Here the "index" is the exploded polygon→covering-cell frame,
    * materialized to storage, so repeated joins skip the per-polygon
    * `coverRect` + Generate entirely — their plans read an InMemoryTableScan
-   * where the fresh path runs a Generate (PlanCheck asserts this).
+   * where the fresh path runs a Generate (PreparedJoinSpec asserts this).
    */
   def join(left: DataFrame, prepared: PreparedCover,
            predicate: SpatialPredicate,

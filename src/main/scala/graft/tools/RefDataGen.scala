@@ -3,12 +3,19 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Generates the recorded-literal DuckDB oracle SQL for the q_ref_* gates
- *  (reference golden-dataset queries): runs each gate query and prints a
- *  self-contained `WITH v(...) AS (VALUES ...) SELECT ...` matching the
- *  engine's output exactly. Run ONCE per deliberate change; the pinned
- *  values are independently cross-checked by scripts/check_refdata.py. */
+/** Generates the recorded-literal DuckDB oracle SQL pinned in
+ *  `RecordedOracles`: runs each gate query and writes a self-contained
+ *  `WITH v(...) AS (VALUES ...) SELECT ...` matching the engine's output
+ *  exactly. Covers the self-defined packings (q_s2_cells, q_h3_cells,
+ *  q_pages_pipeline, read from `sfDir` and ordered by their first column)
+ *  and the q_ref_* gates over the reference's Arrow files, whose pins are
+ *  independently cross-checked by scripts/check_refdata.py. Run ONCE per
+ *  deliberate change.
+ *
+ *  Usage: runMain graft.tools.RefDataGen [sfDir] [query...] */
 object RefDataGen {
+
+  private val packings = Seq("q_s2_cells", "q_h3_cells", "q_pages_pipeline")
 
   def valuesSql(df: DataFrame): String = {
     val schema = df.schema
@@ -36,19 +43,21 @@ object RefDataGen {
   }
 
   def main(args: Array[String]): Unit = {
+    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val names = if (args.length > 1) args.toSeq.tail
+      else packings ++ Seq("q_ref_cities", "q_ref_nybb", "q_ref_countries", "q_ref_sjoin")
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("q_ref_cities", "q_ref_nybb", "q_ref_countries", "q_ref_sjoin")
     // write UTF-8 files — city names are non-ASCII and console encoding mangles them
     val outDir = java.nio.file.Paths.get("/tmp/refdata_oracle")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
-      val sql = valuesSql(graft.SparkEntry.queries(n)(spark, "/unused"))
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      val sql = valuesSql(if (packings.contains(n)) df.orderBy(df.columns.head) else df)
       java.nio.file.Files.write(outDir.resolve(s"$n.sql"),
         sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"wrote $outDir/$n.sql (${sql.length} chars)")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.SparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
@@ -28,16 +29,9 @@ class AutoBroadcastCountSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group, interruptOnCancel = false)
     try body finally sc.clearJobGroup()
-    // the status store is fed asynchronously; poll briefly until stable
-    var n = -1
-    var stable = 0
-    var spins = 0
-    while (stable < 3 && spins < 100) {
-      val cur = sc.statusTracker.getJobIdsForGroup(group).length
-      if (cur == n) stable += 1 else { n = cur; stable = 0 }
-      Thread.sleep(20); spins += 1
-    }
-    n
+    // the status store and every listener are fed from the async listener bus
+    SparkBridge.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
   }
 
   test("caller-supplied rightRows skips the count job and matches the counted estimate") {
@@ -64,22 +58,14 @@ class AutoBroadcastCountSpec extends SparkSpec {
    *  (the limit's shuffle stage, then the result), so jobs over-count
    *  actions. */
   private def actionsFor(group: String)(body: => Unit): Int = {
-    val seenJobs = new java.util.concurrent.atomic.AtomicInteger
     val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
           executions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
-          seenJobs.incrementAndGet()
-        }
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      val jobs = jobsFor(group)(body)
-      // this listener's queue is drained apart from the status store's
-      var spins = 0
-      while (seenJobs.get < jobs && spins < 250) { Thread.sleep(20); spins += 1 }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    try jobsFor(group)(body) finally spark.sparkContext.removeSparkListener(listener)
     executions.size
   }
 

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -116,6 +119,22 @@ class PipelineSpec extends SparkSpec {
       assert(rows(0).getString(0) == "Entityville-0007")
       assert(rows(0).getLong(1) != 0L)
     } finally q.stop()
+  }
+
+  test("flagship plan: broadcast hash joins, no nested loop, no shuffle exchange") {
+    // size-based broadcasting off: both broadcasts must come from the
+    // pipeline's own hints, whatever the layer sizes or the session default
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plan = try {
+      GeoPipeline.build(spark, 1000, 1, 2).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, s"no BHJ:\n$plan")
+    assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"BNLJ:\n$plan")
+    // a BroadcastExchange is expected; only shuffles break the scan-parallel shape
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"shuffle:\n$plan")
   }
 
   test("pipeline end-to-end: every geocoded page joins exactly one admin cell") {

@@ -12,7 +12,9 @@ class SpreadSpec extends SparkSpec {
   private val touched = Seq(
     "q_st_distance", "q_box_ops", "q_geodesic", "q_simplify", "q_bounds_line",
     "q_intersects_bbox", "q_overlay", "q_buffer", "q_geodesic_ell",
-    "q3_revenue", "q_window_topn", "q_utm")
+    "q3_revenue", "q_window_topn", "q_utm",
+    "q_proj_params", "q_laea", "q_albers", "q_lcc", "q_lcc1sp", "q_cyl", "q_omerc",
+    "q_krovak", "q_sterea")
 
   private def rows(name: String): Map[String, Long] = {
     import org.apache.spark.sql.functions._
