@@ -11,19 +11,21 @@ import graft.join.SpatialJoin
  *  side is computed rather than a parquet scan. With a caller-supplied row
  *  count the estimate must (a) run one fewer Spark job (the bounded sample
  *  job only) and (b) produce the identical estimate. `joinAutoBroadcast`
- *  then takes both its level and its estimate from one sample query. */
+ *  then takes both its level and its estimate from one sample query, and an
+ *  immutable right side is counted and sampled once, on its first call. */
 class AutoBroadcastCountSpec extends SparkSpec {
 
-  // a COMPUTED, storage-backed right side — the scenario the fix targets: a
-  // local relation's count() is served driver-side without a job, so it
-  // would not exercise the second-pass cost at all
-  private def boxes = {
-    val c = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    c.select(col("c_custkey").as("id"),
-      graft.functions.st.st_point(
-        (col("c_custkey") % 80 - 40).cast("double"),
-        (col("c_custkey") % 60 - 30).cast("double")).as("geometry"))
-  }
+  // a COMPUTED, parquet-backed right side — the scenario the fix targets. A
+  // file scan is never remembered (a table may grow between calls), so every
+  // call without rightRows re-counts; a layer of local rows (createDataFrame
+  // over a list) is counted (two jobs under AQE) only on its first call
+  private def boxes = customers(graft.functions.st.st_point(x, y))
+
+  private def customers(geometry: org.apache.spark.sql.Column) =
+    spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+      .select(col("c_custkey").as("id"), geometry.as("geometry"))
+  private def x = (col("c_custkey") % 80 - 40).cast("double")
+  private def y = (col("c_custkey") % 60 - 30).cast("double")
 
   private def jobsFor(group: String)(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -77,5 +79,72 @@ class AutoBroadcastCountSpec extends SparkSpec {
         leftPointsOnly = true, rightRows = Some(n))
     }
     assert(actions == 1, s"expected one sample action for level and estimate, got $actions")
+  }
+
+  /** A unit box around each of [[boxes]]' points, as an in-memory
+   *  `LocalRelation` layer: each point of [[boxes]] lies inside its own box. */
+  private def localBoxes = {
+    val b = unitBoxes
+    spark.createDataFrame(java.util.Arrays.asList(b.collect(): _*), b.schema)
+  }
+
+  /** The same boxes over an RDD (a `LogicalRDD` leaf), whose source may be
+   *  read afresh on every action. */
+  private def rddBoxes = {
+    val b = unitBoxes
+    spark.createDataFrame(spark.sparkContext.parallelize(b.collect().toSeq, 2), b.schema)
+  }
+
+  private def unitBoxes =
+    customers(graft.functions.st.st_makeBox(x - 0.5, y - 0.5, x + 0.5, y + 0.5))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.select(col("id_left").cast("long"), col("id_right").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  private def autoJoin(left: org.apache.spark.sql.DataFrame,
+                       right: org.apache.spark.sql.DataFrame) =
+    SpatialJoin.joinAutoBroadcast(left, right, cellLevel = SpatialJoin.AutoLevel,
+      leftPointsOnly = true)
+
+  test("an in-memory right side is decided once: a second joinAutoBroadcast runs no " +
+    "decision action and returns the same rows") {
+    val right = localBoxes
+    val left = boxes.limit(200)
+    var first, second: org.apache.spark.sql.DataFrame = null
+    val firstActions = actionsFor("acb-memo-1") { first = autoJoin(left, right) }
+    val secondActions = actionsFor("acb-memo-2") { second = autoJoin(left, right) }
+    assert(firstActions == 2, s"first call: expected count + sample, got $firstActions")
+    assert(secondActions == 0, s"second call re-decided: $secondActions actions")
+    assert(rows(second) == rows(first) && rows(first).nonEmpty)
+  }
+
+  test("a parquet-backed, RDD-backed or nondeterministic right side re-decides on every call") {
+    val sides = Seq("parquet" -> boxes, "createDataFrame(rdd, schema)" -> rddBoxes,
+      "rand() filter" -> localBoxes.filter(rand(7) < 2.0))
+    for ((name, right) <- sides) {
+      val calls = (1 to 2).map(i => actionsFor(s"acb-fresh-$i") {
+        SpatialJoin.joinAutoBroadcast(right.limit(10), right, cellLevel = 4,
+          leftPointsOnly = true)
+      })
+      assert(calls == Seq(2, 2), s"$name: expected count + sample on each call, got $calls")
+    }
+  }
+
+  test("a remembered right side samples again for another sampleRows, and a " +
+    "supplied rightRows overrides its remembered count") {
+    val right = localBoxes
+    var est = 0L
+    assert(actionsFor("acb-key-1") { est = SpatialJoin.estimateCoveringBytes(right, 4) } == 2)
+    assert(actionsFor("acb-key-2") {
+      SpatialJoin.estimateCoveringBytes(right, 4, sampleRows = 100)
+    } == 1, "another sampleRows must sample again (the count stays remembered)")
+    val n = right.count()
+    var est10 = 0L
+    assert(actionsFor("acb-key-3") {
+      est10 = SpatialJoin.estimateCoveringBytes(right, 4, rightRows = Some(10 * n))
+    } == 0)
+    // est = floor(n × fanOut × bytes), so 10n gives 10·est up to the truncation
+    assert(est10 >= 10 * est && est10 < 10 * est + 10, s"est=$est est10=$est10")
   }
 }

@@ -463,4 +463,61 @@ class SpatialJoinSpec extends SparkSpec {
     assert(message(SpatialJoin.autoCellLevel(polys, targetFanOut = 0.5))
       .contains("targetFanOut must be >= 1, got 0.5"))
   }
+
+  test("every DataFrame entry point rejects a bad cell level by name and value, " +
+    "before any Spark job") {
+    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    val (pts, layer) = (points, polys)
+    val path = java.nio.file.Files.createTempDirectory("badlevel").resolve("t").toString
+    val sc = spark.sparkContext
+    sc.setJobGroup("bad-level", "bad-level", interruptOnCancel = false)
+    val messages = try Seq(
+      // AutoLevel means "measure it" only to joinAutoBroadcast; as a level
+      // it is one bogus cell holding every point and polygon (all pairs refined)
+      message(SpatialJoin.join(pts, layer, cellLevel = SpatialJoin.AutoLevel)) ->
+        "cellLevel must be in 0..30, got -1",
+      message(SpatialJoin.join(pts, layer, cellLevel = -3)) -> "cellLevel must be in 0..30, got -3",
+      message(SpatialJoin.join(pts, layer, cellLevel = 31)) -> "cellLevel must be in 0..30, got 31",
+      message(SpatialJoin.joinAutoBroadcast(pts, layer, cellLevel = -3)) ->
+        "cellLevel must be in 0..30 or AutoLevel (-1), got -3",
+      message(SpatialJoin.joinAutoBroadcast(pts, layer, cellLevel = 31)) ->
+        "cellLevel must be in 0..30 or AutoLevel (-1), got 31",
+      message(SpatialJoin.estimateCoveringBytes(layer, SpatialJoin.AutoLevel)) ->
+        "cellLevel must be in 0..30, got -1",
+      message(SpatialJoin.joinWithin(pts, layer, 1.0, cellLevel = 31)) ->
+        "cellLevel must be in 0..30, got 31",
+      message(SpatialJoin.joinSalted(pts, layer, cellLevel = -2)) ->
+        "cellLevel must be in 0..30, got -2",
+      message(SpatialJoin.prepare(layer, cellLevel = 40)) -> "cellLevel must be in 0..30, got 40",
+      message(SpatialJoin.prepareToTable(layer, path, cellLevel = -1)) ->
+        "cellLevel must be in 0..30, got -1",
+      message(SpatialJoin.prepareToTable(layer, path, partLevel = 31)) ->
+        "partLevel must be in 0..30, got 31",
+      message(SpatialJoin.loadPrepared(spark, path, cellLevel = 31)) ->
+        "cellLevel must be in 0..30, got 31")
+    finally sc.clearJobGroup()
+    for ((got, want) <- messages) assert(got.contains(want), s"'$got' lacks '$want'")
+    org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("bad-level").isEmpty)
+    assert(!new java.io.File(path).exists())
+  }
+
+  test("q_spatial_join plans a broadcast hash join on __cell and no nested loop, " +
+    "without Spark's size-based broadcast") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val plan = try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      SparkEntry.queries("q_spatial_join")(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val onCell = plan.collect { case j: BroadcastHashJoinExec => j }
+      .filter(j => (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "__cell")))
+    assert(onCell.nonEmpty, s"no broadcast hash join on __cell:\n$plan")
+    assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"BNLJ:\n$plan")
+  }
 }
