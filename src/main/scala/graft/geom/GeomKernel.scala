@@ -40,13 +40,13 @@ object GeomKernel {
   // Kernels never mutate a decoded geometry (transform/affine copy() first),
   // so sharing is safe. Tiny WKBs (points) decode directly — cheaper than
   // the memo bookkeeping.
-  private val lastDecoded = new ThreadLocal[CachedGeom]
+  private val lastDecoded = new ThreadLocal[JoinGeom]
   @inline private def g(wkb: Array[Byte]): Geometry = {
     if (wkb.length <= 32) return Wkb.read(wkb)
     val e = lastDecoded.get()
     if (e != null && java.util.Arrays.equals(e.bytes, wkb)) e.geom
     else {
-      val ne = new CachedGeom(wkb, Wkb.read(wkb))
+      val ne = new JoinGeom(wkb, Wkb.read(wkb))
       lastDecoded.set(ne)
       ne.geom
     }
@@ -291,33 +291,46 @@ object GeomKernel {
   final val PRED_INTERSECTS = 0
   final val PRED_CONTAINS = 1
 
-  /**
-   * Exact replica of the reference's candidate-refinement dispatch
-   * (spatial_index.rs:89-137), including its quirks:
-   *   - Point vs (Multi)Polygon (either order) ignores the requested predicate
-   *     and always tests polygon-contains-point;
-   *   - Polygon/Polygon and MultiPolygon/Polygon honor Contains vs Intersects;
-   *   - Polygon vs MultiPolygon supports only Intersects;
-   *   - (Multi)LineString vs Point (either order) tests line-contains-point;
-   *   - every other type pairing is `false` (fall-through arm).
-   * georust has no `Line` scalar type distinct from LineString in our model, so
-   * the Line arms collapse into the LineString arms.
-   */
   // Refine fast path plumbing. In the production join the right side is a
   // small broadcast polygon layer probed millions of times per task: decoding
   // the same WKB through JTS per candidate pair dominated the refine profile
-  // (~15% of pipeline samples). A thread-local cache keyed by content hash
+  // (~15% of pipeline samples). A thread-local LRU keyed by content hash
   // (byte-verified on hit, so a 64-bit collision can only cost a re-parse,
   // never a wrong geometry) holds the parsed geometry plus a lazily built
   // point-in-area locator; the 21-byte XY point side is parsed directly from
-  // its WKB without JTS at all.
-  private final class CachedGeom(val bytes: Array[Byte], val geom: Geometry) {
+  // its WKB without JTS at all. The indexed layer probe (`LayerIndex`) keeps
+  // one shared [[JoinGeom]] per polygon instead and bypasses this cache.
+
+  /** A parsed join geometry with its point-in-area locator, built on first
+   *  use. Safe to share between threads once built by [[joinGeom]]: the
+   *  locator is a synchronized lazy val over JTS's own synchronized index
+   *  build, and every envelope JTS would otherwise cache lazily is computed
+   *  before the value is published. */
+  private[graft] final class JoinGeom private[geom] (val bytes: Array[Byte], val geom: Geometry) {
     lazy val areaLocator = new org.locationtech.jts.algorithm.locate
       .IndexedPointInAreaLocator(geom)
   }
-  private val refineCache =
-    ThreadLocal.withInitial[java.util.HashMap[Long, CachedGeom]](
-      () => new java.util.HashMap[Long, CachedGeom])
+
+  /** A [[JoinGeom]] to share across threads (one per polygon of a broadcast
+   *  layer), parsed from `wkb` with every component envelope precomputed. */
+  private[graft] def joinGeom(wkb: Array[Byte]): JoinGeom = {
+    val geom = Wkb.read(wkb)
+    geom.apply(new GeometryComponentFilter {
+      def filter(c: Geometry): Unit = c.getEnvelopeInternal
+    })
+    new JoinGeom(wkb, geom)
+  }
+
+  /** Entries per thread in the refine cache: enough for an admin-sized
+   *  layer, small enough that a 2,500-polygon layer's parsed geometries and
+   *  locators do not stay resident in every task thread. */
+  private final val RefineCacheEntries = 1024
+
+  private val refineCache = ThreadLocal.withInitial[java.util.LinkedHashMap[Long, JoinGeom]](
+    () => new java.util.LinkedHashMap[Long, JoinGeom](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Long, JoinGeom]): Boolean =
+        size > RefineCacheEntries
+    })
 
   private def fnv(b: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
@@ -327,15 +340,15 @@ object GeomKernel {
   }
 
   /** Parse-through cache for geometries worth caching (the replicated join
-   *  side); tiny WKBs (points) are unique per row and bypass it. */
-  private def cached(b: Array[Byte]): CachedGeom = {
+   *  side); tiny WKBs (points) are unique per row and bypass it. Once full it
+   *  evicts the least recently used entry. */
+  private def cached(b: Array[Byte]): JoinGeom = {
     val m = refineCache.get()
     val k = fnv(b)
     val e = m.get(k)
     if (e != null && java.util.Arrays.equals(e.bytes, b)) e
     else {
-      if (m.size > 1024) m.clear()
-      val ne = new CachedGeom(b, Wkb.read(b))
+      val ne = new JoinGeom(b, Wkb.read(b))
       m.put(k, ne)
       ne
     }
@@ -358,18 +371,45 @@ object GeomKernel {
     java.lang.Double.longBitsToDouble(bits)
   }
 
-  def joinRefine(lhs: Array[Byte], rhs: Array[Byte], predicate: Int): Boolean = {
-    if (isPointWkb(lhs) && !isPointWkb(rhs)) {
+  /** Bounding box of a join's left geometry, as `stBounds` computes it; an
+   *  XY point's comes straight from its WKB. */
+  private[graft] def joinEnvelope(wkb: Array[Byte]): Envelope =
+    if (isPointWkb(wkb)) {
+      val le = wkb(0) == 1
+      val x = wkbDouble(wkb, 5, le); val y = wkbDouble(wkb, 13, le)
+      new Envelope(x, x, y, y)
+    } else g(wkb).getEnvelopeInternal
+
+  /** [[joinRefineWith]] on two WKBs, the right one parsed through the refine
+   *  cache. */
+  def joinRefine(lhs: Array[Byte], rhs: Array[Byte], predicate: Int): Boolean =
+    joinRefineWith(lhs, if (rhs.length <= 32) new JoinGeom(rhs, Wkb.read(rhs)) else cached(rhs),
+      predicate)
+
+  /**
+   * Exact replica of the reference's candidate-refinement dispatch
+   * (spatial_index.rs:89-137), including its quirks:
+   *   - Point vs (Multi)Polygon (either order) ignores the requested predicate
+   *     and always tests polygon-contains-point;
+   *   - Polygon/Polygon and MultiPolygon/Polygon honor Contains vs Intersects;
+   *   - Polygon vs MultiPolygon supports only Intersects;
+   *   - (Multi)LineString vs Point (either order) tests line-contains-point;
+   *   - every other type pairing is `false` (fall-through arm).
+   * georust has no `Line` scalar type distinct from LineString in our model, so
+   * the Line arms collapse into the LineString arms. This is the one home of
+   * the truth table: [[joinRefine]] and the indexed layer probe both call it.
+   */
+  private[graft] def joinRefineWith(lhs: Array[Byte], rhs: JoinGeom, predicate: Int): Boolean = {
+    if (isPointWkb(lhs)) {
       // truth-table arms with a point left-hand side, JTS-free on the left:
       // (Point, (Multi)Polygon) -> polygon-contains-point == interior locate;
       // (Point, (Multi)LineString) -> line.contains(point); anything else ->
       // fall-through false — identical to the general match below.
       val le = lhs(0) == 1
       val x = wkbDouble(lhs, 5, le); val y = wkbDouble(lhs, 13, le)
-      val e = cached(rhs)
-      return e.geom match {
+      return rhs.geom match {
         case _: Polygon | _: MultiPolygon =>
-          e.areaLocator.locate(new Coordinate(x, y)) == Location.INTERIOR
+          rhs.areaLocator.locate(new Coordinate(x, y)) == Location.INTERIOR
         case l: LineString =>
           l.contains(Wkb.factory.createPoint(new Coordinate(x, y)))
         case l: MultiLineString =>
@@ -378,8 +418,7 @@ object GeomKernel {
       }
     }
     val lg = if (lhs.length <= 32) g(lhs) else cached(lhs).geom
-    val rg = if (rhs.length <= 32) g(rhs) else cached(rhs).geom
-    (lg, rg) match {
+    (lg, rhs.geom) match {
       case (p: Point, poly: Polygon) => poly.contains(p)
       case (poly: Polygon, p: Point) => poly.contains(p)
       case (p: Point, poly: MultiPolygon) => poly.contains(p)

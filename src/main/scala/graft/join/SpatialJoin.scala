@@ -1,11 +1,15 @@
 package graft.join
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.GeneratorOuter
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructType}
 
 import graft.functions.st
 import graft.geom.GeomKernel
@@ -48,11 +52,14 @@ final class PreparedCover private[join](
  *   filter  — candidate generation. The reference scans an in-process R-tree
  *             for AABB overlaps (:73-76); at cluster scale we bucket both
  *             sides by S2 cell (point -> its containing cell, polygon -> its
- *             covering cells) so candidates co-locate under a plain equi-join
- *             that Catalyst plans natively (broadcast or shuffled hash join —
- *             never a nested loop).
+ *             covering cells). A broadcast layer whose rows the plan holds
+ *             (see [[join]]) becomes one compact cell index probed from the
+ *             point side in a single pass; every other layer meets its
+ *             candidates under an equi-join on cell that Catalyst plans
+ *             natively (broadcast or shuffled hash join). Neither is ever a
+ *             nested loop.
  *   refine  — the exact predicate truth table (:89-137), reproduced verbatim
- *             in `GeomKernel.joinRefine`, evaluated inside codegen.
+ *             in `GeomKernel.joinRefineWith`.
  *   finish  — row-index pair matching with `_left`/`_right` suffixing
  *             (:147-199), reproduced with per-side row ids.
  *
@@ -78,6 +85,17 @@ object SpatialJoin {
    * name "geometry", spatial_index.rs:44-45). Right side is broadcast when
    * `broadcastRight` (admin-boundary-sized layers); otherwise a shuffled
    * equi-join on cell.
+   *
+   * With `leftPointsOnly` and `broadcastRight`, a right side whose rows the
+   * plan itself holds (the condition in [[estimateCoveringBytes]]) that is
+   * neither cached nor streaming is indexed once per cell level: its
+   * covering, bboxes and rows go into one broadcast `LayerIndex`,
+   * remembered on its analyzed plan, and the left side alone is probed
+   * through a `Generate` (`spatial_index_probe` in the plan, naming the
+   * level and the index's size). Building it collects the right side, which
+   * for a `LocalRelation` runs no Spark job. Columns, their order and
+   * nullability, and the output rows are those of the hash-join plan that
+   * every other right side keeps.
    */
   def join(left: DataFrame, right: DataFrame,
            predicate: SpatialPredicate = SpatialPredicate.Intersects,
@@ -87,6 +105,11 @@ object SpatialJoin {
            broadcastRight: Boolean = true,
            leftPointsOnly: Boolean = false): DataFrame = {
     requireLevel("cellLevel", cellLevel)
+    requireJoinType(joinType)
+    if (leftPointsOnly && broadcastRight) layerIndex(right, cellLevel) match {
+      case Some(ix) => return probeJoin(left, right, ix, predicate, joinType, lSuffix, rSuffix)
+      case None =>
+    }
     // row ids only exist on the generic path (pair dedupe); the point fast
     // path must stay id-free — besides being needless, a
     // monotonically_increasing_id anywhere in the plan disqualifies the
@@ -227,10 +250,16 @@ object SpatialJoin {
    *  leaves them undefined. */
   private final case class CoverSample(geomBytes: Option[Double], fanOut: Map[Int, Double])
 
+  /** A [[LayerIndex]] broadcast under the SparkContext `sc`. */
+  private final case class SharedIndex(sc: SparkContext, index: Broadcast[LayerIndex],
+                                       stats: LayerStats)
+
   /** What the decisions measured on one immutable right side: its exact row
-   *  count and each sample, keyed by (sampleRows, levels). */
+   *  count, each sample, keyed by (sampleRows, levels), and each broadcast
+   *  index, keyed by (cell level, right schema). */
   private final case class Decisions(rows: Option[Long] = None,
-                                     samples: Map[(Int, Vector[Int]), CoverSample] = Map.empty)
+                                     samples: Map[(Int, Vector[Int]), CoverSample] = Map.empty,
+                                     indexes: Map[(Int, StructType), SharedIndex] = Map.empty)
 
   private val DecisionsTag = TreeNodeTag[Decisions]("graft.join.decisions")
 
@@ -262,6 +291,39 @@ object SpatialJoin {
           v
         }
     }
+
+  /** The broadcast index of `right` at `level` when `right` may be indexed:
+   *  immutable, not streaming and reading no cached data (a cached layer
+   *  keeps the hash-join plan over its cache). Built once per level and
+   *  SparkContext; an index broadcast under another or a stopped context is
+   *  never reused. */
+  private def layerIndex(right: DataFrame, level: Int): Option[SharedIndex] =
+    if (right.isStreaming || immutablePlan(right).isEmpty || Bridge.readsCache(right)) None
+    else {
+      val sc = right.sparkSession.sparkContext
+      val key = (level, right.schema)
+      Some(remembered(right)(_.indexes.get(key).filter(s => (s.sc eq sc) && !sc.isStopped))(
+        (d, s) => d.copy(indexes = d.indexes + (key -> s))) {
+        val ix = LayerIndex.build(right, level)
+        SharedIndex(sc, sc.broadcast(ix), ix.stats)
+      })
+    }
+
+  /** The point join as one probe of `ix` per left row (see [[join]]). */
+  private def probeJoin(left: DataFrame, right: DataFrame, ix: SharedIndex,
+                        predicate: SpatialPredicate, joinType: String,
+                        lSuffix: String, rSuffix: String): DataFrame = {
+    val probe = LayerProbe(Bridge.expression(col("geometry" + lSuffix)), ix.index, ix.stats,
+      predicate.id, right.schema)
+    val gen = if (joinType == "left") GeneratorOuter(probe) else probe
+    suffixed(left, lSuffix)
+      .select(col("*"), Bridge.column(gen).as(right.columns.map(_ + rSuffix).toSeq))
+  }
+
+  private def requireJoinType(joinType: String): Unit =
+    require(joinType == "inner" || joinType == "left",
+      s"join type '$joinType' not supported (reference supports Inner/Left only," +
+        " spatial_index.rs:200-203)")
 
   private def rowCount(right: DataFrame): Long =
     remembered(right)(_.rows)((d, n) => d.copy(rows = Some(n)))(right.count())
@@ -374,9 +436,7 @@ object SpatialJoin {
                        predicate: SpatialPredicate, joinType: String,
                        lSuffix: String, rSuffix: String, cellLevel: Int,
                        broadcastRight: Boolean, leftPointsOnly: Boolean): DataFrame = {
-    require(joinType == "inner" || joinType == "left",
-      s"join type '$joinType' not supported (reference supports Inner/Left only," +
-        " spatial_index.rs:200-203)")
+    requireJoinType(joinType)
 
     val lg = col("geometry" + lSuffix)
     val rg = col("geometry" + rSuffix)

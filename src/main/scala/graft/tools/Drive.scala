@@ -21,10 +21,13 @@ object Drive {
     val plan = graft.pipeline.GeoPipeline.build(spark, 1000, 1, 2)
       .queryExecution.executedPlan.toString
     println("PLAN_BNLJ=" + plan.contains("BroadcastNestedLoop") +
-      " PLAN_BHJ=" + plan.contains("BroadcastHashJoin"))
+      " PLAN_BHJ=" + plan.contains("BroadcastHashJoin") +
+      " PLAN_PROBE=" + plan.contains("spatial_index_probe"))
 
-    // left join on the points fast path must be a single native left_outer
-    // broadcast hash join with NO row-id machinery
+    // left join on the points fast path against an in-memory layer must be
+    // one outer Generate probing the layer's broadcast index, with NO
+    // row-id machinery
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.functions._
     import graft.functions.st._
     val pts = spark.range(100).select(col("id"),
@@ -34,7 +37,10 @@ object Drive {
     val lj = graft.join.SpatialJoin.join(pts, polys,
       graft.join.SpatialPredicate.Intersects, "left", cellLevel = 3, leftPointsOnly = true)
     val ljPlan = lj.queryExecution.executedPlan.toString
-    println("LEFTJOIN_OUTER=" + ljPlan.contains("LeftOuter") +
+    val outerProbe = lj.queryExecution.executedPlan.collect {
+      case g: GenerateExec if g.outer => g.generator
+    }.exists(_.isInstanceOf[graft.join.LayerProbe])
+    println("LEFTJOIN_OUTER_PROBE=" + outerProbe +
       " LEFTJOIN_NO_IDS=" + !ljPlan.contains("monotonically_increasing_id") +
       s" LEFTJOIN_ROWS=${lj.count()}")
 

@@ -36,4 +36,20 @@ object Bridge {
     ext.injectFunction((FunctionIdentifier(name),
       new ExpressionInfo("graft", name), builder))
   }
+
+  /** Run `df` as one tracked SQL execution and return its rows in Catalyst's
+   *  internal (unsafe) form, without the round trip through external `Row`s. */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
+  /** True when `df`'s plan reads a cached (persisted) Dataset anywhere. */
+  def readsCache(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val classic = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.sharedState.cacheManager.useCachedData(df.queryExecution.analyzed)
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+  }
 }

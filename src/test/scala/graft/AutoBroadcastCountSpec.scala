@@ -147,4 +147,75 @@ class AutoBroadcastCountSpec extends SparkSpec {
     // est = floor(n × fanOut × bytes), so 10n gives 10·est up to the truncation
     assert(est10 >= 10 * est && est10 < 10 * est + 10, s"est=$est est10=$est10")
   }
+
+  /** `df`'s physical plan, before adaptive execution re-plans it. */
+  private def physical(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+
+  private def probes(df: org.apache.spark.sql.DataFrame): Seq[graft.join.LayerProbe] =
+    SparkSpec.layerProbes(df.queryExecution.executedPlan)
+
+  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("an in-memory layer is indexed once: a second joinAutoBroadcast runs exactly one " +
+    "Spark job (the probe) and reuses the same broadcast index") {
+    val right = localBoxes
+    val left = boxes
+    val first = autoJoin(left, right)
+    force(first)
+    var second: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsFor("acb-index-2") { second = autoJoin(left, right); force(second) }
+    assert(jobs == 1, s"expected the probe job alone, got $jobs")
+    val (p1, p2) = (probes(first), probes(second))
+    assert(p1.length == 1 && p2.map(_.index.id) == p1.map(_.index.id), s"$p1 vs $p2")
+    assert(rows(second) == rows(first) && rows(first).nonEmpty)
+  }
+
+  test("another cell level builds another index; the same level reuses its own") {
+    val right = localBoxes
+    def indexId(level: Int): Long = probes(SpatialJoin.joinAutoBroadcast(boxes, right,
+      cellLevel = level, leftPointsOnly = true)).map(_.index.id) match {
+      case Seq(id) => id
+      case other => fail(s"level $level: expected one probe, got $other")
+    }
+    val (at4, at5) = (indexId(4), indexId(5))
+    assert(at4 != at5)
+    assert(indexId(4) == at4 && indexId(5) == at5)
+  }
+
+  test("parquet-backed, RDD-backed and cached right sides keep the broadcast hash join") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val cached = localBoxes.cache()
+    try {
+      for ((name, right) <- Seq("parquet" -> unitBoxes, "createDataFrame(rdd, schema)" -> rddBoxes,
+        "cached" -> cached)) {
+        val joined = SpatialJoin.joinAutoBroadcast(boxes, right, cellLevel = 4,
+          leftPointsOnly = true)
+        val plan = physical(joined)
+        assert(plan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, s"$name:\n$plan")
+        assert(probes(joined).isEmpty, s"$name:\n$plan")
+        assert(rows(joined) == rows(autoJoin(boxes, localBoxes)), name)
+      }
+    } finally cached.unpersist()
+  }
+
+  test("an index remembered under a stopped SparkContext is never reused") {
+    // needs its own JVM: it stops a SparkContext and starts another
+    import scala.jdk.CollectionConverters._
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val cmd = Seq(javaBin, "-Xmx1g", "-cp", System.getProperty("java.class.path")) ++ jvmArgs :+
+      "graft.StoppedContextCheck"
+    val out = new StringBuilder
+    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => out.append(l).append('\n')))
+    assert(exit == 0, out.toString)
+    assert(out.toString.contains("STOPPED_CONTEXT same_plan=true reused=false rows_equal=true"),
+      out.toString)
+  }
 }

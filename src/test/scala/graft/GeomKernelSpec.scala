@@ -106,6 +106,24 @@ class GeomKernelSpec extends AnyFunSuite {
     (0 until 100).foreach(_ => assert(joinRefine(p0, polys.head, PRED_INTERSECTS) == r0))
   }
 
+  test("refine cache: cycling more polygons than its 1,024 entries gives a fresh " +
+    "parse's booleans, and a shared JoinGeom gives the same") {
+    import org.locationtech.jts.geom.Polygon
+    import graft.geom.Wkb
+    // 1,500 distinct boxes, probed in three full cycles by a point inside,
+    // one on the edge and one outside each: every probe past the first
+    // 1,024 evicts, and the cycle order makes each lookup a miss
+    val boxes = (0 until 1500).map(i => stMakeBox(i * 0.01, 0, i * 0.01 + 0.005 + i * 1e-6, 1))
+    def probes(i: Int) = Seq(stPoint(i * 0.01 + 0.002, 0.5), stPoint(i * 0.01, 0.5),
+      stPoint(i * 0.01 - 0.002, 0.5))
+    for (_ <- 0 until 3; (b, i) <- boxes.zipWithIndex; p <- probes(i)) {
+      val fresh = Wkb.read(b).asInstanceOf[Polygon].contains(Wkb.read(p))
+      assert(joinRefine(p, b, PRED_INTERSECTS) == fresh, s"box $i")
+      assert(joinRefineWith(p, joinGeom(b), PRED_INTERSECTS) == fresh, s"box $i")
+    }
+    assert(boxes.indices.count(i => joinRefine(probes(i).head, boxes(i), PRED_CONTAINS)) == 1500)
+  }
+
   test("length: polygon uses exterior ring only (reference contract)") {
     // polygon with a hole: perimeter of hole must NOT count
     val wkt = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"

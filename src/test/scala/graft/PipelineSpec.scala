@@ -121,9 +121,10 @@ class PipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flagship plan: broadcast hash joins, no nested loop, no shuffle exchange") {
+  test("flagship plan: layer-index probe and gazetteer broadcast hash join, no nested " +
+    "loop, no shuffle exchange") {
     // size-based broadcasting off: both broadcasts must come from the
-    // pipeline's own hints, whatever the layer sizes or the session default
+    // pipeline's own choices, whatever the layer sizes or the session default
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val plan = try {
       GeoPipeline.build(spark, 1000, 1, 2).queryExecution.executedPlan match {
@@ -131,6 +132,9 @@ class PipelineSpec extends SparkSpec {
         case p => p
       }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // the admin layer (local rows) is probed through its broadcast index
+    assert(SparkSpec.layerProbes(plan).map(p => (p.stats.level, p.stats.polygons)) == Seq((5, 128)),
+      s"no admin probe:\n$plan")
     assert(plan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, s"no BHJ:\n$plan")
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"BNLJ:\n$plan")
     // a BroadcastExchange is expected; only shuffles break the scan-parallel shape

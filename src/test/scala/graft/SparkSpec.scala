@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -13,6 +15,17 @@ object SparkSpec {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
+
+  /** The layer-index probes a physical plan runs (the initial plan of an
+   *  adaptive one). */
+  def layerProbes(plan: SparkPlan): Seq[graft.join.LayerProbe] = {
+    val physical = plan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    physical.collect { case g: GenerateExec => g.generator }
+      .collect { case p: graft.join.LayerProbe => p }
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.locationtech.jts.geom.Coordinate
 
 import graft.geom.{GeomKernel, Wkb}
-import graft.join.{SpatialJoin, SpatialPredicate}
+import graft.SparkSpec.layerProbes
+import graft.join.{LayerStats, SpatialJoin, SpatialPredicate}
 
 /**
  * Port of the reference's spatial-join unit tests — the exact-output contract
@@ -425,8 +426,14 @@ class SpatialJoinSpec extends SparkSpec {
       // silence Spark's own size-based broadcast so a budget of 1 shuffles
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       for ((name, df) <- runs) {
-        assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin") ==
-          !name.contains("shuffled"), name)
+        // the in-memory layer is probed through its broadcast index; the
+        // generic path keeps its broadcast hash join, the over-budget one
+        // shuffles
+        val plan = df.queryExecution.executedPlan
+        assert(layerProbes(plan).nonEmpty == !(name.contains("shuffled") || name.contains("generic")),
+          s"$name:\n$plan")
+        assert(plan.toString.contains("BroadcastHashJoin") == name.contains("generic"),
+          s"$name:\n$plan")
         assert(pairs(df) == expected, name)
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -502,10 +509,11 @@ class SpatialJoinSpec extends SparkSpec {
     assert(!new java.io.File(path).exists())
   }
 
-  test("q_spatial_join plans a broadcast hash join on __cell and no nested loop, " +
-    "without Spark's size-based broadcast") {
+  test("q_spatial_join plans the layer-index probe: a Generate, no nested loop and no " +
+    "shuffle exchange, without Spark's size-based broadcast") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val plan = try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -515,9 +523,114 @@ class SpatialJoinSpec extends SparkSpec {
           case p => p
         }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    val onCell = plan.collect { case j: BroadcastHashJoinExec => j }
-      .filter(j => (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "__cell")))
-    assert(onCell.nonEmpty, s"no broadcast hash join on __cell:\n$plan")
+    assert(layerProbes(plan).map(_.stats.level) == Seq(4), s"no level-4 layer-index probe:\n$plan")
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"BNLJ:\n$plan")
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"shuffle:\n$plan")
+  }
+
+  // the star layer plus one right row of each other kind the truth table
+  // meets: a LineString, a MultiPolygon, an empty polygon and a null
+  // geometry; every column nullable, so a parquet copy has the same schema
+  private lazy val mixedLayer: DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def wkt(s: String) = Wkb.write(Wkb.readWkt(s))
+    val extra = Seq(
+      Row(1000L, wkt("LINESTRING (-5 -5, 5 5, 12 -3)")),
+      Row(1001L, wkt("MULTIPOLYGON (((1 1, 3 1, 3 3, 1 3, 1 1)), ((-20 10, -14 10, -14 16, -20 10)))")),
+      Row(1002L, Wkb.write(Wkb.factory.createPolygon())),
+      Row(1003L, null))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("geometry", BinaryType)))
+    spark.createDataFrame(java.util.Arrays.asList(starLayer.collect() ++ extra: _*), schema)
+  }
+
+  test("layer-index probe equals brute-force JTS and the hash-join plan of a parquet copy, " +
+    "for inner and left joins under both predicates, over every row kind") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, explode}
+    import org.apache.spark.sql.types._
+    import org.locationtech.jts.geom.{Geometry, LineString, MultiLineString, MultiPolygon, Polygon}
+    val layer = mixedLayer.collect().map(r =>
+      (r.getLong(0), Option(r.getAs[Array[Byte]](1)).map(Wkb.read)))
+    val shapes = layer.collect { case (_, Some(g: Polygon)) if !g.isEmpty => g }
+    // 2,000 seeded points: clusters around star centres, a uniform
+    // background, polygon vertices and edge midpoints (boundary points),
+    // plus eight placed on the other right rows
+    val rnd = new scala.util.Random(2026)
+    val clustered = Seq.fill(1400) {
+      val c = shapes(rnd.nextInt(shapes.length)).getEnvelopeInternal.centre()
+      (c.x + rnd.nextGaussian() * 0.3, c.y + rnd.nextGaussian() * 0.3)
+    }
+    val background = Seq.fill(300)((rnd.nextDouble() * 80 - 40, rnd.nextDouble() * 60 - 30))
+    val boundary = Seq.fill(300) {
+      val cs = shapes(rnd.nextInt(shapes.length)).getCoordinates
+      val i = rnd.nextInt(cs.length - 1)
+      if (rnd.nextBoolean()) (cs(i).x, cs(i).y)
+      else ((cs(i).x + cs(i + 1).x) / 2, (cs(i).y + cs(i + 1).y) / 2)
+    }
+    // on the LineString (its ends are its boundary) and inside the MultiPolygon
+    val special = Seq((0.0, 0.0), (2.5, 2.5), (5.0, 5.0), (8.5, 1.0), (-5.0, -5.0), (12.0, -3.0),
+      (2.0, 2.0), (-16.0, 11.0))
+    val pts = (clustered ++ background ++ boundary ++ special).zipWithIndex.map { case ((x, y), i) =>
+      Row(i.toLong, pointWkb(x, y))
+    }
+    // left rows that match nothing: a null geometry, POINT EMPTY, NaN
+    // coordinates, and the vertex and edge midpoint of an isolated square
+    val nothing = Seq(Row(5000L, null), Row(5001L, Wkb.write(Wkb.factory.createPoint())),
+      Row(5002L, pointWkb(Double.NaN, Double.NaN)), Row(5003L, pointWkb(Double.NaN, 2.0)),
+      Row(5004L, pointWkb(3.0, 1.0)), Row(5005L, pointWkb(2.0, 3.0)))
+    val ptsDf = spark.createDataFrame(java.util.Arrays.asList(pts ++ nothing: _*),
+      StructType(Seq(StructField("pid", LongType, nullable = false),
+        StructField("geometry", BinaryType))))
+    def truth(g: Geometry, x: Double, y: Double): Boolean = {
+      val p = Wkb.factory.createPoint(new Coordinate(x, y))
+      g match {
+        case _: Polygon | _: MultiPolygon | _: LineString | _: MultiLineString => g.contains(p)
+        case _ => false
+      }
+    }
+    val inner = (for {
+      r <- pts
+      p = Wkb.read(r.getAs[Array[Byte]](1)).getCoordinate
+      (id, Some(g)) <- layer
+      if truth(g, p.x, p.y)
+    } yield (r.getLong(0), id)).sorted
+    assert(inner.length > 500 && inner.exists(_._2 == 1000L) && inner.exists(_._2 == 1001L),
+      s"fixture too sparse: ${inner.length} matches")
+    val unmatched = (pts ++ nothing).map(_.getLong(0)).toSet -- inner.map(_._1)
+    assert(nothing.map(_.getLong(0)).toSet.subsetOf(unmatched))
+    val path = java.nio.file.Files.createTempDirectory("mixed-layer").resolve("l").toString
+    mixedLayer.write.parquet(path)
+    val onFile = spark.read.parquet(path)
+    assert(onFile.schema == mixedLayer.schema)
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }).groupBy(identity).map { case (k, v) => k -> v.size }
+    // the index holds the 302 rows with a non-empty covering (not the
+    // empty polygon, nor the null geometry) and exactly their level-6 cells
+    val cells = mixedLayer.filter(col("geometry").isNotNull)
+      .select(explode(SpatialJoin.cellsFor(col("geometry"), 6)).as("c"))
+    val stats = LayerStats(6, 302, cells.distinct().count().toInt, cells.count().toInt,
+      layerProbes(SpatialJoin.join(ptsDf, mixedLayer, cellLevel = 6, leftPointsOnly = true)
+        .queryExecution.executedPlan).head.stats.bytes)
+    for (joinType <- Seq("inner", "left");
+         predicate <- Seq(SpatialPredicate.Intersects, SpatialPredicate.Contains)) {
+      val name = s"$joinType/$predicate"
+      def joined(right: DataFrame) = SpatialJoin.join(ptsDf, right, predicate, joinType,
+        cellLevel = 6, leftPointsOnly = true)
+      val indexed = joined(mixedLayer)
+      val hashed = joined(onFile)
+      assert(layerProbes(indexed.queryExecution.executedPlan).map(_.stats) == Seq(stats), name)
+      assert(hashed.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"), name)
+      assert(indexed.schema == hashed.schema, name)
+      assert(multiset(indexed) == multiset(hashed), name)
+      val got = indexed.select(col("pid_left"), col("id_right")).collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
+      val want = if (joinType == "inner") inner
+        else (inner ++ unmatched.toSeq.map(_ -> -1L)).sorted
+      assert(got == want, name)
+    }
   }
 }
