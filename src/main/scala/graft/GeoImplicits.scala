@@ -120,7 +120,9 @@ object GeoImplicits {
     def dissolve(by: String): DataFrame =
       df.groupBy(by).agg(st_union_agg(gc).as(gcol))
 
-    /** Cell-bucketed spatial join against another geometry frame. */
+    /** Cell-bucketed spatial join against another geometry frame (a layer
+     *  from [[SpatialJoin.prepare]] included); `SpatialPredicate.DWithin(r)`
+     *  joins the rows of `right` within `r` planar units. */
     def sjoin(right: DataFrame,
               predicate: SpatialPredicate = SpatialPredicate.Intersects,
               how: String = "inner",
@@ -128,16 +130,5 @@ object GeoImplicits {
               leftPointsOnly: Boolean = false): DataFrame =
       SpatialJoin.join(df, right, predicate, how, cellLevel = cellLevel,
         leftPointsOnly = leftPointsOnly)
-
-    /** Join against a covering prepared once with [[SpatialJoin.prepare]] —
-     *  the reference's precomputed-SpatialIndex reuse. */
-    def sjoin(prepared: graft.join.PreparedCover): DataFrame =
-      SpatialJoin.join(df, prepared)
-
-    /** Distance (range) join: rows of `right` within `radius` planar units. */
-    def sjoinWithin(right: DataFrame, radius: Double,
-                    how: String = "inner",
-                    cellLevel: Int = SpatialJoin.DefaultCellLevel): DataFrame =
-      SpatialJoin.joinWithin(df, right, radius, how, cellLevel = cellLevel)
   }
 }

@@ -10,7 +10,7 @@ import graft.join.{SelfJoin, SpatialJoin, SpatialPredicate}
 import graft.pages.Pages
 import graft.pipeline.GeoPipeline
 import graft.snapshot.Snapshot
-import graft.sources.CellStore
+import graft.sources.{CellStore, RefData}
 import org.locationtech.jts.geom.Coordinate
 
 /**
@@ -463,19 +463,19 @@ object SparkEntry {
     "q_spatial_join_prepared" -> ((s, dir) => {
       // prepared-index reuse (the reference's precomputed SpatialIndex via
       // SpatialJoinArgs, spatial_index.rs:20-21; reuse test :558-624): the
-      // polygon covering is materialized ONCE with prepare(), the join runs
-      // against it, and the rows must equal the fresh-join output (identical
-      // oracle to q_spatial_join). PreparedJoinSpec additionally asserts the
-      // reused join's plan contains no Generate (covering not recomputed)
-      // and that a SECOND join against the same PreparedCover is row-equal.
+      // layer index is built ONCE by prepare(), the join probes it, and the
+      // rows must equal the fresh-join output (identical oracle to
+      // q_spatial_join). PreparedJoinSpec additionally asserts that a join
+      // on a prepared layer builds no index of its own and that a SECOND
+      // join against it is row-equal.
       val pts = custPoints(s, dir)
         .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
       val boxes = s.createDataFrame(
         joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
         .toDF("box_id", "geometry")
-      val prep = SpatialJoin.prepare(boxes, cellLevel = 4)
-      SpatialJoin.join(pts, prep, SpatialPredicate.Intersects, "inner",
-        "_left", broadcastRight = true, leftPointsOnly = true)
+      val layer = SpatialJoin.prepare(boxes, cellLevel = 4)
+      SpatialJoin.join(pts, layer, SpatialPredicate.Intersects, "inner", cellLevel = 4,
+        leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
     }),
 
@@ -1486,15 +1486,16 @@ object SparkEntry {
     "q_dwithin_join" -> ((s, dir) => {
       // distance (range) join: points within 2.3 planar units of the box
       // layer. Candidates come from the radius-expanded bbox covering, so the
-      // point side keeps exactly one cell (zero-exchange broadcast shape);
-      // the radius is off the quarter-degree lattice of the data so the
-      // boundary can never tie in FP between engines.
+      // point side keeps exactly one cell and probes the layer's index (no
+      // exchange); the radius is off the quarter-degree lattice of the data
+      // so the boundary can never tie in FP between engines.
       val pts = custPoints(s, dir)
         .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
       val boxes = s.createDataFrame(
         joinBoxes.take(2).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
         .toDF("box_id", "geometry")
-      SpatialJoin.joinWithin(pts, boxes, 2.3, "inner", cellLevel = 4)
+      SpatialJoin.join(pts, boxes, SpatialPredicate.DWithin(2.3), "inner", cellLevel = 4,
+        leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
     }),
 
@@ -1820,7 +1821,7 @@ object SparkEntry {
     "q_ref_cities" -> ((s, _) => {
       // the affine bench workload (benches/affine.rs:23-31): translate(10,10)
       // over cities.arrow — plus the conftest.py naturalearth_cities fixture
-      Seq("cities" -> RefCitiesArrow, "naturalearth_cities" -> RefNeCitiesArrow)
+      Seq("cities" -> RefData.CitiesArrow, "naturalearth_cities" -> RefNeCitiesArrow)
         .map { case (nm, path) =>
           graft.sources.ArrowIpc.read(s, path).select(
             lit(nm).as("dataset"),
@@ -1839,7 +1840,7 @@ object SparkEntry {
       // MultiPolygons + agreement with the file's OWN ESRI golden columns
       // (thresholds 5e-6 / 1e-4 sit 3x above the measured 1.4e-6 / 3.3e-5
       // packaging drift, far below any computational-error scale)
-      val nybb = graft.sources.ArrowIpc.read(s, RefNybbArrow)
+      val nybb = graft.sources.ArrowIpc.read(s, RefData.dataset("nybb.arrow"))
       nybb.select(
         col("BoroCode").cast("int").as("boro_code"), col("BoroName").as("boro_name"),
         floor(st_area(col("geometry")) * 1e3 + 0.5).cast("long").as("area_milli"),
@@ -1894,11 +1895,8 @@ object SparkEntry {
   /** floor(x*1e6+0.5) as BIGINT — order-independent integer micro-units. */
   private def micro(c: Column): Column = floor(c * 1e6 + 0.5).cast("long")
 
-  private val RefCitiesArrow = "/root/reference/data/cities.arrow"
-  private val RefDatasetsDir = "/root/reference/py-geopolars/python/geopolars/datasets"
-  private val RefNeCitiesArrow = s"$RefDatasetsDir/naturalearth_cities.arrow"
-  private val RefNybbArrow = s"$RefDatasetsDir/nybb.arrow"
-  private val RefNeLowresArrow = s"$RefDatasetsDir/naturalearth_lowres.arrow"
+  private val RefNeCitiesArrow = RefData.dataset("naturalearth_cities.arrow")
+  private val RefNeLowresArrow = RefData.dataset("naturalearth_lowres.arrow")
 
   def oracleSql: Map[String, String] = Map(
     "q1_agg" ->

@@ -380,6 +380,12 @@ object GeomKernel {
       new Envelope(x, x, y, y)
     } else g(wkb).getEnvelopeInternal
 
+  /** [[stDistance]]`(lhs, rhs.bytes)`, bit for bit, on the parsed `rhs`:
+   *  the same point-point formula, else JTS's distance from the left
+   *  operand. */
+  private[graft] def distanceWith(lhs: Array[Byte], rhs: JoinGeom): Double =
+    if (isPointWkb(rhs.bytes)) stDistance(lhs, rhs.bytes) else g(lhs).distance(rhs.geom)
+
   /** [[joinRefineWith]] on two WKBs, the right one parsed through the refine
    *  cache. */
   def joinRefine(lhs: Array[Byte], rhs: Array[Byte], predicate: Int): Boolean =

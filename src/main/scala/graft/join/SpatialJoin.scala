@@ -3,46 +3,40 @@ package graft.join
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.GeneratorOuter
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GeneratorOuter, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 import graft.functions.st
 import graft.geom.GeomKernel
 import graft.index.S2
 
-/** Predicate enum mirroring the reference's `Predicate::{Intersects, Contains}`
- *  (reference: geopolars/src/spatial_index.rs:13,28; default Intersects). */
-sealed abstract class SpatialPredicate(val id: Int)
-object SpatialPredicate {
-  case object Intersects extends SpatialPredicate(GeomKernel.PRED_INTERSECTS)
-  case object Contains extends SpatialPredicate(GeomKernel.PRED_CONTAINS)
+/** How a left and a right geometry must relate to join: the reference's
+ *  `Predicate::{Intersects, Contains}` (geopolars/src/spatial_index.rs:13,28;
+ *  default Intersects), or lie within a planar distance. */
+sealed abstract class SpatialPredicate extends Serializable {
+  /** How far apart a matching pair may lie: 0 but for `DWithin`. */
+  def radius: Double = 0.0
 }
-
-/**
- * A materialized polygon-covering index, built once by [[SpatialJoin.prepare]]
- * and reusable across many [[SpatialJoin.join]] calls — the Spark shape of the
- * reference's precomputed `SpatialIndex` handed in via `SpatialJoinArgs`
- * (geopolars/src/spatial_index.rs:20-21; reuse proven by test :558-624).
- * `cells` holds the suffixed right columns + pinned `__ridx` + one row per
- * (polygon, covering `__cell_r`), persisted and forced at build time.
- */
-final class PreparedCover private[join](
-    private[join] val cells: DataFrame,
-    val cellLevel: Int,
-    val rSuffix: String,
-    private[join] val rightCols: Seq[String],
-    forcedCount: Option[Long] = None) {
-  /** Number of (polygon, cell) covering rows materialized. `prepare` already
-   *  forces a count to pin row ids — reuse it rather than re-running the job
-   *  per call (even against the cache that is a full pass over the blocks). */
-  lazy val coveringRows: Long = forcedCount.getOrElse(cells.count())
-  /** Release the persisted covering blocks. */
-  def unpersist(): Unit = { cells.unpersist(); () }
+object SpatialPredicate {
+  /** A predicate of the reference's truth table, named to
+   *  `GeomKernel.joinRefine` by `id`. */
+  sealed abstract class Topological(val id: Int) extends SpatialPredicate
+  case object Intersects extends Topological(GeomKernel.PRED_INTERSECTS)
+  case object Contains extends Topological(GeomKernel.PRED_CONTAINS)
+  /** ST_DWithin as a join predicate: a pair matches when
+   *  `st_distance(left, right) <= radius`, in ST_Distance's planar units. A
+   *  null or empty geometry on either side matches nothing. */
+  final case class DWithin(override val radius: Double) extends SpatialPredicate {
+    require(radius >= 0, s"DWithin radius must be >= 0, got $radius")
+  }
 }
 
 /**
@@ -51,22 +45,28 @@ final class PreparedCover private[join](
  *
  *   filter  — candidate generation. The reference scans an in-process R-tree
  *             for AABB overlaps (:73-76); at cluster scale we bucket both
- *             sides by S2 cell (point -> its containing cell, polygon -> its
- *             covering cells). A broadcast layer whose rows the plan holds
- *             (see [[join]]) becomes one compact cell index probed from the
- *             point side in a single pass; every other layer meets its
- *             candidates under an equi-join on cell that Catalyst plans
- *             natively (broadcast or shuffled hash join). Neither is ever a
- *             nested loop.
- *   refine  — the exact predicate truth table (:89-137), reproduced verbatim
- *             in `GeomKernel.joinRefineWith`.
+ *             sides by S2 cell (point -> its containing cell, right geometry
+ *             -> the cells covering its bbox, widened by the predicate's
+ *             radius). A broadcast layer whose rows the plan holds (see
+ *             [[join]]) becomes one compact cell index probed from the point
+ *             side in a single pass; every other layer meets its candidates
+ *             under an equi-join on cell that Catalyst plans natively
+ *             (broadcast or shuffled hash join). Neither is ever a nested
+ *             loop.
+ *   refine  — the exact predicate: the truth table (:89-137) reproduced
+ *             verbatim in `GeomKernel.joinRefineWith`, or `st_distance <= r`
+ *             for `DWithin`.
  *   finish  — row-index pair matching with `_left`/`_right` suffixing
  *             (:147-199), reproduced with per-side row ids.
  *
  * Scale notes: the left (point) side never explodes (exactly one cell per
- * point); only the polygon side replicates, by its covering-cell count, which
- * is bounded by choosing `cellLevel` near the polygon size. Skewed cells are
+ * point); only the right side replicates, by its covering-cell count, which
+ * is bounded by choosing `cellLevel` near the geometry size. Skewed cells are
  * handled explicitly in `joinSalted`.
+ *
+ * Entry points: [[join]] (the caller picks broadcast or shuffle),
+ * [[joinAutoBroadcast]] (decided from a sample), [[joinSalted]] (skewed
+ * large×large) and [[prepare]] (build a layer's index ahead of its joins).
  */
 object SpatialJoin {
 
@@ -84,18 +84,21 @@ object SpatialJoin {
    * need a WKB `geometry` column (the reference resolves the literal column
    * name "geometry", spatial_index.rs:44-45). Right side is broadcast when
    * `broadcastRight` (admin-boundary-sized layers); otherwise a shuffled
-   * equi-join on cell.
+   * equi-join on cell. A `DWithin(r)` join covers each right geometry's bbox
+   * widened by `r` and refines with `st_distance <= r`; every path below
+   * takes it.
    *
    * With `leftPointsOnly` and `broadcastRight`, a right side whose rows the
    * plan itself holds (the condition in [[estimateCoveringBytes]]) that is
-   * neither cached nor streaming is indexed once per cell level: its
-   * covering, bboxes and rows go into one broadcast `LayerIndex`,
+   * neither cached nor streaming is indexed once per cell level and radius:
+   * its covering, bboxes and rows go into one broadcast `LayerIndex`,
    * remembered on its analyzed plan, and the left side alone is probed
    * through a `Generate` (`spatial_index_probe` in the plan, naming the
-   * level and the index's size). Building it collects the right side, which
-   * for a `LocalRelation` runs no Spark job. Columns, their order and
-   * nullability, and the output rows are those of the hash-join plan that
-   * every other right side keeps.
+   * predicate, the level and the index's size). Building it collects the
+   * right side, which for a `LocalRelation` runs no Spark job; [[prepare]]
+   * builds it ahead of time for any static right side. Columns, their order
+   * and nullability, and the output rows are those of the hash-join plan
+   * that every other right side keeps.
    */
   def join(left: DataFrame, right: DataFrame,
            predicate: SpatialPredicate = SpatialPredicate.Intersects,
@@ -106,10 +109,12 @@ object SpatialJoin {
            leftPointsOnly: Boolean = false): DataFrame = {
     requireLevel("cellLevel", cellLevel)
     requireJoinType(joinType)
-    if (leftPointsOnly && broadcastRight) layerIndex(right, cellLevel) match {
+    if (leftPointsOnly && broadcastRight) layerIndex(right, cellLevel, predicate.radius) match {
       case Some(ix) => return probeJoin(left, right, ix, predicate, joinType, lSuffix, rSuffix)
       case None =>
     }
+    val lg = col("geometry" + lSuffix)
+    val rg = col("geometry" + rSuffix)
     // row ids only exist on the generic path (pair dedupe); the point fast
     // path must stay id-free — besides being needless, a
     // monotonically_increasing_id anywhere in the plan disqualifies the
@@ -118,11 +123,76 @@ object SpatialJoin {
     val rBase = suffixed(right, rSuffix)
     val r = if (leftPointsOnly) rBase
       else rBase.withColumn("__ridx", monotonically_increasing_id())
-    val rCells = r.withColumn("__cell_r",
-      explode(cellsFor(col("geometry" + rSuffix), cellLevel)))
-    joinImpl(left, rCells, right.columns.toSeq, predicate, joinType,
-      lSuffix, rSuffix, cellLevel, broadcastRight, leftPointsOnly)
+    val rCellsRaw = r.withColumn("__cell_r",
+      explode(cellsForExpanded(rg, predicate.radius, cellLevel)))
+    val rCells = if (broadcastRight) broadcast(rCellsRaw) else rCellsRaw
+
+    // Point-only left side: exactly one cell per row, so each (l,r) candidate
+    // pair meets in at most one shared cell — no explode, no dedupe, and no
+    // row ids. Inner AND left join are both a single equi-join with the exact
+    // predicate folded into the join condition (left_outer emits the null-
+    // extended row natively). With a broadcast right this is a pure scan +
+    // broadcast hash join: zero exchanges, embarrassingly parallel.
+    if (leftPointsOnly) {
+      val lCells = suffixed(left, lSuffix).withColumn("__cell", pointCell(lg, cellLevel))
+      val cond = col("__cell") === col("__cell_r") && refine(lg, rg, predicate)
+      val jt = if (joinType == "left") "left_outer" else "inner"
+      return lCells.join(rCells, cond, jt).drop("__cell", "__cell_r")
+    }
+
+    // Generic path: the left side explodes to several covering cells, so a
+    // pair can meet more than once and dedupe needs per-side row ids (the
+    // reference's lhs_index/rhs_index, spatial_index.rs:147-162).
+    //
+    // Both join types are ONE-PASS over the left side: the plan references
+    // `l` exactly once, so monotonically_increasing_id is evaluated exactly
+    // once and its partition-layout dependence is harmless — no
+    // localCheckpoint, no materialization of the left side to executor
+    // storage (r4's left path checkpointed the FULL-WIDTH left to keep two
+    // subtrees' ids consistent; on a 10^12-row left that materialization was
+    // the scale-killer, VERDICT r4 `weak`).
+    //
+    // Left join shape: explode_outer (a row whose geometry yields no cells —
+    // null or empty — survives with a null cell), LEFT OUTER cell join
+    // with the exact refine folded into the condition (unmatched rows
+    // null-extend natively), pair dedupe, then one window over __lidx keeps
+    // matched pairs and exactly one null-extended row for match-less left
+    // rows. Cost: the same pair-dedupe exchange the inner path already pays
+    // + one window exchange on __lidx (bounded per-task by a single left
+    // row's match count), replacing r4's checkpoint + anti-join + union.
+    val l = suffixed(left, lSuffix).withColumn("__lidx", monotonically_increasing_id())
+
+    val result = joinType match {
+      case "inner" =>
+        l.withColumn("__cell", explode(cellsFor(lg, cellLevel)))
+          .join(rCells, col("__cell") === col("__cell_r"), "inner")
+          .filter(refine(lg, rg, predicate))
+          .drop("__cell", "__cell_r")
+          // two geometries can share several covering cells -> the same (l,r)
+          // pair appears once per shared cell; the reference emits each once
+          .dropDuplicates("__lidx", "__ridx")
+      case "left" =>
+        val cond = col("__cell") === col("__cell_r") && refine(lg, rg, predicate)
+        val dedup = l.withColumn("__cell", explode_outer(cellsFor(lg, cellLevel)))
+          .join(rCells, cond, "left_outer")
+          .drop("__cell", "__cell_r")
+          // matched pairs dedupe as in inner; a left row's null-extended rows
+          // (cells that matched nothing) collapse to one (__lidx, null)
+          .dropDuplicates("__lidx", "__ridx")
+        val w = Window.partitionBy("__lidx")
+        dedup.withColumn("__m", count(col("__ridx")).over(w))
+          .filter(col("__ridx").isNotNull || col("__m") === 0)
+          .drop("__m")
+    }
+    result.drop("__lidx", "__ridx")
   }
+
+  /** The exact test of a candidate pair: every join path refines with it. */
+  private def refine(lg: Column, rg: Column, predicate: SpatialPredicate): Column =
+    predicate match {
+      case SpatialPredicate.DWithin(r) => st.st_distance(lg, rg) <= r
+      case t: SpatialPredicate.Topological => st.st_joinRefine(lg, rg, lit(t.id))
+    }
 
   /** Sentinel for [[joinAutoBroadcast]]'s cellLevel: measure it with
    *  [[autoCellLevel]] instead of trusting a caller guess. */
@@ -137,12 +207,13 @@ object SpatialJoin {
    * `broadcastRight` is a flag, and mis-set on a large polygon layer it
    * broadcasts gigabytes to every executor (or worse, OOMs the driver). This
    * variant estimates the exploded covering's size — `count()` (metadata-cheap
-   * on parquet) × per-row bytes × average covering-cell fan-out, both
-   * averaged over a bounded `sampleRows` prefix — and broadcasts only when
-   * the estimate fits `maxBroadcastBytes`. With `cellLevel = AutoLevel` the
-   * level is picked as in [[autoCellLevel]]. Level and estimate come from ONE
-   * sample query (average WKB length plus every candidate level's fan-out,
-   * counted in closed form by [[cellCountFor]] rather than by building the
+   * on parquet) × per-row bytes × average covering-cell fan-out at the
+   * predicate's radius, both averaged over a bounded `sampleRows` prefix —
+   * and broadcasts only when the estimate fits `maxBroadcastBytes`. With
+   * `cellLevel = AutoLevel` the level is picked as in [[autoCellLevel]], from
+   * the same radius' fan-out. Level and estimate come from ONE sample query
+   * (average WKB length plus every candidate level's fan-out, counted in
+   * closed form as [[cellCountFor]] counts rather than by building the
    * coverings), so the decision costs that query plus the `count()`, which a
    * caller-supplied `rightRows` skips. The same sampled-census pattern as
    * [[AsofJoin.joinAuto]]/[[joinSalted]]; a borderline misclassification
@@ -168,7 +239,8 @@ object SpatialJoin {
     requireSampling(sampleRows, rightRows)
     val n = rightRows.getOrElse(rowCount(right))
     val auto = cellLevel == AutoLevel
-    val sample = sampleCover(right, if (auto) 0 to AutoMaxLevel else Seq(cellLevel), sampleRows)
+    val sample = sampleCover(right, if (auto) 0 to AutoMaxLevel else Seq(cellLevel), sampleRows,
+      predicate.radius)
     val level = if (auto) pickLevel(sample, AutoTargetFanOut, AutoMaxLevel) else cellLevel
     val est = coveringBytes(right, n, sample, level)
     join(left, right, predicate, joinType, lSuffix, rSuffix, level,
@@ -202,7 +274,7 @@ object SpatialJoin {
     require(targetFanOut >= 1.0, s"targetFanOut must be >= 1, got $targetFanOut")
     requireLevel("maxLevel", maxLevel)
     requireSampling(sampleRows, None)
-    pickLevel(sampleCover(right, 0 to maxLevel, sampleRows), targetFanOut, maxLevel)
+    pickLevel(sampleCover(right, 0 to maxLevel, sampleRows, 0.0), targetFanOut, maxLevel)
   }
 
   /** Estimated bytes of the exploded (one row per covering cell) right side:
@@ -231,7 +303,29 @@ object SpatialJoin {
     // case this function exists to prevent — only an exact count may feed it.
     val n = rightRows.getOrElse(rowCount(right))
     if (n == 0) 0L
-    else coveringBytes(right, n, sampleCover(right, Seq(cellLevel), sampleRows), cellLevel)
+    else coveringBytes(right, n, sampleCover(right, Seq(cellLevel), sampleRows, 0.0), cellLevel)
+  }
+
+  /**
+   * Build `right`'s layer index at `cellLevel` now, for every later point
+   * join against it — the reference's precomputed `SpatialIndex` handed in
+   * through `SpatialJoinArgs` (geopolars/src/spatial_index.rs:20-21; reuse
+   * test :558-624). Returns the frame to join against: `right` itself when
+   * [[join]] can index it (its rows live in the plan, and it is not
+   * cached), else a `createDataFrame` copy of its collected rows, which
+   * costs one Spark job and fixes the layer as it is now. A [[join]] with
+   * `leftPointsOnly` and `broadcastRight` at the same level on the returned
+   * frame probes the index built here; any other join on it plans as on any
+   * in-memory layer. A streaming `right` is rejected.
+   */
+  def prepare(right: DataFrame, cellLevel: Int = DefaultCellLevel): DataFrame = {
+    requireLevel("cellLevel", cellLevel)
+    require(!right.isStreaming,
+      "prepare: right is a streaming DataFrame; only a static layer can be indexed")
+    val layer = if (indexable(right)) right
+      else right.sparkSession.createDataFrame(right.collectAsList(), right.schema)
+    layerIndex(layer, cellLevel, 0.0)
+    layer
   }
 
   private def requireSampling(sampleRows: Int, rightRows: Option[Long]): Unit = {
@@ -255,11 +349,12 @@ object SpatialJoin {
                                        stats: LayerStats)
 
   /** What the decisions measured on one immutable right side: its exact row
-   *  count, each sample, keyed by (sampleRows, levels), and each broadcast
-   *  index, keyed by (cell level, right schema). */
-  private final case class Decisions(rows: Option[Long] = None,
-                                     samples: Map[(Int, Vector[Int]), CoverSample] = Map.empty,
-                                     indexes: Map[(Int, StructType), SharedIndex] = Map.empty)
+   *  count, each sample, keyed by (sampleRows, levels, radius), and each
+   *  broadcast index, keyed by (cell level, radius, right schema). */
+  private final case class Decisions(
+      rows: Option[Long] = None,
+      samples: Map[(Int, Vector[Int], Double), CoverSample] = Map.empty,
+      indexes: Map[(Int, Double, StructType), SharedIndex] = Map.empty)
 
   private val DecisionsTag = TreeNodeTag[Decisions]("graft.join.decisions")
 
@@ -292,19 +387,22 @@ object SpatialJoin {
         }
     }
 
-  /** The broadcast index of `right` at `level` when `right` may be indexed:
-   *  immutable, not streaming and reading no cached data (a cached layer
-   *  keeps the hash-join plan over its cache). Built once per level and
-   *  SparkContext; an index broadcast under another or a stopped context is
-   *  never reused. */
-  private def layerIndex(right: DataFrame, level: Int): Option[SharedIndex] =
-    if (right.isStreaming || immutablePlan(right).isEmpty || Bridge.readsCache(right)) None
+  /** Whether `right` may be indexed: immutable, not streaming and reading no
+   *  cached data (a cached layer keeps the hash-join plan over its cache). */
+  private def indexable(right: DataFrame): Boolean =
+    !right.isStreaming && immutablePlan(right).nonEmpty && !Bridge.readsCache(right)
+
+  /** The broadcast index of `right` at `level` and `radius` when `right` is
+   *  [[indexable]]. Built once per level, radius and SparkContext; an index
+   *  broadcast under another or a stopped context is never reused. */
+  private def layerIndex(right: DataFrame, level: Int, radius: Double): Option[SharedIndex] =
+    if (!indexable(right)) None
     else {
       val sc = right.sparkSession.sparkContext
-      val key = (level, right.schema)
+      val key = (level, radius, right.schema)
       Some(remembered(right)(_.indexes.get(key).filter(s => (s.sc eq sc) && !sc.isStopped))(
         (d, s) => d.copy(indexes = d.indexes + (key -> s))) {
-        val ix = LayerIndex.build(right, level)
+        val ix = LayerIndex.build(right, level, radius)
         SharedIndex(sc, sc.broadcast(ix), ix.stats)
       })
     }
@@ -314,7 +412,7 @@ object SpatialJoin {
                         predicate: SpatialPredicate, joinType: String,
                         lSuffix: String, rSuffix: String): DataFrame = {
     val probe = LayerProbe(Bridge.expression(col("geometry" + lSuffix)), ix.index, ix.stats,
-      predicate.id, right.schema)
+      predicate, right.schema)
     val gen = if (joinType == "left") GeneratorOuter(probe) else probe
     suffixed(left, lSuffix)
       .select(col("*"), Bridge.column(gen).as(right.columns.map(_ + rSuffix).toSeq))
@@ -328,12 +426,14 @@ object SpatialJoin {
   private def rowCount(right: DataFrame): Long =
     remembered(right)(_.rows)((d, n) => d.copy(rows = Some(n)))(right.count())
 
-  private def sampleCover(right: DataFrame, levels: Seq[Int], sampleRows: Int): CoverSample = {
-    val key = (sampleRows, levels.toVector)
+  private def sampleCover(right: DataFrame, levels: Seq[Int], sampleRows: Int,
+                          radius: Double): CoverSample = {
+    val key = (sampleRows, levels.toVector, radius)
     remembered(right)(_.samples.get(key))((d, c) => d.copy(samples = d.samples + (key -> c))) {
-      val row = right.select(col("geometry")).limit(sampleRows)
-        .select(avg(length(col("geometry"))).as("g") +:
-          levels.map(l => avg(cellCountFor(col("geometry"), l)).as(s"l$l")): _*)
+      val g = col("geometry")
+      val row = right.select(g).limit(sampleRows)
+        .select(avg(length(g)).as("g") +:
+          levels.map(l => avg(coverCall(JoinKernel.coverCountExpr, g, radius, l)).as(s"l$l")): _*)
         .head()
       def at(i: Int): Option[Double] = if (row.isNullAt(i)) None else Some(row.getDouble(i))
       CoverSample(at(0),
@@ -352,194 +452,6 @@ object SpatialJoin {
     val gBytes = s.geomBytes.getOrElse(64.0)
     val fanOut = math.max(1.0, s.fanOut.getOrElse(level, 1.0))
     (n * fanOut * (gBytes + otherBytes)).toLong
-  }
-
-  /**
-   * Join against a covering prepared once with [[prepare]] — the analogue of
-   * the reference's precomputed-index reuse: `SpatialJoinArgs` accepts
-   * `l_index`/`r_index` built ahead of time and its suite proves one index
-   * serves many joins (geopolars/src/spatial_index.rs:20-21, test
-   * :558-624). Here the "index" is the exploded polygon→covering-cell frame,
-   * materialized to storage, so repeated joins skip the per-polygon
-   * `coverRect` + Generate entirely — their plans read an InMemoryTableScan
-   * where the fresh path runs a Generate (PreparedJoinSpec asserts this).
-   */
-  def join(left: DataFrame, prepared: PreparedCover,
-           predicate: SpatialPredicate,
-           joinType: String,
-           lSuffix: String,
-           broadcastRight: Boolean,
-           leftPointsOnly: Boolean): DataFrame =
-    joinImpl(left, prepared.cells, prepared.rightCols, predicate, joinType,
-      lSuffix, prepared.rSuffix, prepared.cellLevel, broadcastRight, leftPointsOnly)
-
-  /** Convenience overload with the same defaults as the fresh-join form. */
-  def join(left: DataFrame, prepared: PreparedCover): DataFrame =
-    join(left, prepared, SpatialPredicate.Intersects, "inner", "_left",
-      broadcastRight = true, leftPointsOnly = false)
-
-  /**
-   * Materialize the right (polygon) side's covering index for reuse across
-   * joins (reference: spatial_index.rs:20-21 precomputed `r_index`). The
-   * returned frame carries the suffixed right columns + pinned row ids +
-   * one row per (polygon, covering cell), persisted and forced so
-   * (a) `monotonically_increasing_id` is evaluated exactly once, and
-   * (b) every subsequent join reads the materialized covering instead of
-   * recomputing `coverRect` per polygon per join. Call
-   * [[PreparedCover.unpersist]] when done.
-   */
-  def prepare(right: DataFrame, cellLevel: Int = DefaultCellLevel,
-              rSuffix: String = "_right"): PreparedCover = {
-    requireLevel("cellLevel", cellLevel)
-    val r = suffixed(right, rSuffix).withColumn("__ridx", monotonically_increasing_id())
-    val cells = r.withColumn("__cell_r",
-      explode(cellsFor(col("geometry" + rSuffix), cellLevel))).persist()
-    val n = cells.count() // force: pins row ids, makes later join plans Generate-free
-    new PreparedCover(cells, cellLevel, rSuffix, right.columns.toSeq, Some(n))
-  }
-
-  /**
-   * Durable variant of [[prepare]]: materialize the covering index to a
-   * parquet table, partitioned by the coarse parent of the covering cell so
-   * bbox-local joins prune at file granularity. At 100 TB this is the
-   * production shape — build the layer index ONCE as a job, then any number
-   * of later jobs [[loadPrepared]] it without ever re-running the
-   * per-polygon covering (the in-session [[prepare]] only amortizes within
-   * one SparkSession).
-   */
-  def prepareToTable(right: DataFrame, path: String,
-                     cellLevel: Int = DefaultCellLevel,
-                     rSuffix: String = "_right",
-                     partLevel: Int = 4): Unit = {
-    requireLevel("cellLevel", cellLevel)
-    requireLevel("partLevel", partLevel)
-    val r = suffixed(right, rSuffix).withColumn("__ridx", monotonically_increasing_id())
-    r.withColumn("__cell_r", explode(cellsFor(col("geometry" + rSuffix), cellLevel)))
-      .withColumn("__cell_part",
-        graft.functions.st.s2_parent(col("__cell_r"), lit(math.min(partLevel, cellLevel))))
-      .write.mode("overwrite").partitionBy("__cell_part").parquet(path)
-  }
-
-  /** Load a covering index written by [[prepareToTable]]. The original right
-   *  column names are recovered by stripping `rSuffix`. */
-  def loadPrepared(spark: org.apache.spark.sql.SparkSession, path: String,
-                   cellLevel: Int, rSuffix: String = "_right"): PreparedCover = {
-    requireLevel("cellLevel", cellLevel)
-    val cells = spark.read.parquet(path).drop("__cell_part")
-    val rightCols = cells.columns
-      .filterNot(c => c == "__ridx" || c == "__cell_r")
-      .map(_.stripSuffix(rSuffix)).toSeq
-    new PreparedCover(cells, cellLevel, rSuffix, rightCols)
-  }
-
-  private def joinImpl(left: DataFrame, rCellsRaw: DataFrame, rightCols: Seq[String],
-                       predicate: SpatialPredicate, joinType: String,
-                       lSuffix: String, rSuffix: String, cellLevel: Int,
-                       broadcastRight: Boolean, leftPointsOnly: Boolean): DataFrame = {
-    requireJoinType(joinType)
-
-    val lg = col("geometry" + lSuffix)
-    val rg = col("geometry" + rSuffix)
-
-    // Point-only left side: exactly one cell per row, so each (l,r) candidate
-    // pair meets in at most one shared cell — no explode, no dedupe, and no
-    // row ids. Inner AND left join are both a single equi-join with the exact
-    // predicate folded into the join condition (left_outer emits the null-
-    // extended row natively). With a broadcast right this is a pure scan +
-    // broadcast hash join: zero exchanges, embarrassingly parallel.
-    if (leftPointsOnly) {
-      val l = suffixed(left, lSuffix)
-      val lCells = l.withColumn("__cell", pointCell(lg, cellLevel))
-      val rCellsBase = rCellsRaw.drop("__ridx")
-      val rCells = if (broadcastRight) broadcast(rCellsBase) else rCellsBase
-      val cond = col("__cell") === col("__cell_r") &&
-        st.st_joinRefine(lg, rg, lit(predicate.id))
-      val jt = if (joinType == "left") "left_outer" else "inner"
-      return lCells.join(rCells, cond, jt).drop("__cell", "__cell_r")
-    }
-
-    // Generic path: the left side explodes to several covering cells, so a
-    // pair can meet more than once and dedupe needs per-side row ids (the
-    // reference's lhs_index/rhs_index, spatial_index.rs:147-162).
-    //
-    // Both join types are ONE-PASS over the left side: the plan references
-    // `l` exactly once, so monotonically_increasing_id is evaluated exactly
-    // once and its partition-layout dependence is harmless — no
-    // localCheckpoint, no materialization of the left side to executor
-    // storage (r4's left path checkpointed the FULL-WIDTH left to keep two
-    // subtrees' ids consistent; on a 10^12-row left that materialization was
-    // the scale-killer, VERDICT r4 `weak`).
-    //
-    // Left join shape: explode_outer (a row whose geometry yields no cells —
-    // empty/invalid bounds — survives with a null cell), LEFT OUTER cell join
-    // with the exact refine folded into the condition (unmatched rows
-    // null-extend natively), pair dedupe, then one window over __lidx keeps
-    // matched pairs and exactly one null-extended row for match-less left
-    // rows. Cost: the same pair-dedupe exchange the inner path already pays
-    // + one window exchange on __lidx (bounded per-task by a single left
-    // row's match count), replacing r4's checkpoint + anti-join + union.
-    val l = suffixed(left, lSuffix).withColumn("__lidx", monotonically_increasing_id())
-    val rCells = if (broadcastRight) broadcast(rCellsRaw) else rCellsRaw
-
-    val result = joinType match {
-      case "inner" =>
-        l.withColumn("__cell", explode(cellsFor(lg, cellLevel)))
-          .join(rCells, col("__cell") === col("__cell_r"), "inner")
-          .filter(st.st_joinRefine(lg, rg, lit(predicate.id)))
-          .drop("__cell", "__cell_r")
-          // two polygons can share several covering cells -> the same (l,r)
-          // pair appears once per shared cell; the reference emits each once
-          .dropDuplicates("__lidx", "__ridx")
-      case "left" =>
-        val cond = col("__cell") === col("__cell_r") &&
-          st.st_joinRefine(lg, rg, lit(predicate.id))
-        val dedup = l.withColumn("__cell", explode_outer(cellsFor(lg, cellLevel)))
-          .join(rCells, cond, "left_outer")
-          .drop("__cell", "__cell_r")
-          // matched pairs dedupe as in inner; a left row's null-extended rows
-          // (cells that matched nothing) collapse to one (__lidx, null)
-          .dropDuplicates("__lidx", "__ridx")
-        val w = Window.partitionBy("__lidx")
-        dedup.withColumn("__m", count(col("__ridx")).over(w))
-          .filter(col("__ridx").isNotNull || col("__m") === 0)
-          .drop("__m")
-    }
-    result.drop("__lidx", "__ridx")
-  }
-
-  /**
-   * Distance (range) join — ST_DWithin as a join: points within `radius`
-   * (planar units, the same metric as ST_Distance) of right geometries.
-   * Candidate cells come from the RIGHT bbox expanded by the radius, so the
-   * point side still carries exactly one cell: no explode, no dedupe, no row
-   * ids, and inner/left are both a single (broadcast) hash equi-join with
-   * the exact distance test folded into the join condition — the same
-   * zero-exchange shape as the point-fast-path predicate join. The radius
-   * expansion is planar degrees on both axes (consistent with the planar
-   * ST_Distance it refines); bboxes crossing the dateline are not wrapped,
-   * matching the base join's bbox covering contract.
-   */
-  def joinWithin(left: DataFrame, right: DataFrame, radius: Double,
-                 joinType: String = "inner",
-                 lSuffix: String = "_left", rSuffix: String = "_right",
-                 cellLevel: Int = DefaultCellLevel,
-                 broadcastRight: Boolean = true): DataFrame = {
-    require(radius >= 0, "radius must be >= 0")
-    requireLevel("cellLevel", cellLevel)
-    require(joinType == "inner" || joinType == "left",
-      s"join type '$joinType' not supported")
-    val l = suffixed(left, lSuffix)
-    val r = suffixed(right, rSuffix)
-    val lg = col("geometry" + lSuffix)
-    val rg = col("geometry" + rSuffix)
-    val lCells = l.withColumn("__cell", pointCell(lg, cellLevel))
-    val rCellsBase = r.withColumn("__cell_r",
-      explode(cellsForExpanded(rg, radius, cellLevel)))
-    val rCells = if (broadcastRight) broadcast(rCellsBase) else rCellsBase
-    val cond = col("__cell") === col("__cell_r") &&
-      st.st_distance(lg, rg) <= radius
-    val jt = if (joinType == "left") "left_outer" else "inner"
-    lCells.join(rCells, cond, jt).drop("__cell", "__cell_r")
   }
 
   /**
@@ -607,7 +519,7 @@ object SpatialJoin {
           pmod(xxhash64(lg), lit(nSalts)).cast("int")).otherwise(lit(0)))
       .drop("__hot_cell")
 
-    val rCells = r.withColumn("__cell", explode(cellsFor(rg, cellLevel)))
+    val rCells = r.withColumn("__cell", explode(cellsForExpanded(rg, predicate.radius, cellLevel)))
     val rSalted = rCells
       .join(broadcast(hot), rCells("__cell") === hot("__hot_cell"), "left")
       .withColumn("__salt",
@@ -617,25 +529,25 @@ object SpatialJoin {
 
     lSalted
       .join(rSalted, Seq("__cell", "__salt"), "inner")
-      .filter(st.st_joinRefine(lg, rg, lit(predicate.id)))
+      .filter(refine(lg, rg, predicate))
       .drop("__cell", "__salt")
   }
 
-  /** Cell of a point geometry (exactly one — the no-replication left side). */
-  def pointCell(geomWkb: Column, level: Int): Column = {
-    val b = st.st_bounds(geomWkb)
-    st.s2_cell(b.getField("miny"), b.getField("minx"), lit(level))
-  }
+  /** Cell of a point geometry (exactly one — the no-replication left side);
+   *  null for a null or empty geometry, which then meets no right row. */
+  def pointCell(geomWkb: Column, level: Int): Column =
+    Bridge.column(JoinKernel.pointCellExpr(Bridge.expression(st.st_bounds(geomWkb)), level))
 
   /** Covering cells of an arbitrary geometry via its bbox (complete superset;
-   *  refinement removes false positives). Points yield exactly one cell. */
+   *  refinement removes false positives). Points yield exactly one cell; a
+   *  null or empty geometry none. */
   def cellsFor(geomWkb: Column, level: Int): Column =
     cellsForExpanded(geomWkb, 0.0, level)
 
   /** Number of cells [[cellsFor]] yields for the same geometry, counted
    *  without building the covering. */
   def cellCountFor(geomWkb: Column, level: Int): Column =
-    coverCall("coverCount", LongType, geomWkb, 0.0, level)
+    coverCall(JoinKernel.coverCountExpr, geomWkb, 0.0, level)
 
   /** Covering cells of a geometry's bbox expanded by `radius` planar degrees
    *  on every side (clamped to the lat/lon domain) — the candidate set for
@@ -643,45 +555,68 @@ object SpatialJoin {
    *  geometry lies inside the expanded bbox, so its (single) cell is in
    *  this covering. */
   def cellsForExpanded(geomWkb: Column, radius: Double, level: Int): Column =
-    coverCall("coverBounds", ArrayType(LongType, containsNull = false), geomWkb, radius, level)
+    coverCall(JoinKernel.coverExpr, geomWkb, radius, level)
 
-  /** StaticInvoke of a [[JoinKernel]] covering function on the geometry's
-   *  bbox expanded by `radius` and clamped to the lat/lon domain. */
-  private def coverCall(method: String, returnType: DataType, geomWkb: Column,
-                        radius: Double, level: Int): Column = {
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.graftbridge.Bridge
-    val b = st.st_bounds(geomWkb)
-    def clamp(c: Column, lo: Double, hi: Double): Column =
-      least(greatest(c, lit(lo)), lit(hi))
-    Bridge.column(StaticInvoke(JoinKernel.getClass, returnType, method,
-      Seq(Bridge.expression(clamp(b.getField("miny") - radius, -90, 90)),
-        Bridge.expression(clamp(b.getField("minx") - radius, -180, 180)),
-        Bridge.expression(clamp(b.getField("maxy") + radius, -90, 90)),
-        Bridge.expression(clamp(b.getField("maxx") + radius, -180, 180)),
-        Bridge.expression(lit(level))),
-      Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType),
-      propagateNull = true, returnNullable = false))
-  }
+  private def coverCall(kernel: (Expression, Double, Int) => Expression, geomWkb: Column,
+                        radius: Double, level: Int): Column =
+    Bridge.column(kernel(Bridge.expression(st.st_bounds(geomWkb)), radius, level))
 }
 
-/** StaticInvoke targets for the join module. */
+/** StaticInvoke targets for the join module. Each takes a geometry's bbox as
+ *  the `st_bounds` struct; a null or empty bbox (JTS gives an empty
+ *  geometry min > max) or one with a NaN covers no cell. */
 object JoinKernel {
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
-  def coverBounds(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
-                  level: Int): ArrayData = {
-    if (minLat == maxLat && minLon == maxLon) {
-      new GenericArrayData(Array[Any](S2.cellId(minLat, minLon, level)))
-    } else {
-      new GenericArrayData(
-        S2.coverRect(minLat, minLon, maxLat, maxLon, level).map(x => x: Any))
+  private val NoCells: ArrayData = new GenericArrayData(Array.empty[Any])
+
+  private def hasBox(b: InternalRow): Boolean =
+    b != null && b.getDouble(0) <= b.getDouble(2) && b.getDouble(1) <= b.getDouble(3)
+
+  private def lat(v: Double): Double = math.min(math.max(v, -90.0), 90.0)
+  private def lon(v: Double): Double = math.min(math.max(v, -180.0), 180.0)
+
+  /** The S2 cells at `level` covering bbox `b` expanded by `radius` on every
+   *  side and clamped to the lat/lon domain. */
+  def cover(b: InternalRow, radius: Double, level: Int): ArrayData =
+    if (!hasBox(b)) NoCells
+    else {
+      val s = lat(b.getDouble(1) - radius); val w = lon(b.getDouble(0) - radius)
+      val n = lat(b.getDouble(3) + radius); val e = lon(b.getDouble(2) + radius)
+      if (s == n && w == e) new GenericArrayData(Array[Any](S2.cellId(s, w, level)))
+      else new GenericArrayData(S2.coverRect(s, w, n, e, level).map(x => x: Any))
     }
-  }
 
-  /** Length of the array [[coverBounds]] returns for the same arguments. */
-  def coverCount(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
-                 level: Int): Long =
-    if (minLat == maxLat && minLon == maxLon) 1L
-    else S2.coverCount(minLat, minLon, maxLat, maxLon, level)
+  /** Length of the array [[cover]] returns for the same arguments. */
+  def coverCount(b: InternalRow, radius: Double, level: Int): Long =
+    if (!hasBox(b)) 0L
+    else {
+      val s = lat(b.getDouble(1) - radius); val w = lon(b.getDouble(0) - radius)
+      val n = lat(b.getDouble(3) + radius); val e = lon(b.getDouble(2) + radius)
+      if (s == n && w == e) 1L else S2.coverCount(s, w, n, e, level)
+    }
+
+  /** The cell at `level` of bbox `b`'s (min lat, min lon) corner. */
+  def pointCell(b: InternalRow, level: Int): java.lang.Long =
+    if (!hasBox(b)) null else S2.cellId(b.getDouble(1), b.getDouble(0), level)
+
+  private val CellsType = ArrayType(LongType, containsNull = false)
+
+  /** [[cover]] of the `st_bounds` struct `bounds` as a Catalyst expression. */
+  private[graft] def coverExpr(bounds: Expression, radius: Double, level: Int): Expression =
+    call("cover", CellsType, returnNullable = false, bounds, Literal(radius), Literal(level))
+
+  /** [[coverCount]] of `bounds` as a Catalyst expression. */
+  private[graft] def coverCountExpr(bounds: Expression, radius: Double, level: Int): Expression =
+    call("coverCount", LongType, returnNullable = false, bounds, Literal(radius), Literal(level))
+
+  /** [[pointCell]] of `bounds` as a Catalyst expression. */
+  private[graft] def pointCellExpr(bounds: Expression, level: Int): Expression =
+    call("pointCell", LongType, returnNullable = true, bounds, Literal(level))
+
+  // no null propagation: a null bbox reaches the kernel, which covers nothing
+  private def call(method: String, dt: DataType, returnNullable: Boolean,
+                   args: Expression*): Expression =
+    StaticInvoke(JoinKernel.getClass, dt, method, args,
+      st.boundsSchema +: args.tail.map(_.dataType), propagateNull = false,
+      returnNullable = returnNullable)
 }

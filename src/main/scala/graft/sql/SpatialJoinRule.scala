@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 import graft.geom.GeomKernel
 
@@ -28,10 +28,12 @@ import graft.geom.GeomKernel
  * (the ReplaceDeduplicateWithAggregate pattern, exprIds preserved so the
  * parent plan is untouched).
  *
- * This is the optimizer-level counterpart of `SpatialJoin.joinWithin`
- * (which stays the preferred API: its point-side contract needs no row ids
- * and no dedupe aggregate, so it is exchange-free where this general
- * rewrite pays one pair-id exchange). Register per session via
+ * This is the optimizer-level counterpart of `SpatialJoin.join` with a
+ * `DWithin` (or truth-table) predicate, which stays the preferred API: its
+ * point-side contract needs no row ids and no dedupe aggregate, so it is
+ * exchange-free where this general rewrite pays one pair-id exchange. Both
+ * cover through the same `JoinKernel.cover`, so a null or empty geometry
+ * meets nothing on either. Register per session via
  * `GraftSql.registerRules(spark)` or cluster-wide through
  * `spark.sql.extensions=graft.sql.GraftSparkExtensions`. Covering
  * resolution comes from `spark.graft.spatialJoin.cellLevel` (default 9 —
@@ -106,7 +108,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
 
   /** True when some conjunct is a cross-side equality the planner can hash
    *  on — EqualTo OR EqualNullSafe (ExtractEquiJoinKeys accepts both), e.g.
-   *  joinWithin's cell-bucketed form or a business-key equi-join with a
+   *  `SpatialJoin.join`'s cell-bucketed form or a business-key equi-join with a
    *  distance refinement. Such joins plan as hash joins by themselves and
    *  the rewrite must leave them alone. */
   private def hasHashableConjunct(cond: Expression, l: LogicalPlan, r: LogicalPlan): Boolean =
@@ -152,7 +154,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // the rewrite only rescues joins the planner has NOTHING to hash on: a
     // condition already carrying a cross-side equality conjunct (e.g.
-    // joinWithin's cell-bucketed form, or a business-key equi-join with a
+    // SpatialJoin.join's cell-bucketed form, or a business-key equi-join with a
     // distance refinement) plans as a hash join by itself and is left alone
     case j @ Join(l, r, Inner, Some(cond), _) if !hasHashableConjunct(cond, l, r) =>
       spatialHit(cond, l, r).fold(j: LogicalPlan) { case (lg, rg, radius) =>
@@ -165,28 +167,16 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   }
 
   /** Covering-cell array for a geometry's bbox expanded by `radius` — the
-   *  same computation as `SpatialJoin.cellsForExpanded`, but built from
-   *  RESOLVED Catalyst nodes directly: an optimizer rule must not emit
-   *  analyzer work (the Column DSL's `getField`/`least` produce
-   *  Unresolved* nodes, which fail plan validation post-analysis). */
+   *  same `JoinKernel.cover` as `SpatialJoin.cellsForExpanded`, but built
+   *  from RESOLVED Catalyst nodes directly: an optimizer rule must not emit
+   *  analyzer work (the Column DSL produces Unresolved* nodes, which fail
+   *  plan validation post-analysis). */
   private def cellsOf(geom: Expression, radius: Double, level: Int): Expression = {
-    import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType}
+    import org.apache.spark.sql.types.BinaryType
     val bounds = StaticInvoke(GeomKernel.getClass, graft.functions.st.boundsSchema,
       "stBounds", Seq(Cast(geom, BinaryType)), Seq(BinaryType),
       propagateNull = true, returnNullable = false)
-    def field(i: Int, name: String): Expression = GetStructField(bounds, i, Some(name))
-    def clamp(e: Expression, lo: Double, hi: Double): Expression =
-      Least(Seq(Greatest(Seq(e, Literal(lo))), Literal(hi)))
-    val r = Literal(radius)
-    StaticInvoke(graft.join.JoinKernel.getClass,
-      ArrayType(LongType, containsNull = false), "coverBounds",
-      Seq(clamp(Subtract(field(1, "miny"), r), -90, 90),
-        clamp(Subtract(field(0, "minx"), r), -180, 180),
-        clamp(Add(field(3, "maxy"), r), -90, 90),
-        clamp(Add(field(2, "maxx"), r), -180, 180),
-        Literal(level)),
-      Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType),
-      propagateNull = true, returnNullable = false)
+    graft.join.JoinKernel.coverExpr(bounds, radius, level)
   }
 
   private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan, cond: Expression,

@@ -4,19 +4,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.st
-import graft.sources.ArrowIpc
+import graft.sources.{ArrowIpc, RefData}
 
 /** The reference's four golden Arrow IPC datasets, read with the engine's
  *  distributed reader — row counts and shapes pinned to the reference's own
  *  test expectations. */
 class ArrowIpcSpec extends SparkSpec {
 
-  val RefData = "/root/reference/data"
-  val RefDatasets = "/root/reference/py-geopolars/python/geopolars/datasets"
-
   test("cities.arrow: 202 rows of (name, wkb point) — the affine bench input") {
     // reference benches/affine.rs:23-31 runs translate(10,10) over this file
-    val df = ArrowIpc.read(spark, s"$RefData/cities.arrow")
+    val df = ArrowIpc.read(spark, RefData.CitiesArrow)
     assert(df.schema == StructType(Seq(
       StructField("name", StringType, nullable = true),
       StructField("geometry", BinaryType, nullable = true))))
@@ -27,9 +24,9 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("naturalearth_cities (243 rows, the conftest.py:7 fixture) and " +
     "naturalearth_lowres (177 countries) parse with valid geometries") {
-    val cities = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_cities.arrow")
+    val cities = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     assert(cities.count() == 243) // test_geoseries.py:4-5 pins this
-    val countries = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_lowres.arrow")
+    val countries = ArrowIpc.read(spark, RefData.dataset("naturalearth_lowres.arrow"))
     assert(countries.count() == 177)
     // every geometry parses through the quarantine predicate
     assert(countries.filter(!st.st_is_valid_wkb(col("geometry"))).count() == 0)
@@ -49,12 +46,12 @@ class ArrowIpcSpec extends SparkSpec {
   test("geo schema metadata surfaces (CRS routing); timestamps/dates decode " +
     "to Spark microsecond/day semantics") {
     // the reference golden files carry GeoParquet-style `geo` metadata
-    val md = ArrowIpc.metadataOf(s"$RefDatasets/naturalearth_lowres.arrow")
+    val md = ArrowIpc.metadataOf(RefData.dataset("naturalearth_lowres.arrow"))
     assert(md.contains("geo") && md("geo").contains("\"geometry\""))
     assert(md("geo").contains("crs"))
     // the embedded PROJJSON CRS routes straight into the CRS machinery:
     // naturalearth is WGS84 geographic -> the longlat identity spec
-    val crs = ArrowIpc.crsOf(s"$RefDatasets/naturalearth_lowres.arrow")
+    val crs = ArrowIpc.crsOf(RefData.dataset("naturalearth_lowres.arrow"))
     assert(crs.isDefined && crs.get.contains("GeographicCRS"))
     val spec = graft.geom.ProjString.parse(crs.get)
     assert(spec.proj == "longlat" && spec.ell == graft.geom.Proj.Wgs84)
@@ -165,8 +162,8 @@ class ArrowIpcSpec extends SparkSpec {
     // and the geo metadata (incl. the source's PROJJSON CRS) rides along so
     // geoarrow-aware consumers recognize the geometry column
     val dir2 = java.nio.file.Files.createTempDirectory("ipc_ne").toString
-    val ne = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_cities.arrow")
-    val srcCrs = ArrowIpc.crsOf(s"$RefDatasets/naturalearth_cities.arrow")
+    val ne = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
+    val srcCrs = ArrowIpc.crsOf(RefData.dataset("naturalearth_cities.arrow"))
     ArrowIpc.write(ne.repartition(2), dir2,
       metadata = Map("geo" -> ArrowIpc.geoMetadata("geometry", srcCrs)))
     val ne2 = ArrowIpc.read(spark,
@@ -203,14 +200,14 @@ class ArrowIpcSpec extends SparkSpec {
   }
 
   test("nybb.arrow: uint8 widens losslessly; multiple files union by schema") {
-    val nybb = ArrowIpc.read(spark, s"$RefDatasets/nybb.arrow")
+    val nybb = ArrowIpc.read(spark, RefData.dataset("nybb.arrow"))
     assert(nybb.count() == 5)
     assert(nybb.schema("BoroCode").dataType == ShortType) // arrow uint8
     assert(nybb.select("BoroCode").collect().map(_.getShort(0)).sorted.toSeq ==
       Seq[Short](1, 2, 3, 4, 5))
     // two-file read: schema check enforced, rows concatenated
     val both = ArrowIpc.read(spark,
-      s"$RefData/cities.arrow", s"$RefDatasets/naturalearth_cities.arrow")
+      RefData.CitiesArrow, RefData.dataset("naturalearth_cities.arrow"))
     assert(both.count() == 202 + 243)
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.graftbridge.SparkBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import graft.SparkSpec.{actionsFor, jobsFor}
 import graft.join.SpatialJoin
 
 /** r6 (VERDICT r5 nit): `joinAutoBroadcast`'s size estimate ran a full
@@ -27,15 +26,6 @@ class AutoBroadcastCountSpec extends SparkSpec {
   private def x = (col("c_custkey") % 80 - 40).cast("double")
   private def y = (col("c_custkey") % 60 - 30).cast("double")
 
-  private def jobsFor(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    // the status store and every listener are fed from the async listener bus
-    SparkBridge.drainListenerBus(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("caller-supplied rightRows skips the count job and matches the counted estimate") {
     val right = boxes
     val n = right.count()
@@ -53,22 +43,6 @@ class AutoBroadcastCountSpec extends SparkSpec {
     assert(withRows < withCount,
       s"expected fewer jobs with rightRows supplied " +
         s"(counted=$withCount, supplied=$withRows)")
-  }
-
-  /** Distinct SQL executions (one per DataFrame action) among the jobs
-   *  `body` starts. Under AQE one aggregate over a limit runs as two jobs
-   *  (the limit's shuffle stage, then the result), so jobs over-count
-   *  actions. */
-  private def actionsFor(group: String)(body: => Unit): Int = {
-    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          executions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try jobsFor(group)(body) finally spark.sparkContext.removeSparkListener(listener)
-    executions.size
   }
 
   test("joinAutoBroadcast with AutoLevel and rightRows runs exactly one decision action") {

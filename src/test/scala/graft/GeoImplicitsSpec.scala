@@ -84,17 +84,17 @@ class GeoImplicitsSpec extends SparkSpec {
     assert(big.geo.within(col("hull")).filter(col("within")).count() == 10)
   }
 
-  test("sjoin(prepared), sjoinWithin, and toCrs with ProjOptions") {
+  test("sjoin on a prepared layer, sjoin with DWithin, and toCrs with ProjOptions") {
     import spark.implicits._
     val pts = Seq((1L, 0.5, 0.5), (2L, 5.5, 1.0), (3L, 40.0, 40.0))
       .toDF("pid", "lon", "lat")
       .select(col("pid"), st_point(col("lon"), col("lat")).as("geometry"))
-    val prep = graft.join.SpatialJoin.prepare(boxes, cellLevel = 4)
-    try {
-      val j = pts.geo.sjoin(prep)
+    val layer = graft.join.SpatialJoin.prepare(boxes, cellLevel = 4)
+    for (pointsOnly <- Seq(false, true)) {
+      val j = pts.geo.sjoin(layer, cellLevel = 4, leftPointsOnly = pointsOnly)
       assert(j.select("pid_left").as[Long].collect().toSet == Set(1L, 2L))
-    } finally prep.unpersist()
-    val w = pts.geo.sjoinWithin(boxes, radius = 1.5, cellLevel = 4)
+    }
+    val w = pts.geo.sjoin(boxes, graft.join.SpatialPredicate.DWithin(1.5), cellLevel = 4)
     // point 3 at (40,40) is > 1.5 from every box; 1 and 2 are inside/near
     assert(w.select("pid_left").as[Long].distinct().collect().toSet == Set(1L, 2L))
     val opts = graft.geom.ProjOptions(Map("MY:M" -> "EPSG:3857"))

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Coordinate
 
+import graft.SparkSpec.{actionsFor, jobsFor, layerProbes}
 import graft.functions.st
 import graft.geom.Wkb
 import graft.join.{SpatialJoin, SpatialPredicate}
@@ -10,7 +12,7 @@ import graft.join.{SpatialJoin, SpatialPredicate}
 /** Prepared-index reuse — the Spark counterpart of the reference's
  *  precomputed SpatialIndex handed in via SpatialJoinArgs
  *  (geopolars/src/spatial_index.rs:20-21; reuse test :558-624):
- *  prepare() once, join many, same rows, no covering recompute. */
+ *  prepare() builds a layer's index once, every later join probes it. */
 class PreparedJoinSpec extends SparkSpec {
 
   private def boxWkb(minx: Double, miny: Double, maxx: Double, maxy: Double) =
@@ -32,78 +34,76 @@ class PreparedJoinSpec extends SparkSpec {
     (pts, boxes)
   }
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
+  private def rows(df: DataFrame) =
     df.select(col("id_left"), col("box_id_right"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("prepared join == fresh join, reused across two joins, plan is Generate-free") {
-    val (pts, boxes) = fixtures()
-    val fresh = SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects,
-      "inner", cellLevel = 4, leftPointsOnly = true)
-    val prep = SpatialJoin.prepare(boxes, cellLevel = 4)
-    try {
-      assert(prep.coveringRows > boxes.count(), "multi-cell coverings expected")
-      val first = SpatialJoin.join(pts, prep, SpatialPredicate.Intersects,
-        "inner", "_left", broadcastRight = true, leftPointsOnly = true)
-      val second = SpatialJoin.join(pts, prep, SpatialPredicate.Intersects,
-        "inner", "_left", broadcastRight = true, leftPointsOnly = true)
-      val expect = rows(fresh)
-      assert(expect.nonEmpty)
-      assert(rows(first) == expect)
-      assert(rows(second) == expect)
-
-      // the covering was computed at prepare() time: the join's executed plan
-      // must read the materialized frame (InMemoryTableScan), never re-run
-      // the per-polygon coverRect explode (Generate). The fresh path DOES
-      // carry a Generate — asserting both proves the plans actually differ.
-      val preparedPlan = second.queryExecution.executedPlan.toString
-      // the plan STRING still prints the cached relation's originating
-      // lineage (the Generate under InMemoryRelation) — what matters is that
-      // no Generate executes ABOVE the cache read: the executed operators
-      // are everything before the first InMemoryRelation marker
-      val cacheIdx = preparedPlan.indexOf("InMemoryRelation")
-      assert(cacheIdx >= 0 && preparedPlan.contains("InMemoryTableScan"),
-        s"prepared join did not read the materialized covering:\n$preparedPlan")
-      assert(!preparedPlan.substring(0, cacheIdx).contains("Generate"),
-        s"prepared join re-computed the covering:\n$preparedPlan")
-      val freshPlan = fresh.queryExecution.executedPlan.toString
-      assert(freshPlan.contains("Generate"))
-    } finally prep.unpersist()
+  /** `df` written to parquet and read back: a layer the plan does not hold. */
+  private def onFile(df: DataFrame): DataFrame = {
+    val path = java.nio.file.Files.createTempDirectory("prepared-layer").resolve("l").toString
+    df.write.parquet(path)
+    spark.read.parquet(path)
   }
 
-  test("durable covering: prepareToTable + loadPrepared joins Generate-free") {
+  private def pointJoin(pts: DataFrame, layer: DataFrame) =
+    SpatialJoin.join(pts, layer, SpatialPredicate.Intersects, "inner", cellLevel = 4,
+      leftPointsOnly = true)
+
+  test("prepared join == fresh join, reused across two joins through one index") {
     val (pts, boxes) = fixtures()
-    val path = java.nio.file.Files.createTempDirectory("prepared-cover").toString
-    SpatialJoin.prepareToTable(boxes, path, cellLevel = 4)
-    val prep = SpatialJoin.loadPrepared(spark, path, cellLevel = 4)
-    val joined = SpatialJoin.join(pts, prep, SpatialPredicate.Intersects,
-      "inner", "_left", broadcastRight = true, leftPointsOnly = true)
-    val fresh = SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects,
-      "inner", cellLevel = 4, leftPointsOnly = true)
-    assert(rows(joined) == rows(fresh) && rows(joined).nonEmpty)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Generate"), s"covering recomputed:\n$plan")
-    // the covering is READ from the partitioned parquet table
-    assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"))
+    // a fresh join indexes a DataFrame of its own over the same rows
+    val fresh = pointJoin(pts, fixtures()._2)
+    val layer = SpatialJoin.prepare(boxes, cellLevel = 4)
+    // an in-memory layer is indexed as it is: no copy
+    assert(layer eq boxes)
+    val (first, second) = (pointJoin(pts, layer), pointJoin(pts, layer))
+    val expect = rows(fresh)
+    assert(expect.nonEmpty)
+    assert(rows(first) == expect)
+    assert(rows(second) == expect)
+    val ids = Seq(first, second).map(df => layerProbes(df.queryExecution.executedPlan)
+      .map(p => (p.stats.level, p.index.id)))
+    assert(ids.head.map(_._1) == Seq(4) && ids.head == ids(1), s"$ids")
+  }
+
+  test("a join on a prepared parquet-backed layer starts no index-build and no " +
+    "decision job") {
+    val (pts, boxes) = fixtures()
+    val parquet = onFile(boxes)
+    var layer: DataFrame = null
+    // the copy of a file-backed layer costs one action: its collect
+    assert(actionsFor("prep-build") { layer = SpatialJoin.prepare(parquet, cellLevel = 4) } == 1)
+    var joined: DataFrame = null
+    assert(actionsFor("prep-join") { joined = pointJoin(pts, layer) } == 0)
+    assert(layerProbes(joined.queryExecution.executedPlan).map(_.stats.level) == Seq(4))
+    // running it is the probe's one job, and the rows are the fresh join's
+    assert(jobsFor("prep-run") { joined.write.format("noop").mode("overwrite").save() } == 1)
+    assert(rows(joined) == rows(pointJoin(pts, parquet)) && rows(joined).nonEmpty)
+    // a cached layer is copied too: a cached right side keeps the hash join
+    val cached = boxes.cache()
+    try assert(layerProbes(pointJoin(pts, SpatialJoin.prepare(cached, cellLevel = 4))
+      .queryExecution.executedPlan).nonEmpty)
+    finally cached.unpersist()
   }
 
   test("prepared generic (non-point) path and left join also match fresh") {
     val (pts, boxes) = fixtures()
-    val prep = SpatialJoin.prepare(boxes, cellLevel = 4)
-    try {
-      for (jt <- Seq("inner", "left")) {
-        val fresh = SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects,
-          jt, cellLevel = 4)
-        val prepared = SpatialJoin.join(pts, prep, SpatialPredicate.Intersects,
-          jt, "_left", broadcastRight = true, leftPointsOnly = false)
-        val f = fresh.select("id_left", "box_id_right").collect()
-          .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-          .groupBy(identity).view.mapValues(_.length).toMap
-        val p = prepared.select("id_left", "box_id_right").collect()
-          .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-          .groupBy(identity).view.mapValues(_.length).toMap
-        assert(p == f, s"join type $jt")
-      }
-    } finally prep.unpersist()
+    val layer = SpatialJoin.prepare(onFile(boxes), cellLevel = 4)
+    for (jt <- Seq("inner", "left"); pointsOnly <- Seq(false, true)) {
+      def counts(df: DataFrame) = df.select("id_left", "box_id_right").collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      val fresh = SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects, jt, cellLevel = 4)
+      val prepared = SpatialJoin.join(pts, layer, SpatialPredicate.Intersects, jt,
+        cellLevel = 4, leftPointsOnly = pointsOnly)
+      assert(counts(prepared) == counts(fresh), s"join type $jt, leftPointsOnly $pointsOnly")
+    }
+  }
+
+  test("prepare rejects a streaming layer, naming it") {
+    val stream = spark.readStream.format("rate").load()
+      .select(col("value").as("id"), st.st_point(lit(0.0), lit(0.0)).as("geometry"))
+    val e = intercept[IllegalArgumentException](SpatialJoin.prepare(stream, cellLevel = 4))
+    assert(e.getMessage.contains("right is a streaming DataFrame"), e.getMessage)
   }
 }

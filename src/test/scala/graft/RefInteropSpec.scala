@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.st._
-import graft.sources.{ArrowIpc, CellStore, Shapefile}
+import graft.sources.{ArrowIpc, CellStore, RefData, Shapefile}
 
 /**
  * The reference's REAL golden datasets through the round-5 interchange
@@ -15,14 +15,12 @@ import graft.sources.{ArrowIpc, CellStore, Shapefile}
  */
 class RefInteropSpec extends SparkSpec {
 
-  private val RefDatasets = "/root/reference/py-geopolars/python/geopolars/datasets"
-
   private def wkbSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Byte]] =
     df.select(col("geometry")).collect()
       .map(_.getAs[Array[Byte]](0).toSeq).toSet
 
   test("naturalearth_cities (243 points) survives GeoJSONSeq bit-exactly") {
-    val src = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_cities.arrow")
+    val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     assert(src.count() == 243)
     val dir = java.nio.file.Files.createTempDirectory("ref-gj").toString
     CellStore.writeGeoJsonSeq(src, dir)
@@ -36,7 +34,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("naturalearth_lowres (177 country polygons) survives GeoJSONSeq bit-exactly") {
-    val src = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_lowres.arrow")
+    val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_lowres.arrow"))
     assert(src.count() == 177)
     val dir = java.nio.file.Files.createTempDirectory("ref-gj-cty").toString
     CellStore.writeGeoJsonSeq(src, dir)
@@ -46,7 +44,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("naturalearth_cities survives a Shapefile round-trip bit-exactly") {
-    val src = ArrowIpc.read(spark, s"$RefDatasets/naturalearth_cities.arrow")
+    val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     val dir = java.nio.file.Files.createTempDirectory("ref-shp").toString
     Shapefile.write(src, dir)
     val back = Shapefile.read(spark, dir)
@@ -57,7 +55,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("nybb boroughs (5 multipolygons) survive a Shapefile round-trip: equal areas") {
-    val src = ArrowIpc.read(spark, s"$RefDatasets/nybb.arrow")
+    val src = ArrowIpc.read(spark, RefData.dataset("nybb.arrow"))
     assert(src.count() == 5)
     val dir = java.nio.file.Files.createTempDirectory("ref-shp-nybb").toString
     Shapefile.write(src.select(col("BoroName"), col("geometry")), dir)

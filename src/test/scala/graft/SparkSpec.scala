@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftbridge.SparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -25,6 +27,32 @@ object SparkSpec {
     }
     physical.collect { case g: GenerateExec => g.generator }
       .collect { case p: graft.join.LayerProbe => p }
+  }
+
+  /** Spark jobs `body` starts, counted through a job group. */
+  def jobsFor(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    // the status store and every listener are fed from the async listener bus
+    SparkBridge.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Distinct SQL executions (one per DataFrame action) among the jobs
+   *  `body` starts. Under AQE one aggregate over a limit runs as two jobs
+   *  (the limit's shuffle stage, then the result), so jobs over-count
+   *  actions. */
+  def actionsFor(group: String)(body: => Unit): Int = {
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          executions.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try jobsFor(group)(body) finally spark.sparkContext.removeSparkListener(listener)
+    executions.size
   }
 }
 

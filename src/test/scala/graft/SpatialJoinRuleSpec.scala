@@ -97,14 +97,38 @@ class SpatialJoinRuleSpec extends SparkSpec {
     assert(rj.count() >= boxes.count())
   }
 
-  test("guard: already-bucketed joinWithin (cross-side equality) is untouched") {
+  test("guard: a bucketed DWithin join (cross-side equality) is untouched") {
     val (pts, boxes) = fixtures()
-    val jw = graft.join.SpatialJoin.joinWithin(
-      pts, boxes.withColumnRenamed("bgeom", "geometry"), 2.3, "inner", cellLevel = 4)
+    // not broadcast, so the join plans its cell equi-join, not the index probe
+    val jw = graft.join.SpatialJoin.join(pts, boxes.withColumnRenamed("bgeom", "geometry"),
+      graft.join.SpatialPredicate.DWithin(2.3), "inner", cellLevel = 4,
+      broadcastRight = false, leftPointsOnly = true)
     // the rule's markers must not appear: its cell equality already hash-joins
     val plan = jw.queryExecution.optimizedPlan.toString
+    assert(plan.contains("__cell_r"), plan)
     assert(!plan.contains("__lcell") && !plan.contains("__ridx"))
     assert(jw.count() > 0)
+  }
+
+  test("st_dwithin: a null or empty right geometry matches nothing, as under " +
+    "SpatialJoin's DWithin") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (pts, _) = fixtures()
+    // the empty polygon's bbox (JTS: min 0, max -1) widened by 3.7 would
+    // cover [-3.7, 2.7]^2, where st_distance to it reads 0
+    val near = pts.union(spark.range(1000L, 1010L).select(col("id"),
+      st_point((col("id") - 1005) * 0.5, (col("id") - 1005) * 0.25).as("geometry")))
+    val layer = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, boxWkb(-170, -58, -100, -10)), Row(2L, Wkb.write(Wkb.factory.createPolygon())),
+      Row(3L, null)), StructType(Seq(StructField("box_id", LongType), StructField("bgeom", BinaryType))))
+    val ruled = near.join(layer, st_dwithin(col("geometry"), col("bgeom"), lit(3.7)))
+    assert(!ruled.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+    val api = graft.join.SpatialJoin.join(near, layer.withColumnRenamed("bgeom", "geometry"),
+      graft.join.SpatialPredicate.DWithin(3.7), cellLevel = 4, leftPointsOnly = true)
+      .select(col("id_left").as("id"), col("box_id_right").as("box_id"))
+    assert(rows(ruled) == rows(api) && rows(api).nonEmpty)
+    assert(rows(api).forall(_._2 == 1L))
   }
 
   test("duplicate pair meetings collapse: polygon-polygon (multi-cell) sides") {

@@ -312,39 +312,113 @@ class SpatialJoinSpec extends SparkSpec {
       .map(_.getDouble(0)).sorted.toSeq == Seq(2.0, 3.0))
   }
 
-  test("joinWithin: distance join equals JTS brute force, incl. cross-cell radii") {
+  private def pairs(df: DataFrame, left: String, right: String): Set[(Long, Long)] =
+    df.select(left, right).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
+
+  test("DWithin equals JTS brute force on every join path, incl. cross-cell radii") {
     val rnd = new scala.util.Random(53)
     val pts = (0 until 400).map(i =>
       (pointWkb(rnd.nextDouble() * 80 - 40, rnd.nextDouble() * 60 - 30), i.toLong))
     val ptsDf = spark.createDataFrame(pts).toDF("geometry", "pid")
-    val layer = spark.createDataFrame(Seq(
+    val geoms = Seq(
       (polyWkb((0.0, 0.0), (10.0, 0.0), (10.0, 8.0), (0.0, 8.0)), 1L),
       (polyWkb((-30.0, -20.0), (-20.0, -20.0), (-20.0, -10.0), (-30.0, -10.0)), 2L),
-      (pointWkb(25.0, 15.0), 3L))) // a point geometry on the right side works too
-      .toDF("geometry", "gid")
+      (pointWkb(25.0, 15.0), 3L)) // a point geometry on the right side works too
+    val layer = spark.createDataFrame(geoms).toDF("geometry", "gid")
     for (radius <- Seq(0.5, 3.7, 12.0)) {
-      val got = SpatialJoin.joinWithin(ptsDf, layer, radius, cellLevel = 5)
-        .select("pid_left", "gid_right").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val within = SpatialPredicate.DWithin(radius)
       val expect = (for {
         (pw, pid) <- pts
-        (gw, gid) <- layer.collect().map(r => (r.getAs[Array[Byte]](0), r.getLong(1)))
+        (gw, gid) <- geoms
         if GeomKernel.stDistance(pw, gw) <= radius
       } yield (pid, gid)).toSet
-      assert(got == expect, s"radius=$radius got=${got.size} expect=${expect.size}")
+      val unmatched = pts.map(_._2).toSet -- expect.map(_._1)
+      def join(joinType: String, broadcastRight: Boolean, leftPointsOnly: Boolean) =
+        SpatialJoin.join(ptsDf, layer, within, joinType, cellLevel = 5,
+          broadcastRight = broadcastRight, leftPointsOnly = leftPointsOnly)
+      val probe = join("inner", broadcastRight = true, leftPointsOnly = true)
+      assert(layerProbes(probe.queryExecution.executedPlan).map(_.predicate) == Seq(within))
+      val inner = Seq("probe" -> probe,
+        "shuffled" -> join("inner", broadcastRight = false, leftPointsOnly = true),
+        "generic" -> join("inner", broadcastRight = true, leftPointsOnly = false),
+        "salted" -> SpatialJoin.joinSalted(ptsDf, layer, within, cellLevel = 5, nSalts = 4,
+          skewThreshold = 2))
+      for ((name, df) <- inner)
+        assert(pairs(df, "pid_left", "gid_right") == expect, s"$name, radius $radius")
+      // left joins keep every point, the unmatched ones null-extended
+      val left = Seq("probe" -> join("left", broadcastRight = true, leftPointsOnly = true),
+        "shuffled" -> join("left", broadcastRight = false, leftPointsOnly = true),
+        "generic" -> join("left", broadcastRight = true, leftPointsOnly = false))
+      for ((name, df) <- left) assert(pairs(df, "pid_left", "gid_right") ==
+        expect ++ unmatched.map(_ -> -1L), s"left $name, radius $radius")
     }
-    // left variant keeps unmatched points with null gid
-    val left = SpatialJoin.joinWithin(ptsDf, layer, 0.5, joinType = "left", cellLevel = 5)
-    assert(left.select("pid_left").distinct().count() == 400)
-    // the shuffled (non-broadcast) path returns identical rows
-    val shuffled = SpatialJoin.joinWithin(ptsDf, layer, 3.7, cellLevel = 5,
-      broadcastRight = false)
-      .select("pid_left", "gid_right").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bcast = SpatialJoin.joinWithin(ptsDf, layer, 3.7, cellLevel = 5)
-      .select("pid_left", "gid_right").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(shuffled == bcast)
+    // joinAutoBroadcast measures the fan-out at the predicate's radius, so a
+    // wide radius picks a coarser level than the plain layer
+    def auto(predicate: SpatialPredicate) = SpatialJoin.joinAutoBroadcast(ptsDf, layer, predicate,
+      cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true)
+    def level(df: DataFrame) = layerProbes(df.queryExecution.executedPlan).map(_.stats.level)
+    val wide = auto(SpatialPredicate.DWithin(12.0))
+    assert(level(wide).head < level(auto(SpatialPredicate.Intersects)).head,
+      s"${level(wide)} vs ${level(auto(SpatialPredicate.Intersects))}")
+    assert(pairs(wide, "pid_left", "gid_right") == (for {
+      (pw, pid) <- pts
+      (gw, gid) <- geoms
+      if GeomKernel.stDistance(pw, gw) <= 12.0
+    } yield (pid, gid)).toSet)
+  }
+
+  test("DWithin ties: points exactly r from an edge or a point match on every path, one ulp " +
+    "farther do not, and a null or empty right geometry matches nothing") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // box [0,4] x [0,2] and the point (10, 10) at r = 0.5: every distance
+    // below is exact in binary floating point, so a tie is a tie on any path
+    val r = 0.5
+    val layerRows = Seq(Row(1L, polyWkb((0.0, 0.0), (4.0, 0.0), (4.0, 2.0), (0.0, 2.0))),
+      Row(2L, pointWkb(10.0, 10.0)), Row(3L, Wkb.write(Wkb.factory.createPolygon())), Row(4L, null))
+    val layer = spark.createDataFrame(java.util.Arrays.asList(layerRows: _*),
+      StructType(Seq(StructField("gid", LongType), StructField("geometry", BinaryType))))
+    val ties = Seq((4.5, 1.0) -> 1L, (-0.5, 1.0) -> 1L, (2.0, 2.5) -> 1L, (2.0, -0.5) -> 1L,
+      (10.0, 10.5) -> 2L, (9.5, 10.0) -> 2L)
+    // one ulp beyond each tie; (-0.5, -0.5) is where the empty polygon's bbox
+    // (JTS: min 0, max -1) widened by r collapses to one point
+    val beyond = Seq((math.nextUp(4.5), 1.0), (-math.nextUp(0.5), 1.0), (2.0, math.nextUp(2.5)),
+      (2.0, -math.nextUp(0.5)), (10.0, math.nextUp(10.5)), (math.nextDown(9.5), 10.0),
+      (-0.5, -0.5))
+    val pts = (ties.map(_._1) ++ beyond).zipWithIndex.map { case ((x, y), i) =>
+      (pointWkb(x, y), i.toLong)
+    }
+    val ptsDf = spark.createDataFrame(pts).toDF("geometry", "pid")
+    val expect = ties.zipWithIndex.map { case ((_, gid), i) => (i.toLong, gid) }.toSet
+    // the scalar distance agrees with the ties and the ulps beyond them
+    val scalar = for {
+      (pw, pid) <- pts
+      Row(gid: Long, gw: Array[Byte]) <- layerRows.take(2)
+      if GeomKernel.stDistance(pw, gw) <= r
+    } yield (pid, gid)
+    assert(scalar.toSet == expect)
+    val path = java.nio.file.Files.createTempDirectory("ties-layer").resolve("l").toString
+    layer.write.parquet(path)
+    val onFile = spark.read.parquet(path)
+    val within = SpatialPredicate.DWithin(r)
+    val runs = Seq(
+      "probe" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6, leftPointsOnly = true),
+      "broadcast hash" -> SpatialJoin.join(ptsDf, onFile, within, cellLevel = 6,
+        leftPointsOnly = true),
+      "shuffled" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6, broadcastRight = false,
+        leftPointsOnly = true),
+      "generic" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6),
+      "salted" -> SpatialJoin.joinSalted(ptsDf, layer, within, cellLevel = 6, nSalts = 2,
+        skewThreshold = 1))
+    for ((name, df) <- runs) assert(pairs(df, "pid_left", "gid_right") == expect, name)
+  }
+
+  test("DWithin rejects a negative or NaN radius, naming the value") {
+    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    assert(message(SpatialPredicate.DWithin(-1.5)).contains("DWithin radius must be >= 0, got -1.5"))
+    assert(message(SpatialPredicate.DWithin(Double.NaN))
+      .contains("DWithin radius must be >= 0, got NaN"))
   }
 
   test("auto decisions are pinned: level, covering estimate and broadcast choice") {
@@ -453,6 +527,18 @@ class SpatialJoinSpec extends SparkSpec {
           size(SpatialJoin.cellsFor(col("geometry"), l)))
         .collect().foreach(r => assert(r.getLong(0) == r.getInt(1), s"level $l"))
     }
+    // a null, an empty or a NaN geometry covers no cell at any radius, and
+    // has no point cell
+    val none = layer(null, Wkb.write(Wkb.factory.createPolygon()),
+      Wkb.write(Wkb.factory.createPoint()), pointWkb(Double.NaN, 2.0))
+    for (l <- Seq(0, 3, 9); radius <- Seq(0.0, 3.7)) {
+      none.select(SpatialJoin.cellCountFor(col("geometry"), l),
+          size(SpatialJoin.cellsForExpanded(col("geometry"), radius, l)),
+          SpatialJoin.pointCell(col("geometry"), l))
+        .collect().foreach { r =>
+          assert(r.getLong(0) == 0 && r.getInt(1) == 0 && r.isNullAt(2), s"level $l, r $radius")
+        }
+    }
   }
 
   test("auto decisions reject bad arguments, naming the argument and its value") {
@@ -475,7 +561,6 @@ class SpatialJoinSpec extends SparkSpec {
     "before any Spark job") {
     def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
     val (pts, layer) = (points, polys)
-    val path = java.nio.file.Files.createTempDirectory("badlevel").resolve("t").toString
     val sc = spark.sparkContext
     sc.setJobGroup("bad-level", "bad-level", interruptOnCancel = false)
     val messages = try Seq(
@@ -491,22 +576,15 @@ class SpatialJoinSpec extends SparkSpec {
         "cellLevel must be in 0..30 or AutoLevel (-1), got 31",
       message(SpatialJoin.estimateCoveringBytes(layer, SpatialJoin.AutoLevel)) ->
         "cellLevel must be in 0..30, got -1",
-      message(SpatialJoin.joinWithin(pts, layer, 1.0, cellLevel = 31)) ->
-        "cellLevel must be in 0..30, got 31",
+      message(SpatialJoin.join(pts, layer, SpatialPredicate.DWithin(1.0), cellLevel = 31,
+        leftPointsOnly = true)) -> "cellLevel must be in 0..30, got 31",
       message(SpatialJoin.joinSalted(pts, layer, cellLevel = -2)) ->
         "cellLevel must be in 0..30, got -2",
-      message(SpatialJoin.prepare(layer, cellLevel = 40)) -> "cellLevel must be in 0..30, got 40",
-      message(SpatialJoin.prepareToTable(layer, path, cellLevel = -1)) ->
-        "cellLevel must be in 0..30, got -1",
-      message(SpatialJoin.prepareToTable(layer, path, partLevel = 31)) ->
-        "partLevel must be in 0..30, got 31",
-      message(SpatialJoin.loadPrepared(spark, path, cellLevel = 31)) ->
-        "cellLevel must be in 0..30, got 31")
+      message(SpatialJoin.prepare(layer, cellLevel = 40)) -> "cellLevel must be in 0..30, got 40")
     finally sc.clearJobGroup()
     for ((got, want) <- messages) assert(got.contains(want), s"'$got' lacks '$want'")
     org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
     assert(sc.statusTracker.getJobIdsForGroup("bad-level").isEmpty)
-    assert(!new java.io.File(path).exists())
   }
 
   test("q_spatial_join plans the layer-index probe: a Generate, no nested loop and no " +
@@ -515,17 +593,23 @@ class SpatialJoinSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val plan = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      SparkEntry.queries("q_spatial_join")(spark, "/root/testdata/sf0.001")
-        .queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.initialPlan
-          case p => p
-        }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert(layerProbes(plan).map(_.stats.level) == Seq(4), s"no level-4 layer-index probe:\n$plan")
-    assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"BNLJ:\n$plan")
-    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"shuffle:\n$plan")
+    // the left, prepared and distance gates take the same probe
+    for (gate <- Seq("q_spatial_join", "q_spatial_join_left", "q_spatial_join_prepared",
+      "q_dwithin_join")) {
+      val plan = try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        SparkEntry.queries(gate)(spark, "/root/testdata/sf0.001")
+          .queryExecution.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.initialPlan
+            case p => p
+          }
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      assert(layerProbes(plan).map(_.stats.level) == Seq(4),
+        s"$gate: no level-4 layer-index probe:\n$plan")
+      assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"$gate: BNLJ:\n$plan")
+      assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"$gate: shuffle:\n$plan")
+    }
   }
 
   // the star layer plus one right row of each other kind the truth table
@@ -544,15 +628,17 @@ class SpatialJoinSpec extends SparkSpec {
     spark.createDataFrame(java.util.Arrays.asList(starLayer.collect() ++ extra: _*), schema)
   }
 
-  test("layer-index probe equals brute-force JTS and the hash-join plan of a parquet copy, " +
-    "for inner and left joins under both predicates, over every row kind") {
+  /** The layer-index probe of [[mixedLayer]] against brute-force JTS and
+   *  the hash-join plan of a parquet copy, for inner and left joins under
+   *  each of `predicates`, at cell level 6. */
+  private def checkMixedLayer(predicates: Seq[SpatialPredicate]): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, explode}
     import org.apache.spark.sql.types._
     import org.locationtech.jts.geom.{Geometry, LineString, MultiLineString, MultiPolygon, Polygon}
     val layer = mixedLayer.collect().map(r =>
-      (r.getLong(0), Option(r.getAs[Array[Byte]](1)).map(Wkb.read)))
-    val shapes = layer.collect { case (_, Some(g: Polygon)) if !g.isEmpty => g }
+      (r.getLong(0), Option(r.getAs[Array[Byte]](1)).map(w => (w, Wkb.read(w)))))
+    val shapes = layer.collect { case (_, Some((_, g: Polygon))) if !g.isEmpty => g }
     // 2,000 seeded points: clusters around star centres, a uniform
     // background, polygon vertices and edge midpoints (boundary points),
     // plus eight placed on the other right rows
@@ -574,31 +660,27 @@ class SpatialJoinSpec extends SparkSpec {
     val pts = (clustered ++ background ++ boundary ++ special).zipWithIndex.map { case ((x, y), i) =>
       Row(i.toLong, pointWkb(x, y))
     }
-    // left rows that match nothing: a null geometry, POINT EMPTY, NaN
-    // coordinates, and the vertex and edge midpoint of an isolated square
+    // left rows that no truth-table predicate matches: a null geometry,
+    // POINT EMPTY, NaN coordinates, and the vertex and edge midpoint of an
+    // isolated square (within any distance of it, though)
     val nothing = Seq(Row(5000L, null), Row(5001L, Wkb.write(Wkb.factory.createPoint())),
       Row(5002L, pointWkb(Double.NaN, Double.NaN)), Row(5003L, pointWkb(Double.NaN, 2.0)),
       Row(5004L, pointWkb(3.0, 1.0)), Row(5005L, pointWkb(2.0, 3.0)))
     val ptsDf = spark.createDataFrame(java.util.Arrays.asList(pts ++ nothing: _*),
       StructType(Seq(StructField("pid", LongType, nullable = false),
         StructField("geometry", BinaryType))))
-    def truth(g: Geometry, x: Double, y: Double): Boolean = {
-      val p = Wkb.factory.createPoint(new Coordinate(x, y))
-      g match {
-        case _: Polygon | _: MultiPolygon | _: LineString | _: MultiLineString => g.contains(p)
-        case _ => false
-      }
+    // the truth table's arms for a point left side; a null or empty geometry
+    // on either side matches nothing
+    def truth(predicate: SpatialPredicate, pw: Array[Byte], gw: Array[Byte], g: Geometry) = {
+      val p = Wkb.read(pw)
+      !p.isEmpty && !g.isEmpty && (predicate match {
+        case SpatialPredicate.DWithin(r) => GeomKernel.stDistance(pw, gw) <= r
+        case _ => g match {
+          case _: Polygon | _: MultiPolygon | _: LineString | _: MultiLineString => g.contains(p)
+          case _ => false
+        }
+      })
     }
-    val inner = (for {
-      r <- pts
-      p = Wkb.read(r.getAs[Array[Byte]](1)).getCoordinate
-      (id, Some(g)) <- layer
-      if truth(g, p.x, p.y)
-    } yield (r.getLong(0), id)).sorted
-    assert(inner.length > 500 && inner.exists(_._2 == 1000L) && inner.exists(_._2 == 1001L),
-      s"fixture too sparse: ${inner.length} matches")
-    val unmatched = (pts ++ nothing).map(_.getLong(0)).toSet -- inner.map(_._1)
-    assert(nothing.map(_.getLong(0)).toSet.subsetOf(unmatched))
     val path = java.nio.file.Files.createTempDirectory("mixed-layer").resolve("l").toString
     mixedLayer.write.parquet(path)
     val onFile = spark.read.parquet(path)
@@ -608,29 +690,52 @@ class SpatialJoinSpec extends SparkSpec {
         case b: Array[Byte] => b.toSeq
         case v => v
       }).groupBy(identity).map { case (k, v) => k -> v.size }
-    // the index holds the 302 rows with a non-empty covering (not the
-    // empty polygon, nor the null geometry) and exactly their level-6 cells
-    val cells = mixedLayer.filter(col("geometry").isNotNull)
-      .select(explode(SpatialJoin.cellsFor(col("geometry"), 6)).as("c"))
-    val stats = LayerStats(6, 302, cells.distinct().count().toInt, cells.count().toInt,
-      layerProbes(SpatialJoin.join(ptsDf, mixedLayer, cellLevel = 6, leftPointsOnly = true)
-        .queryExecution.executedPlan).head.stats.bytes)
-    for (joinType <- Seq("inner", "left");
-         predicate <- Seq(SpatialPredicate.Intersects, SpatialPredicate.Contains)) {
-      val name = s"$joinType/$predicate"
-      def joined(right: DataFrame) = SpatialJoin.join(ptsDf, right, predicate, joinType,
-        cellLevel = 6, leftPointsOnly = true)
-      val indexed = joined(mixedLayer)
-      val hashed = joined(onFile)
-      assert(layerProbes(indexed.queryExecution.executedPlan).map(_.stats) == Seq(stats), name)
-      assert(hashed.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"), name)
-      assert(indexed.schema == hashed.schema, name)
-      assert(multiset(indexed) == multiset(hashed), name)
-      val got = indexed.select(col("pid_left"), col("id_right")).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
-      val want = if (joinType == "inner") inner
-        else (inner ++ unmatched.toSeq.map(_ -> -1L)).sorted
-      assert(got == want, name)
+    for (predicate <- predicates) {
+      val inner = (for {
+        r <- pts ++ nothing if !r.isNullAt(1)
+        (id, Some((gw, g))) <- layer
+        if truth(predicate, r.getAs[Array[Byte]](1), gw, g)
+      } yield (r.getLong(0), id)).sorted
+      assert(inner.length > 500 && inner.exists(_._2 == 1000L) && inner.exists(_._2 == 1001L),
+        s"$predicate: fixture too sparse: ${inner.length} matches")
+      val unmatched = (pts ++ nothing).map(_.getLong(0)).toSet -- inner.map(_._1)
+      val (never, nearSquare) = nothing.map(_.getLong(0)).splitAt(4)
+      assert(never.toSet.subsetOf(unmatched) &&
+        nearSquare.toSet.subsetOf(unmatched) == (predicate.radius == 0), predicate)
+      // the index holds the 302 rows with a non-empty covering (not the
+      // empty polygon, nor the null geometry) and exactly their level-6
+      // cells, widened by the radius
+      val cells = mixedLayer
+        .select(explode(SpatialJoin.cellsForExpanded(col("geometry"), predicate.radius, 6)).as("c"))
+      val stats = LayerStats(6, 302, cells.distinct().count().toInt, cells.count().toInt,
+        layerProbes(SpatialJoin.join(ptsDf, mixedLayer, predicate, cellLevel = 6,
+          leftPointsOnly = true).queryExecution.executedPlan).head.stats.bytes)
+      for (joinType <- Seq("inner", "left")) {
+        val name = s"$joinType/$predicate"
+        def joined(right: DataFrame) = SpatialJoin.join(ptsDf, right, predicate, joinType,
+          cellLevel = 6, leftPointsOnly = true)
+        val indexed = joined(mixedLayer)
+        val hashed = joined(onFile)
+        assert(layerProbes(indexed.queryExecution.executedPlan).map(_.stats) == Seq(stats), name)
+        assert(hashed.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"), name)
+        assert(indexed.schema == hashed.schema, name)
+        assert(multiset(indexed) == multiset(hashed), name)
+        val got = indexed.select(col("pid_left"), col("id_right")).collect()
+          .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq.sorted
+        val want = if (joinType == "inner") inner
+          else (inner ++ unmatched.toSeq.map(_ -> -1L)).sorted
+        assert(got == want, name)
+      }
     }
+  }
+
+  test("layer-index probe equals brute-force JTS and the hash-join plan of a parquet copy, " +
+    "for inner and left joins under both predicates, over every row kind") {
+    checkMixedLayer(Seq(SpatialPredicate.Intersects, SpatialPredicate.Contains))
+  }
+
+  test("the DWithin layer-index probe equals brute-force distance and the hash-join plan " +
+    "of a parquet copy, for inner and left joins, over every row kind") {
+    checkMixedLayer(Seq(SpatialPredicate.DWithin(0.3)))
   }
 }
