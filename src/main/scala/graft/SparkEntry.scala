@@ -119,6 +119,16 @@ object SparkEntry {
       new Coordinate(minx, miny), new Coordinate(maxx, miny),
       new Coordinate(maxx, maxy), new Coordinate(minx, maxy), new Coordinate(minx, miny))))
 
+  /** The first `n` join boxes as a (box_id, `geomCol`) layer. */
+  private def boxLayer(s: SparkSession, geomCol: String, n: Int = joinBoxes.length): DataFrame =
+    s.createDataFrame(joinBoxes.take(n).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
+      .toDF("box_id", geomCol)
+
+  /** The spatial-join gates' left side: (custkey, point geometry) from a
+   *  frame shaped like [[custPoints]]. */
+  private def custGeoms(points: DataFrame): DataFrame =
+    points.select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
+
   private val joinBoxesSqlValues = joinBoxes
     .map { case (id, a, b, c, d) => s"(CAST($id AS BIGINT), $a, $b, $c, $d)" }
     .mkString(", ")
@@ -384,11 +394,8 @@ object SparkEntry {
 
     // ============ spatial join + kNN (SURVEY §2.4, BASELINE workload) ============
     "q_spatial_join" -> ((s, dir) => {
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "geometry")
       SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects, "inner", cellLevel = 4,
         leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
@@ -401,11 +408,8 @@ object SparkEntry {
       // q_spatial_join; the builder asserts the plan is BNLJ-free.
       graft.sql.GraftSql.registerRules(s)
       s.conf.set(graft.sql.SpatialJoinRule.CellLevelConf, "4")
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "bgeom")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "bgeom")
       val out = pts.join(boxes, st_contains(col("bgeom"), col("geometry")))
         .select(col("custkey"), col("box_id"))
       val plan = out.queryExecution.executedPlan.toString
@@ -420,11 +424,8 @@ object SparkEntry {
       // q_spatial_join_left, BNLJ-free
       graft.sql.GraftSql.registerRules(s)
       s.conf.set(graft.sql.SpatialJoinRule.CellLevelConf, "4")
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.take(2).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "bgeom")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "bgeom", 2)
       val out = pts.join(boxes, st_contains(col("bgeom"), col("geometry")), "left")
         .select(col("custkey"), col("box_id"))
       val plan = out.queryExecution.executedPlan.toString
@@ -437,11 +438,8 @@ object SparkEntry {
       // left-join + suffix semantics — the reference's strongest correctness
       // artifact (spatial_index.rs:479-480,535-552): unmatched left rows
       // survive with NULL right columns
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.take(2).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "geometry", 2)
       SpatialJoin.join(pts, boxes, SpatialPredicate.Intersects, "left", cellLevel = 4,
         leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
@@ -450,11 +448,8 @@ object SparkEntry {
     "q_spatial_join_salted" -> ((s, dir) => {
       // the explicit-skew-salting path must produce the same rows as the
       // broadcast path; tiny threshold forces salting on every cell
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "geometry")
       SpatialJoin.joinSalted(pts, boxes, SpatialPredicate.Intersects,
         cellLevel = 4, nSalts = 4, skewThreshold = 50)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
@@ -468,11 +463,8 @@ object SparkEntry {
       // q_spatial_join). PreparedJoinSpec additionally asserts that a join
       // on a prepared layer builds no index of its own and that a SECOND
       // join against it is row-equal.
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "geometry")
       val layer = SpatialJoin.prepare(boxes, cellLevel = 4)
       SpatialJoin.join(pts, layer, SpatialPredicate.Intersects, "inner", cellLevel = 4,
         leftPointsOnly = true)
@@ -1171,8 +1163,7 @@ object SparkEntry {
       // ring path via an emit->parse round-trip inside codegen.
       val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
         s"graft-geojson-gate-${Integer.toHexString(dir.hashCode)}").toString
-      val src = custPoints(s, dir).select(col("custkey"),
-        st_point(col("lon"), col("lat")).as("geometry"))
+      val src = custGeoms(custPoints(s, dir))
       CellStore.writeGeoJsonSeq(src, root)
       val back = CellStore.readGeoJsonSeq(s, root).select(
         get_json_object(col("properties"), "$.custkey").cast("long").as("ck"),
@@ -1489,11 +1480,8 @@ object SparkEntry {
       // point side keeps exactly one cell and probes the layer's index (no
       // exchange); the radius is off the quarter-degree lattice of the data
       // so the boundary can never tie in FP between engines.
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.take(2).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "geometry", 2)
       SpatialJoin.join(pts, boxes, SpatialPredicate.DWithin(2.3), "inner", cellLevel = 4,
         leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
@@ -1503,17 +1491,16 @@ object SparkEntry {
       // The NAIVE distance-join formulation — join on st_dwithin, which
       // Spark alone can only plan as a BroadcastNestedLoopJoin — rewritten
       // automatically by the injected Catalyst optimizer rule
-      // (graft.sql.SpatialJoinRule) into the cell-bucketed hash equi-join.
-      // Same oracle as q_dwithin_join; SpatialJoinRuleSpec asserts the
-      // rewritten plan shape (no BNLJ, Generate + HashJoin) and rule
-      // boundaries (left joins / non-literal radii untouched).
+      // (graft.sql.SpatialJoinRule) into the cell-bucketed hash equi-join
+      // that CellJoin.plan builds for SpatialJoin.join as well. Same oracle
+      // as q_dwithin_join; SpatialJoinRuleSpec asserts the rewritten plan
+      // shape (no BNLJ, Generate + HashJoin) and the rule's boundaries:
+      // right and full outer joins and non-literal radii stay untouched,
+      // while a left join is rewritten too (q_contains_rule_left).
       s.conf.set(graft.sql.SpatialJoinRule.CellLevelConf, "4")
       graft.sql.GraftSql.registerRules(s)
-      val pts = custPoints(s, dir)
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.take(2).map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "bgeom")
+      val pts = custGeoms(custPoints(s, dir))
+      val boxes = boxLayer(s, "bgeom", 2)
       pts.join(boxes, st_dwithin(col("geometry"), col("bgeom"), lit(2.3)))
         .select(col("custkey"), col("box_id"))
     }),
@@ -1578,15 +1565,12 @@ object SparkEntry {
       // query uses (stream-static inner join: stateless, append mode, no
       // watermark needed) — rows must equal the batch q_spatial_join oracle.
       val schema = s.read.parquet(s"$dir/customer.parquet").schema
-      val stream = s.readStream.schema(schema)
+      val stream = custGeoms(s.readStream.schema(schema)
         .parquet(streamStageDir("spatial", dir, "customer"))
         .select(col("c_custkey").as("custkey"),
           ((col("c_custkey") * 37) % 340 - 170 + 0.5).cast("double").as("lon"),
-          ((col("c_custkey") * 17) % 116 - 58 + 0.5).cast("double").as("lat"))
-        .select(col("custkey"), st_point(col("lon"), col("lat")).as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+          ((col("c_custkey") * 17) % 116 - 58 + 0.5).cast("double").as("lat")))
+      val boxes = boxLayer(s, "geometry")
       val joined = SpatialJoin.join(stream, boxes, SpatialPredicate.Intersects,
         "inner", cellLevel = 4, leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))
@@ -1603,8 +1587,7 @@ object SparkEntry {
       // Rows must equal the batch q_spatial_join oracle.
       val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
         s"graft-stream-geojson-${Integer.toHexString(dir.hashCode)}").toString
-      val src = custPoints(s, dir).select(col("custkey"),
-        st_point(col("lon"), col("lat")).as("geometry"))
+      val src = custGeoms(custPoints(s, dir))
       CellStore.writeGeoJsonSeq(src, root)
       val stream = s.readStream.text(root)
         .filter(length(trim(col("value"))) > 0)
@@ -1612,9 +1595,7 @@ object SparkEntry {
         .select(get_json_object(col("f.properties"), "$.custkey")
           .cast("long").as("custkey"),
           col("f.geometry").as("geometry"))
-      val boxes = s.createDataFrame(
-        joinBoxes.map { case (id, a, b, c, d) => (id, boxWkb(a, b, c, d)) })
-        .toDF("box_id", "geometry")
+      val boxes = boxLayer(s, "geometry")
       val joined = SpatialJoin.join(stream, boxes, SpatialPredicate.Intersects,
         "inner", cellLevel = 4, leftPointsOnly = true)
         .select(col("custkey_left").as("custkey"), col("box_id_right").as("box_id"))

@@ -258,7 +258,9 @@ object GeomKernel {
 
   // ================= binary predicates / measures =================
 
-  /** Row-wise cartesian distance in CRS units (geoseries.rs:141-146). */
+  /** Row-wise cartesian distance in CRS units (geoseries.rs:141-146); NaN
+   *  when either operand is empty, so `st_distance <= r` never holds there
+   *  (Spark orders NaN above every number). */
   def stDistance(a: Array[Byte], b: Array[Byte]): Double = {
     // point-point fast path: straight hypot from the raw WKB doubles
     if (isPointWkb(a) && isPointWkb(b)) {
@@ -269,8 +271,14 @@ object GeomKernel {
       val dy = wkbDouble(a, 13, la) - wkbDouble(b, 13, lb)
       return math.sqrt(dx * dx + dy * dy)
     }
-    g(a).distance(g(b))
+    distance(g(a), g(b))
   }
+
+  // JTS reads 0 against an empty operand, which would put every geometry
+  // within any radius of an empty one; an empty point's NaN coordinates
+  // give the point-point formula NaN already
+  private def distance(a: Geometry, b: Geometry): Double =
+    if (a.isEmpty || b.isEmpty) Double.NaN else a.distance(b)
 
   /** Boundary-exclusive containment — georust `Contains` semantics, which the
    *  reference join tests pin down (boundary points NOT contained:
@@ -384,7 +392,7 @@ object GeomKernel {
    *  the same point-point formula, else JTS's distance from the left
    *  operand. */
   private[graft] def distanceWith(lhs: Array[Byte], rhs: JoinGeom): Double =
-    if (isPointWkb(rhs.bytes)) stDistance(lhs, rhs.bytes) else g(lhs).distance(rhs.geom)
+    if (isPointWkb(rhs.bytes)) stDistance(lhs, rhs.bytes) else distance(g(lhs), rhs.geom)
 
   /** [[joinRefineWith]] on two WKBs, the right one parsed through the refine
    *  cache. */

@@ -6,12 +6,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GeneratorOuter, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan, Range}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 import graft.functions.st
@@ -51,8 +51,9 @@ object SpatialPredicate {
  *             [[join]]) becomes one compact cell index probed from the point
  *             side in a single pass; every other layer meets its candidates
  *             under an equi-join on cell that Catalyst plans natively
- *             (broadcast or shuffled hash join). Neither is ever a nested
- *             loop.
+ *             (broadcast or shuffled hash join), built by [[CellJoin.plan]]
+ *             — the plan `graft.sql.SpatialJoinRule` gives a naive spatial
+ *             join as well. Neither is ever a nested loop.
  *   refine  — the exact predicate: the truth table (:89-137) reproduced
  *             verbatim in `GeomKernel.joinRefineWith`, or `st_distance <= r`
  *             for `DWithin`.
@@ -98,7 +99,10 @@ object SpatialJoin {
    * right side, which for a `LocalRelation` runs no Spark job; [[prepare]]
    * builds it ahead of time for any static right side. Columns, their order
    * and nullability, and the output rows are those of the hash-join plan
-   * that every other right side keeps.
+   * that every other right side keeps: the naive join on the exact
+   * predicate, bucketed by cell in [[CellJoin.plan]] (one cell per point
+   * and no row ids with `leftPointsOnly`; else both sides explode and the
+   * pairs dedupe).
    */
   def join(left: DataFrame, right: DataFrame,
            predicate: SpatialPredicate = SpatialPredicate.Intersects,
@@ -113,78 +117,16 @@ object SpatialJoin {
       case Some(ix) => return probeJoin(left, right, ix, predicate, joinType, lSuffix, rSuffix)
       case None =>
     }
-    val lg = col("geometry" + lSuffix)
-    val rg = col("geometry" + rSuffix)
-    // row ids only exist on the generic path (pair dedupe); the point fast
-    // path must stay id-free — besides being needless, a
-    // monotonically_increasing_id anywhere in the plan disqualifies the
-    // whole query from Structured Streaming (stream-static spatial joins
-    // ride the point path)
-    val rBase = suffixed(right, rSuffix)
-    val r = if (leftPointsOnly) rBase
-      else rBase.withColumn("__ridx", monotonically_increasing_id())
-    val rCellsRaw = r.withColumn("__cell_r",
-      explode(cellsForExpanded(rg, predicate.radius, cellLevel)))
-    val rCells = if (broadcastRight) broadcast(rCellsRaw) else rCellsRaw
-
-    // Point-only left side: exactly one cell per row, so each (l,r) candidate
-    // pair meets in at most one shared cell — no explode, no dedupe, and no
-    // row ids. Inner AND left join are both a single equi-join with the exact
-    // predicate folded into the join condition (left_outer emits the null-
-    // extended row natively). With a broadcast right this is a pure scan +
-    // broadcast hash join: zero exchanges, embarrassingly parallel.
-    if (leftPointsOnly) {
-      val lCells = suffixed(left, lSuffix).withColumn("__cell", pointCell(lg, cellLevel))
-      val cond = col("__cell") === col("__cell_r") && refine(lg, rg, predicate)
-      val jt = if (joinType == "left") "left_outer" else "inner"
-      return lCells.join(rCells, cond, jt).drop("__cell", "__cell_r")
-    }
-
-    // Generic path: the left side explodes to several covering cells, so a
-    // pair can meet more than once and dedupe needs per-side row ids (the
-    // reference's lhs_index/rhs_index, spatial_index.rs:147-162).
-    //
-    // Both join types are ONE-PASS over the left side: the plan references
-    // `l` exactly once, so monotonically_increasing_id is evaluated exactly
-    // once and its partition-layout dependence is harmless — no
-    // localCheckpoint, no materialization of the left side to executor
-    // storage (r4's left path checkpointed the FULL-WIDTH left to keep two
-    // subtrees' ids consistent; on a 10^12-row left that materialization was
-    // the scale-killer, VERDICT r4 `weak`).
-    //
-    // Left join shape: explode_outer (a row whose geometry yields no cells —
-    // null or empty — survives with a null cell), LEFT OUTER cell join
-    // with the exact refine folded into the condition (unmatched rows
-    // null-extend natively), pair dedupe, then one window over __lidx keeps
-    // matched pairs and exactly one null-extended row for match-less left
-    // rows. Cost: the same pair-dedupe exchange the inner path already pays
-    // + one window exchange on __lidx (bounded per-task by a single left
-    // row's match count), replacing r4's checkpoint + anti-join + union.
-    val l = suffixed(left, lSuffix).withColumn("__lidx", monotonically_increasing_id())
-
-    val result = joinType match {
-      case "inner" =>
-        l.withColumn("__cell", explode(cellsFor(lg, cellLevel)))
-          .join(rCells, col("__cell") === col("__cell_r"), "inner")
-          .filter(refine(lg, rg, predicate))
-          .drop("__cell", "__cell_r")
-          // two geometries can share several covering cells -> the same (l,r)
-          // pair appears once per shared cell; the reference emits each once
-          .dropDuplicates("__lidx", "__ridx")
-      case "left" =>
-        val cond = col("__cell") === col("__cell_r") && refine(lg, rg, predicate)
-        val dedup = l.withColumn("__cell", explode_outer(cellsFor(lg, cellLevel)))
-          .join(rCells, cond, "left_outer")
-          .drop("__cell", "__cell_r")
-          // matched pairs dedupe as in inner; a left row's null-extended rows
-          // (cells that matched nothing) collapse to one (__lidx, null)
-          .dropDuplicates("__lidx", "__ridx")
-        val w = Window.partitionBy("__lidx")
-        dedup.withColumn("__m", count(col("__ridx")).over(w))
-          .filter(col("__ridx").isNotNull || col("__m") === 0)
-          .drop("__m")
-    }
-    result.drop("__lidx", "__ridx")
+    // the naive join, analyzed: Catalyst resolves the refine and the
+    // broadcast hint, and CellJoin buckets it by cell
+    val (lName, rName) = ("geometry" + lSuffix, "geometry" + rSuffix)
+    val r = suffixed(right, rSuffix)
+    val naive = suffixed(left, lSuffix).join(if (broadcastRight) broadcast(r) else r,
+      refine(col(lName), col(rName), predicate), if (joinType == "left") "left_outer" else "inner")
+    val j = naive.queryExecution.analyzed match { case j: Join => j }
+    def geom(side: LogicalPlan, name: String) = side.resolve(Seq(name), SQLConf.get.resolver).get
+    Bridge.ofRows(naive.sparkSession, CellJoin.plan(j, geom(j.left, lName), geom(j.right, rName),
+      predicate.radius, cellLevel, leftPointsOnly))
   }
 
   /** The exact test of a candidate pair: every join path refines with it. */
@@ -335,9 +277,18 @@ object SpatialJoin {
 
   /** An S2 level argument: 0..30, or [[AutoLevel]] where `autoOk`. */
   private def requireLevel(name: String, level: Int, autoOk: Boolean = false): Unit =
-    require((level >= 0 && level <= S2.MaxLevel) || (autoOk && level == AutoLevel),
+    parseLevel(name, level.toString, autoOk)
+
+  /** The level `value` spells, checked as [[requireLevel]] checks an
+   *  argument: a non-integer is rejected the same way, by name and value. */
+  private[graft] def parseLevel(name: String, value: String, autoOk: Boolean = false): Int = {
+    val level = value.toIntOption
+      .filter(l => (l >= 0 && l <= S2.MaxLevel) || (autoOk && l == AutoLevel))
+    require(level.nonEmpty,
       s"$name must be in 0..${S2.MaxLevel}${if (autoOk) s" or AutoLevel ($AutoLevel)" else ""}" +
-        s", got $level")
+        s", got $value")
+    level.get
+  }
 
   /** Averages over a bounded prefix sample of `right`, from one Spark query:
    *  the WKB length and, per level, the covering fan-out. An empty sample

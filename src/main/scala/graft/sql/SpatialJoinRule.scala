@@ -1,14 +1,13 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.First
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.LongType
 
 import graft.geom.GeomKernel
+import graft.join.{CellJoin, SpatialJoin}
 
 /**
  * Catalyst optimizer rule: rewrites a naive distance-join — the formulation
@@ -19,25 +18,28 @@ import graft.geom.GeomKernel
  *
  * which Spark can only plan as a BroadcastNestedLoopJoin (O(n*m) compares;
  * a non-equi condition gives the planner nothing to hash on) — into the
- * engine's cell-bucketed equi-join: explode both sides to S2 covering
- * cells (the right side's bbox expanded by r, so any pair within distance
- * r shares at least one cell — if dist(pa in A, pb in B) <= r then pa lies
- * in B's r-expanded bbox, and A's covering contains pa's cell), hash-join
- * on the cell, refine with the ORIGINAL predicate, and collapse duplicate
- * pair meetings with a first-value aggregate keyed on per-side row ids
- * (the ReplaceDeduplicateWithAggregate pattern, exprIds preserved so the
- * parent plan is untouched).
+ * engine's cell-bucketed equi-join, the plan `graft.join.CellJoin.plan`
+ * builds for `SpatialJoin.join`'s hash paths too: explode both sides to S2
+ * covering cells (the right side's bbox expanded by r, so any pair within
+ * distance r shares at least one cell — if dist(pa in A, pb in B) <= r then
+ * pa lies in B's r-expanded bbox, and A's covering contains pa's cell),
+ * hash-join on the cell, refine with the ORIGINAL predicate, and collapse
+ * duplicate pair meetings with a first-value aggregate keyed on per-side
+ * row ids (the ReplaceDeduplicateWithAggregate pattern: the plan above
+ * reads its output under fresh exprIds). A LEFT OUTER join takes the
+ * builder's one-pass left shape: outer explode, the condition folded into
+ * the cell join, pair dedupe and a match-count window over the left row id.
  *
- * This is the optimizer-level counterpart of `SpatialJoin.join` with a
- * `DWithin` (or truth-table) predicate, which stays the preferred API: its
- * point-side contract needs no row ids and no dedupe aggregate, so it is
- * exchange-free where this general rewrite pays one pair-id exchange. Both
- * cover through the same `JoinKernel.cover`, so a null or empty geometry
- * meets nothing on either. Register per session via
- * `GraftSql.registerRules(spark)` or cluster-wide through
- * `spark.sql.extensions=graft.sql.GraftSparkExtensions`. Covering
+ * The rule knows nothing of the left side's geometry type, so it always
+ * emits the generic shape; `SpatialJoin.join` with `leftPointsOnly` stays
+ * the preferred API for points: no row ids and no dedupe aggregate, and an
+ * in-memory layer is probed through its index. Every path covers through
+ * the same `JoinKernel.cover`, so a null or empty geometry meets nothing.
+ * Register per session via `GraftSql.registerRules(spark)` or cluster-wide
+ * through `spark.sql.extensions=graft.sql.GraftSparkExtensions`. Covering
  * resolution comes from `spark.graft.spatialJoin.cellLevel` (default 9 —
- * ~15-20 km cells; lower it for continent-sized geometries).
+ * ~15-20 km cells; lower it for continent-sized geometries), an integer in
+ * 0..30: any other value fails the first rewrite, naming the key.
  */
 object SpatialJoinRule extends Rule[LogicalPlan] {
 
@@ -72,8 +74,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
   private val TopoPredicates = Set("stContains", "stIntersects", "stWithin")
 
   /** (geomA, geomB, radius) from a rewritable spatial conjunct:
-   *  `st_dwithin(a,b,r)` / `st_distance(a,b) <= r` / `r >= st_distance(a,b)`
-   *  (radius r), or `st_contains/st_within/st_intersects(a,b)` (radius 0). */
+   *  `st_distance(a,b) <= r` (which `st_dwithin(a,b,r)` builds) /
+   *  `r >= st_distance(a,b)` (radius r), or
+   *  `st_contains/st_within/st_intersects(a,b)` (radius 0). */
   private def asSpatialPred(e: Expression): Option[(Expression, Expression, Double)] =
     e match {
       case si: StaticInvoke if si.staticObject == GeomKernel.getClass &&
@@ -85,14 +88,9 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
       case _ => asDwithin(e)
     }
 
-  /** (geomA, geomB, radius) from `st_dwithin(a,b,r)` / `st_distance(a,b) <= r`
-   *  / `r >= st_distance(a,b)`. */
+  /** (geomA, geomB, radius) from `st_distance(a,b) <= r` /
+   *  `r >= st_distance(a,b)`. */
   private def asDwithin(e: Expression): Option[(Expression, Expression, Double)] = e match {
-    case si: StaticInvoke if isKernel(si, "stDwithin") =>
-      si.arguments match {
-        case Seq(a, b, r) => litDouble(r).map(d => (a, b, d))
-        case _ => None
-      }
     case LessThanOrEqual(si: StaticInvoke, r) if isKernel(si, "stDistance") =>
       (si.arguments, litDouble(r)) match {
         case (Seq(a, b), Some(d)) => Some((a, b, d))
@@ -151,121 +149,23 @@ object SpatialJoinRule extends Rule[LogicalPlan] {
       case _ => None
     })
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // the rewrite only rescues joins the planner has NOTHING to hash on: a
-    // condition already carrying a cross-side equality conjunct (e.g.
-    // SpatialJoin.join's cell-bucketed form, or a business-key equi-join with a
-    // distance refinement) plans as a hash join by itself and is left alone
-    case j @ Join(l, r, Inner, Some(cond), _) if !hasHashableConjunct(cond, l, r) =>
-      spatialHit(cond, l, r).fold(j: LogicalPlan) { case (lg, rg, radius) =>
-        rewrite(j, l, r, cond, lg, rg, radius)
-      }
-    case j @ Join(l, r, LeftOuter, Some(cond), _) if !hasHashableConjunct(cond, l, r) =>
-      spatialHit(cond, l, r).fold(j: LogicalPlan) { case (lg, rg, radius) =>
-        rewriteLeft(j, l, r, cond, lg, rg, radius)
-      }
-  }
-
-  /** Covering-cell array for a geometry's bbox expanded by `radius` — the
-   *  same `JoinKernel.cover` as `SpatialJoin.cellsForExpanded`, but built
-   *  from RESOLVED Catalyst nodes directly: an optimizer rule must not emit
-   *  analyzer work (the Column DSL produces Unresolved* nodes, which fail
-   *  plan validation post-analysis). */
-  private def cellsOf(geom: Expression, radius: Double, level: Int): Expression = {
-    import org.apache.spark.sql.types.BinaryType
-    val bounds = StaticInvoke(GeomKernel.getClass, graft.functions.st.boundsSchema,
-      "stBounds", Seq(Cast(geom, BinaryType)), Seq(BinaryType),
-      propagateNull = true, returnNullable = false)
-    graft.join.JoinKernel.coverExpr(bounds, radius, level)
-  }
-
-  private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan, cond: Expression,
-                      lg: Expression, rg: Expression, radius: Double): LogicalPlan = {
-    val level = conf.getConfString(CellLevelConf, "9").toInt
-
-    def sideWithCells(side: LogicalPlan, geom: Expression, expand: Double,
-                      tag: String): (LogicalPlan, Attribute, Attribute) = {
-      val idAlias = Alias(MonotonicallyIncreasingID(), s"__${tag}idx")()
-      val withId = Project(side.output :+ idAlias, side)
-      val cellAttr = AttributeReference(s"__${tag}cell", LongType, nullable = false)()
-      val gen = Generate(Explode(cellsOf(geom, expand, level)),
-        unrequiredChildIndex = Nil, outer = false, qualifier = None,
-        generatorOutput = Seq(cellAttr), child = withId)
-      (gen, idAlias.toAttribute, cellAttr)
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    lazy val level = SpatialJoin.parseLevel(CellLevelConf, conf.getConfString(CellLevelConf, "9"))
+    // the rewrite's output has fresh exprIds; the plan above is rewritten
+    // to read them
+    plan.transformUpWithNewOutput {
+      // the rewrite only rescues joins the planner has NOTHING to hash on: a
+      // condition already carrying a cross-side equality conjunct (e.g.
+      // SpatialJoin.join's cell-bucketed form, or a business-key equi-join
+      // with a distance refinement) plans as a hash join by itself and is
+      // left alone
+      case j @ Join(l, r, Inner | LeftOuter, Some(cond), _) if !hasHashableConjunct(cond, l, r) =>
+        spatialHit(cond, l, r) match {
+          case Some((lg, rg, radius)) =>
+            val cells = CellJoin.plan(j, lg, rg, radius, level, leftPoints = false)
+            (cells, j.output.zip(cells.output))
+          case None => (j, Nil)
+        }
     }
-
-    val (lGen, lIdx, lCell) = sideWithCells(l, lg, 0.0, "l")
-    val (rGen, rIdx, rCell) = sideWithCells(r, rg, radius, "r")
-
-    // carry the user's join hint (e.g. broadcast on one side) — the sides
-    // are the same relations, only wrapped in Project+Generate, so the hint
-    // still means what the user meant
-    val bucketed = Join(lGen, rGen, Inner, Some(EqualTo(lCell, rCell)), j.hint)
-    val refined = Filter(cond, bucketed) // the FULL original predicate refines
-    // two geometries can share several covering cells -> a pair meets once
-    // per shared cell; collapse to one row per (l-row, r-row). Spark's own
-    // ReplaceDeduplicateWithAggregate shape: group on the pair ids, carry
-    // every original output through First, REUSING the original exprIds so
-    // the surrounding plan's references stay valid.
-    val aggExprs = j.output.map(a =>
-      Alias(First(a, ignoreNulls = false).toAggregateExpression(), a.name)(
-        exprId = a.exprId, qualifier = a.qualifier))
-    Aggregate(Seq(lIdx, rIdx), aggExprs, refined)
-  }
-
-  /**
-   * LeftOuter rescue — the one-pass shape of `SpatialJoin.joinImpl`'s left
-   * path, built from resolved Catalyst nodes: the left side is referenced
-   * exactly ONCE (a matched ∪ anti-join construction would evaluate
-   * MonotonicallyIncreasingID twice with no guarantee of identical ids), via
-   * outer cell explode → LEFT OUTER cell equi-join with the FULL original
-   * condition folded in (null-extension is native) → pair-dedupe aggregate →
-   * a count-over-left-id window keeping matched pairs plus exactly one
-   * null-extended row for match-less left rows.
-   */
-  private def rewriteLeft(j: Join, l: LogicalPlan, r: LogicalPlan, cond: Expression,
-                          lg: Expression, rg: Expression, radius: Double): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
-    val level = conf.getConfString(CellLevelConf, "9").toInt
-
-    val lIdAlias = Alias(MonotonicallyIncreasingID(), "__lidx")()
-    val lWithId = Project(l.output :+ lIdAlias, l)
-    // outer=true emits a NULL cell for rows with no covering cells — the
-    // attribute MUST declare nullable (Spark's own ResolveGenerate widens
-    // generator output nullability for outer generates; a hand-built plan
-    // that lies here lets codegen skip the null check on the join key and
-    // probe with the zeroed word instead of skipping the row)
-    val lCell = AttributeReference("__lcell", LongType, nullable = true)()
-    val lGen = Generate(Explode(cellsOf(lg, 0.0, level)), unrequiredChildIndex = Nil,
-      outer = true, qualifier = None, generatorOutput = Seq(lCell), child = lWithId)
-    val lIdx = lIdAlias.toAttribute
-
-    val rIdAlias = Alias(MonotonicallyIncreasingID(), "__ridx")()
-    val rWithId = Project(r.output :+ rIdAlias, r)
-    val rCell = AttributeReference("__rcell", LongType, nullable = false)()
-    val rGen = Generate(Explode(cellsOf(rg, radius, level)), unrequiredChildIndex = Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(rCell), child = rWithId)
-    // the right id is nullable downstream of the outer join
-    val rIdx = rIdAlias.toAttribute.withNullability(true)
-
-    val joined = Join(lGen, rGen, LeftOuter,
-      Some(And(EqualTo(lCell, rCell), cond)), j.hint)
-
-    // pair dedupe, reusing the original output exprIds (First carries whole
-    // rows; null-extended duplicates of one left row collapse with ridx null)
-    val aggExprs = (j.output.map(a =>
-      Alias(First(a, ignoreNulls = false).toAggregateExpression(), a.name)(
-        exprId = a.exprId, qualifier = a.qualifier)): Seq[NamedExpression]) ++
-      Seq(lIdx, rIdx)
-    val dedup = Aggregate(Seq(lIdx, rIdx), aggExprs, joined)
-
-    // __m = count(__ridx) over (partition by __lidx): >0 iff the row's left
-    // id matched anything anywhere
-    val frame = SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing)
-    val mAlias = Alias(WindowExpression(Count(rIdx).toAggregateExpression(),
-      WindowSpecDefinition(Seq(lIdx), Nil, frame)), "__m")()
-    val win = Window(Seq(mAlias), Seq(lIdx), Nil, dedup)
-    val kept = Filter(Or(IsNotNull(rIdx), EqualTo(mAlias.toAttribute, Literal(0L))), win)
-    Project(j.output, kept)
   }
 }

@@ -20,6 +20,13 @@ object Bridge {
   def toCatalyst(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
 
+  /** A DataFrame of `session` over a logical plan. */
+  def ofRows(session: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Register a SQL function builder into a live session's catalog. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit = {

@@ -124,6 +124,21 @@ class GeomKernelSpec extends AnyFunSuite {
     assert(boxes.indices.count(i => joinRefine(probes(i).head, boxes(i), PRED_CONTAINS)) == 1500)
   }
 
+  test("distance to an empty operand is NaN, never within a radius; distanceWith " +
+    "equals stDistance bit for bit") {
+    import graft.geom.Wkb
+    val f = Wkb.factory
+    val empties = Seq(f.createPolygon(), f.createPoint(), f.createLineString()).map(Wkb.write)
+    val geoms = Seq(stPoint(1, 2), stMakeBox(0, 0, 3, 3), stMakeLine(-1, -1, 4, 5)) ++ empties
+    for (a <- geoms; b <- geoms) {
+      val d = stDistance(a, b)
+      if (empties.contains(a) || empties.contains(b)) assert(d.isNaN, s"${Wkb.read(a)} ${Wkb.read(b)}")
+      else assert(d >= 0)
+      assert(java.lang.Double.doubleToLongBits(distanceWith(a, joinGeom(b))) ==
+        java.lang.Double.doubleToLongBits(d), s"${Wkb.read(a)} ${Wkb.read(b)}")
+    }
+  }
+
   test("length: polygon uses exterior ring only (reference contract)") {
     // polygon with a hole: perimeter of hole must NOT count
     val wkt = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Coordinate
 
@@ -103,11 +104,28 @@ class SpatialJoinRuleSpec extends SparkSpec {
     val jw = graft.join.SpatialJoin.join(pts, boxes.withColumnRenamed("bgeom", "geometry"),
       graft.join.SpatialPredicate.DWithin(2.3), "inner", cellLevel = 4,
       broadcastRight = false, leftPointsOnly = true)
-    // the rule's markers must not appear: its cell equality already hash-joins
-    val plan = jw.queryExecution.optimizedPlan.toString
-    assert(plan.contains("__cell_r"), plan)
-    assert(!plan.contains("__lcell") && !plan.contains("__ridx"))
+    // the rule must not re-bucket it: its cell equality already hash-joins,
+    // so the plan keeps its one join and the right side's one explode, and
+    // gains no row ids
+    val plan = jw.queryExecution.optimizedPlan
+    assert(plan.collect { case g: Generate => g }.size == 1, plan)
+    assert(plan.collect { case j: Join => j }.size == 1, plan)
+    assert(!plan.toString.contains("__ridx"), plan)
     assert(jw.count() > 0)
+  }
+
+  test("a bad cell level setting fails the rewrite, naming the key and the value") {
+    val (pts, boxes) = fixtures()
+    for (bad <- Seq("abc", "40")) {
+      spark.conf.set(SpatialJoinRule.CellLevelConf, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          pts.join(boxes, st_dwithin(col("geometry"), col("bgeom"), lit(2.3)))
+            .queryExecution.optimizedPlan)
+        assert(e.getMessage.contains(s"${SpatialJoinRule.CellLevelConf} must be in 0..30, got $bad"),
+          e.getMessage)
+      } finally spark.conf.set(SpatialJoinRule.CellLevelConf, "4")
+    }
   }
 
   test("st_dwithin: a null or empty right geometry matches nothing, as under " +
@@ -122,12 +140,15 @@ class SpatialJoinRuleSpec extends SparkSpec {
     val layer = spark.createDataFrame(java.util.Arrays.asList(
       Row(1L, boxWkb(-170, -58, -100, -10)), Row(2L, Wkb.write(Wkb.factory.createPolygon())),
       Row(3L, null)), StructType(Seq(StructField("box_id", LongType), StructField("bgeom", BinaryType))))
-    val ruled = near.join(layer, st_dwithin(col("geometry"), col("bgeom"), lit(3.7)))
+    // with the rule and without it (a nested loop over st_distance, which
+    // reads NaN against an empty geometry and null against a null one)
+    val (ruled, bnlj) = withAndWithoutRule(
+      near.join(layer, st_dwithin(col("geometry"), col("bgeom"), lit(3.7))))
     assert(!ruled.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
     val api = graft.join.SpatialJoin.join(near, layer.withColumnRenamed("bgeom", "geometry"),
       graft.join.SpatialPredicate.DWithin(3.7), cellLevel = 4, leftPointsOnly = true)
       .select(col("id_left").as("id"), col("box_id_right").as("box_id"))
-    assert(rows(ruled) == rows(api) && rows(api).nonEmpty)
+    assert(rows(ruled) == rows(api) && rows(bnlj) == rows(api) && rows(api).nonEmpty)
     assert(rows(api).forall(_._2 == 1L))
   }
 
@@ -155,7 +176,9 @@ class SpatialJoinRuleSpec extends SparkSpec {
       val naive = build
       assert(naive.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
         "ground-truth run unexpectedly avoided BNLJ")
-      (ruled, naive)
+      // its rows, collected while the rule is off: a projection of `naive`
+      // planned later would be rewritten like any other join
+      (ruled, spark.createDataFrame(naive.collectAsList(), naive.schema))
     } finally GraftSql.registerRules(spark)
   }
 
@@ -188,6 +211,16 @@ class SpatialJoinRuleSpec extends SparkSpec {
       }.toDF("box_id", "bgeom")
       def rows(df: DataFrame) = df.select("id", "box_id").collect()
         .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
+      // the truth, independent of both: every (point, box) pair of the
+      // collected rows through JTS contains, a point no box contains kept
+      // once with box -1
+      def geoms(df: DataFrame) =
+        df.collect().map(r => (r.getLong(0), Wkb.read(r.getAs[Array[Byte]](1))))
+      val boxGeoms = geoms(boxes)
+      val truth = geoms(pts).toSeq.flatMap { case (id, p) =>
+        val hits = boxGeoms.collect { case (b, g) if g.contains(p) => (id, b) }
+        if (hits.isEmpty) Seq((id, -1L)) else hits.toSeq
+      }.sorted
       // rule path (naive formulation through the optimizer rewrite)
       val ruled = pts.join(boxes, st_contains(col("bgeom"), col("geometry")), "left")
       assert(!ruled.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
@@ -198,10 +231,41 @@ class SpatialJoinRuleSpec extends SparkSpec {
           graft.join.SpatialPredicate.Contains, "left", cellLevel = 4,
           leftPointsOnly = false)
         .select(col("id_left").as("id"), col("box_id_right").as("box_id"))
-      val expect = rows(api)
-      assert(rows(ruled) == expect, s"trial $trial diverged")
-      assert(expect.length >= 120) // every left point survives
+      assert(rows(ruled) == truth, s"trial $trial: rule diverged")
+      assert(rows(api) == truth, s"trial $trial: API diverged")
+      assert(truth.exists(_._2 == -1L) && truth.exists(_._2 >= 0L))
     }
+  }
+
+  test("an API generic-path result self-joins and unions like any DataFrame") {
+    import spark.implicits._
+    import graft.join.{SpatialJoin, SpatialPredicate}
+    val la = Seq((1L, boxWkb(0, 0, 30, 30)), (2L, boxWkb(100, 10, 140, 50)),
+      (3L, boxWkb(-10, -10, 2, 2))).toDF("id", "geometry")
+    val rb = Seq((10L, boxWkb(5, 5, 25, 25)), (20L, boxWkb(1, 1, 6, 6)))
+      .toDF("box_id", "geometry")
+    // Spark's own plan checks after every analyzer and optimizer rule: they
+    // reject an alias that reuses an exprId already in the plan
+    spark.conf.set("spark.sql.planChangeValidation", "true")
+    try for (joinType <- Seq("inner", "left")) {
+      val g = SpatialJoin.join(la, rb, SpatialPredicate.Intersects, joinType, cellLevel = 4)
+      def ids(df: DataFrame) = df.collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
+      val expect = if (joinType == "inner") Seq((1L, 10L), (1L, 20L), (3L, 20L))
+        else Seq((1L, 10L), (1L, 20L), (2L, -1L), (3L, 20L))
+      val pairs = g.select("id_left", "box_id_right")
+      assert(ids(pairs) == expect)
+      assert(ids(pairs.union(pairs)) == (expect ++ expect).sorted)
+      val self = g.as("a").join(g.as("b"), col("a.id_left") === col("b.id_left") &&
+        col("a.box_id_right") <=> col("b.box_id_right"))
+      assert(ids(self.select(col("a.id_left"), col("b.box_id_right"))) == expect)
+      // and with the left input it came from
+      assert(ids(g.join(la, g("id_left") === la("id")).select("id", "box_id_right")) == expect)
+      // the rule's rewrite of the same join, under the same checks
+      val naive = la.join(rb.withColumnRenamed("geometry", "bgeom"),
+        st_intersects(col("geometry"), col("bgeom")), joinType)
+      assert(ids(naive.select("id", "box_id")) == expect)
+    } finally spark.conf.unset("spark.sql.planChangeValidation")
   }
 
   test("constant-folded literal geometry still rewrites (refs-empty side)") {

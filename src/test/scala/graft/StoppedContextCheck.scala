@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.TestBridge
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.join.{LayerProbe, SpatialJoin}
 
@@ -38,7 +38,7 @@ object StoppedContextCheck {
     s1.stop()
     val s2 = session()
     s2.sparkContext.setLogLevel("ERROR")
-    val moved = TestBridge.ofRows(s2, layer.queryExecution.analyzed)
+    val moved = Bridge.ofRows(s2, layer.queryExecution.analyzed)
     val second = joined(s2, moved)
     val (p2, rows2) = (probe(second), pairs(second))
     val samePlan = moved.queryExecution.analyzed eq layer.queryExecution.analyzed
