@@ -1,8 +1,12 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.st._
 import graft.geom.Wkb
@@ -25,8 +29,55 @@ import org.locationtech.jts.geom.Coordinate
  */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** The gate table `$dir/$name.parquet`. Inferring a parquet schema starts
+   *  a Spark job (about 0.1 s); a read with a supplied schema starts none.
+   *  So the first read of a table file infers as `read.parquet` does and
+   *  remembers the `StructType` Spark returned, field metadata included;
+   *  every later read of the unchanged file passes it to `read.schema`
+   *  (Spark makes a supplied schema nullable as it does an inferred one, so
+   *  the relation is the same).
+   *
+   *  The memo is JVM-wide, keyed on the qualified file path, and an entry
+   *  holds only while its stamp matches: the file's length and modification
+   *  time (one `getFileStatus`) and the session's `spark.sql.parquet.*` and
+   *  `spark.sql.legacy.parquet.*` settings. A rewritten or re-typed file, or
+   *  a session that changes an inference setting, is inferred again.
+   *  Directories are inferred on every read: their schema spans files the
+   *  directory's own status does not stamp (`CellStore` dirs are rewritten
+   *  in place). A missing path falls through to `read.parquet`, so Spark's
+   *  path-not-found error is unchanged. */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    tableStamp(s, path) match {
+      case None => s.read.parquet(path)
+      case Some((key, stamp)) => Option(schemas.get(key)) match {
+        case Some((`stamp`, schema)) => s.read.schema(schema).parquet(path)
+        case _ =>
+          val df = s.read.parquet(path)
+          schemas.put(key, (stamp, df.schema))
+          df
+      }
+    }
+  }
+
+  private final case class TableStamp(length: Long, mtime: Long, conf: Map[String, String])
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (TableStamp, StructType)]()
+
+  /** The qualified path and stamp of a regular file; None for a directory
+   *  or a missing path. */
+  private def tableStamp(s: SparkSession, path: String): Option[(String, TableStamp)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+    val status = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile).map { f =>
+      val conf = s.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      fs.makeQualified(p).toString -> TableStamp(f.getLen, f.getModificationTime, conf)
+    }
+  }
 
   private final val SpreadCapConf = "spark.graft.spread.maxInputBytes"
 
@@ -207,7 +258,9 @@ object SparkEntry {
       st_x(st_point(col("c_acctbal"), col("c_custkey").cast("double"))).as("x"),
       st_y(st_point(col("c_acctbal"), col("c_custkey").cast("double"))).as("y"))),
 
-    "q_st_distance" -> ((s, dir) => spread(t(s, dir, "lineitem"), col("l_orderkey")).select(
+    // pruned before spread(), so its size gate sees the five columns' bytes
+    "q_st_distance" -> ((s, dir) => spread(t(s, dir, "lineitem").select("l_orderkey",
+        "l_linenumber", "l_quantity", "l_discount", "l_tax"), col("l_orderkey")).select(
       col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
       round(st_distance(st_point(col("l_quantity"), col("l_discount")),
         st_point(col("l_tax"), lit(1.0))), 6).as("dist"))),
@@ -1389,7 +1442,7 @@ object SparkEntry {
       // memory sink — must equal the batch SQL over the same rows
       // the file stream source wants a directory: stage the single parquet
       // file behind a symlink in a temp dir
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val stream = s.readStream.schema(schema)
         .parquet(streamStageDir("window", dir, "events"))
         // the parquet file carries TIMESTAMP_NTZ; watermarks need TIMESTAMP
@@ -1415,7 +1468,7 @@ object SparkEntry {
       // exactly with another event's timestamp.
       import s.implicits._
       val gapMs = 7199500L
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val stream = s.readStream.schema(schema)
         .parquet(streamStageDir("sess", dir, "events"))
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("user_id"),
@@ -1531,7 +1584,7 @@ object SparkEntry {
       // shuffle/state payload). AvailableNow + unbounded dedup state is fine
       // for a bounded gate corpus; an unbounded production stream uses the
       // watermarked variant gated in q_stream_dedup_wm.
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = t(s, dir, "documents").schema
       val dedup = s.readStream.schema(schema)
         .parquet(streamStageDir("dedup", dir, "documents"))
         .select(fingerprint64(col("text")).as("fp"), xxhash64(col("text")).as("fp2"))
@@ -1546,7 +1599,7 @@ object SparkEntry {
       // twice inside the watermark window — must come out exactly once.
       // This is the state-bounded shape an unbounded 100-TB ingest needs:
       // state for an event is dropped once the watermark passes its ts.
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = t(s, dir, "events").schema
       val staged = streamStageDir("dedup-wm", dir, "events")
       def src = s.readStream.schema(schema).parquet(staged)
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
@@ -1564,7 +1617,7 @@ object SparkEntry {
       // box layer through the SAME SpatialJoin point fast path the batch
       // query uses (stream-static inner join: stateless, append mode, no
       // watermark needed) — rows must equal the batch q_spatial_join oracle.
-      val schema = s.read.parquet(s"$dir/customer.parquet").schema
+      val schema = t(s, dir, "customer").schema
       val stream = custGeoms(s.readStream.schema(schema)
         .parquet(streamStageDir("spatial", dir, "customer"))
         .select(col("c_custkey").as("custkey"),
