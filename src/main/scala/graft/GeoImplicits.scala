@@ -122,7 +122,9 @@ object GeoImplicits {
 
     /** Cell-bucketed spatial join against another geometry frame (a layer
      *  from [[SpatialJoin.prepare]] included); `SpatialPredicate.DWithin(r)`
-     *  joins the rows of `right` within `r` planar units. */
+     *  joins the rows of `right` within `r` planar units. [[SpatialJoin.join]]
+     *  decides broadcast or shuffle from the data, and the cell level too
+     *  when `cellLevel` is `SpatialJoin.AutoLevel`. */
     def sjoin(right: DataFrame,
               predicate: SpatialPredicate = SpatialPredicate.Intersects,
               how: String = "inner",

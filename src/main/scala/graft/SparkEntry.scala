@@ -627,7 +627,7 @@ object SparkEntry {
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
         .persist()
       SelfJoin.pairs(bands, Seq("band", "bucket"), "doc_id", nShards = 4,
-        hotThreshold = 50, censusSampleRate = 1.0)
+        hotThreshold = 50)
         .filter(col("fp_a") === col("fp_b") && col("fp2_a") === col("fp2_b"))
         .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id")).distinct()
     }),
@@ -644,7 +644,7 @@ object SparkEntry {
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
         .persist()
       SelfJoin.pairs(bands, Seq("band", "bucket"), "doc_id", nShards = 4,
-        hotThreshold = 50, censusSampleRate = 1.0)
+        hotThreshold = 50)
         .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id"),
           jaccard_shingles(col("text_a"), col("text_b"), lit(3)).as("jac"))
         .filter(col("jac") >= 0.8)
@@ -665,7 +665,7 @@ object SparkEntry {
         .select(col("vec_id"), col("embedding"),
           cosine_lsh_bucket(col("embedding"), lit(8)).as("bucket"))
       SelfJoin.pairs(e, Seq("bucket"), "vec_id", nShards = 4,
-        hotThreshold = 50, censusSampleRate = 1.0)
+        hotThreshold = 50)
         .withColumn("cos", cosine_sim(col("embedding_a"), col("embedding_b")))
         .filter(col("cos") >= 0.95)
         .select(col("vec_id_a").as("a_id"), col("vec_id_b").as("b_id"),
@@ -1572,7 +1572,7 @@ object SparkEntry {
       val bucketed = u.select(col("vec_id"), col("embedding"),
         cosine_lsh_bucket(col("embedding"), lit(12)).as("bucket"))
       SelfJoin.pairs(bucketed, Seq("bucket"), "vec_id", nShards = 4,
-        hotThreshold = 50, censusSampleRate = 1.0)
+        hotThreshold = 50)
         .filter(col("embedding_a") === col("embedding_b"))
         .select(col("vec_id_a").as("a_id"), col("vec_id_b").as("b_id")).distinct()
     }),
@@ -1796,7 +1796,7 @@ object SparkEntry {
           shiftrightunsigned(col("sig"), b * 8).bitwiseAND(lit(0xffL))): _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       SelfJoin.pairs(bands, Seq("band", "bucket"), "doc_id", nShards = 4,
-        hotThreshold = 50, censusSampleRate = 1.0)
+        hotThreshold = 50)
         .select(col("doc_id_a").as("a_id"), col("doc_id_b").as("b_id"),
           hamming64(col("sig_a"), col("sig_b")).as("hd"))
         .filter(col("hd") <= 7)

@@ -143,7 +143,7 @@ object AsofJoin {
   /**
    * Self-gating variant: measures the hottest left key on a seeded sample
    * (one cheap aggregate job over `sampleRate` of the rows — the same
-   * sampled-census pattern as SelfJoin/joinSalted) and picks [[join]] when
+   * sampled-census pattern as SpatialJoin.joinSalted) and picks [[join]] when
    * no key exceeds `maxKeyRows`, [[joinBucketed]] when one does. This
    * operationalizes the measured crossover (BENCH.md: bucketed is 4.9x
    * faster at 90% single-key skew, ~2x slower unskewed) so callers who

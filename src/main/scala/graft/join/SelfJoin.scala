@@ -24,27 +24,18 @@ import org.apache.spark.sql.functions._
 object SelfJoin {
 
   def pairs(df: DataFrame, bucketCols: Seq[String], idCol: String,
-            nShards: Int = 16, hotThreshold: Long = 5000L,
-            censusSampleRate: Double = Double.NaN): DataFrame = {
-    require(nShards >= 1, "nShards must be >= 1")
+            nShards: Int = 16, hotThreshold: Long = 5000L): DataFrame = {
+    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
+    require(hotThreshold >= 0, s"hotThreshold must be >= 0, got $hotThreshold")
     val payload = df.columns.filterNot(bucketCols.contains).toSeq
     val bCols = bucketCols.map(col)
 
-    // Hot-bucket census, optionally on a seeded SAMPLE. The guard only needs
-    // buckets that are catastrophically large: sampling at rate p detects a
-    // bucket of b rows with ~Poisson(b*p) hits, and p maps the threshold to
-    // >=20 expected hits — a bucket at 2x threshold is missed with
-    // probability < 1e-9, and a missed borderline bucket merely runs as one
-    // bigger task (the OUTPUT is identical either way). Note the sample sits
-    // above df's own projections, so it thins the census aggregation, not
-    // df's computation — callers whose df is expensive (LSH signatures)
-    // should persist/materialize df before calling, which is also what a
-    // production signature table does. Pass 1.0 for an exact census.
-    val p = if (censusSampleRate.isNaN) math.min(1.0, 20.0 / math.max(1L, hotThreshold))
-      else censusSampleRate
-    val censusSrc = if (p >= 1.0) df else df.sample(withReplacement = false, p, seed = 42)
-    val hot = censusSrc.groupBy(bCols: _*).count()
-      .filter(col("count") > (hotThreshold * p).toLong)
+    // exact hot-bucket census: one row per distinct bucket reaches its
+    // shuffle. Callers whose df is expensive (LSH signatures) should
+    // persist/materialize df before calling, since the census and the join
+    // both read it.
+    val hot = df.groupBy(bCols: _*).count()
+      .filter(col("count") > hotThreshold)
       .drop("count")
       .withColumn("__hot", lit(true))
 

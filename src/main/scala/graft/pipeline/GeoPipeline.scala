@@ -72,7 +72,7 @@ object GeoPipeline {
       // rects) and the broadcast stays thousands of rows, not millions.
       // s2Level (finer) is the storage/index resolution on the point side.
       SpatialJoin.join(pts, admin, SpatialPredicate.Intersects, "inner",
-        cellLevel = joinCellLevel, broadcastRight = true, leftPointsOnly = true)
+        cellLevel = joinCellLevel, leftPointsOnly = true)
     }
   }
 

@@ -3,21 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec.{actionsFor, jobsFor}
-import graft.join.SpatialJoin
+import graft.join.{SpatialJoin, SpatialPredicate}
 
-/** r6 (VERDICT r5 nit): `joinAutoBroadcast`'s size estimate ran a full
- *  `right.count()` on every call — a second complete pass when the right
- *  side is computed rather than a parquet scan. With a caller-supplied row
- *  count the estimate must (a) run one fewer Spark job (the bounded sample
- *  job only) and (b) produce the identical estimate. `joinAutoBroadcast`
- *  then takes both its level and its estimate from one sample query, and an
- *  immutable right side is counted and sampled once, on its first call. */
+/** The Spark actions `SpatialJoin.join`'s decisions start. A right side
+ *  whose rows the plan holds is counted and sampled once (one sample query
+ *  answers every level at a radius) and, for a point join, indexed once with
+ *  no count at all; a file- or RDD-backed right side is counted and sampled
+ *  again on every call, since its source may change; a streaming right side
+ *  is never acted on. */
 class AutoBroadcastCountSpec extends SparkSpec {
 
-  // a COMPUTED, parquet-backed right side — the scenario the fix targets. A
-  // file scan is never remembered (a table may grow between calls), so every
-  // call without rightRows re-counts; a layer of local rows (createDataFrame
-  // over a list) is counted (two jobs under AQE) only on its first call
+  // a COMPUTED, parquet-backed side. A file scan is never remembered (a
+  // table may grow between calls), so every join against it re-counts
   private def boxes = customers(graft.functions.st.st_point(x, y))
 
   private def customers(geometry: org.apache.spark.sql.Column) =
@@ -25,35 +22,6 @@ class AutoBroadcastCountSpec extends SparkSpec {
       .select(col("c_custkey").as("id"), geometry.as("geometry"))
   private def x = (col("c_custkey") % 80 - 40).cast("double")
   private def y = (col("c_custkey") % 60 - 30).cast("double")
-
-  test("caller-supplied rightRows skips the count job and matches the counted estimate") {
-    val right = boxes
-    val n = right.count()
-    var estCounted = 0L
-    var estSupplied = 0L
-    val withCount = jobsFor("acb-counted") {
-      estCounted = SpatialJoin.estimateCoveringBytes(right, cellLevel = 4)
-    }
-    val withRows = jobsFor("acb-supplied") {
-      estSupplied = SpatialJoin.estimateCoveringBytes(right, cellLevel = 4,
-        rightRows = Some(n))
-    }
-    assert(estSupplied == estCounted,
-      s"estimates differ: supplied=$estSupplied counted=$estCounted")
-    assert(withRows < withCount,
-      s"expected fewer jobs with rightRows supplied " +
-        s"(counted=$withCount, supplied=$withRows)")
-  }
-
-  test("joinAutoBroadcast with AutoLevel and rightRows runs exactly one decision action") {
-    val right = boxes
-    val n = right.count()
-    val actions = actionsFor("acb-auto") {
-      SpatialJoin.joinAutoBroadcast(right.limit(10), right, cellLevel = SpatialJoin.AutoLevel,
-        leftPointsOnly = true, rightRows = Some(n))
-    }
-    assert(actions == 1, s"expected one sample action for level and estimate, got $actions")
-  }
 
   /** A unit box around each of [[boxes]]' points, as an in-memory
    *  `LocalRelation` layer: each point of [[boxes]] lies inside its own box. */
@@ -88,7 +56,9 @@ class AutoBroadcastCountSpec extends SparkSpec {
     var first, second: org.apache.spark.sql.DataFrame = null
     val firstActions = actionsFor("acb-memo-1") { first = autoJoin(left, right) }
     val secondActions = actionsFor("acb-memo-2") { second = autoJoin(left, right) }
-    assert(firstActions == 2, s"first call: expected count + sample, got $firstActions")
+    // the level needs the sample; the probe's budget is the index's own
+    // size, so no count
+    assert(firstActions == 1, s"first call: expected the sample alone, got $firstActions")
     assert(secondActions == 0, s"second call re-decided: $secondActions actions")
     assert(rows(second) == rows(first) && rows(first).nonEmpty)
   }
@@ -105,21 +75,79 @@ class AutoBroadcastCountSpec extends SparkSpec {
     }
   }
 
-  test("a remembered right side samples again for another sampleRows, and a " +
-    "supplied rightRows overrides its remembered count") {
+  test("a remembered right side is counted once and sampled once per radius: every " +
+    "level reads the same sample") {
     val right = localBoxes
-    var est = 0L
-    assert(actionsFor("acb-key-1") { est = SpatialJoin.estimateCoveringBytes(right, 4) } == 2)
+    var (est4, est7) = (0L, 0L)
+    assert(actionsFor("acb-key-1") { est4 = SpatialJoin.estimateCoveringBytes(right, 4) } == 2)
     assert(actionsFor("acb-key-2") {
-      SpatialJoin.estimateCoveringBytes(right, 4, sampleRows = 100)
-    } == 1, "another sampleRows must sample again (the count stays remembered)")
-    val n = right.count()
-    var est10 = 0L
-    assert(actionsFor("acb-key-3") {
-      est10 = SpatialJoin.estimateCoveringBytes(right, 4, rightRows = Some(10 * n))
+      est7 = SpatialJoin.estimateCoveringBytes(right, 7)
+      SpatialJoin.autoCellLevel(right)
+    } == 0, "another level must read the remembered count and sample")
+    // finer cells: more of them per unit box
+    assert(est7 > est4, s"est4=$est4 est7=$est7")
+    // a distance join samples its own radius, once; its count stays remembered
+    def within = SpatialJoin.join(right.limit(10), right, SpatialPredicate.DWithin(0.5),
+      cellLevel = SpatialJoin.AutoLevel)
+    assert(actionsFor("acb-key-3") { within } == 1)
+    assert(actionsFor("acb-key-4") { within } == 0)
+  }
+
+  test("join on an in-memory layer with leftPointsOnly starts no action at a fixed level " +
+    "and one, the sample, at AutoLevel, and plans the probe") {
+    // built outside the counted blocks: reading the parquet side and
+    // collecting the layer's rows are actions of their own
+    val (left, layer4, layerAuto) = (boxes, localBoxes, localBoxes)
+    var fixed, auto: org.apache.spark.sql.DataFrame = null
+    assert(actionsFor("acb-join-fixed") {
+      fixed = SpatialJoin.join(left, layer4, cellLevel = 4, leftPointsOnly = true)
     } == 0)
-    // est = floor(n × fanOut × bytes), so 10n gives 10·est up to the truncation
-    assert(est10 >= 10 * est && est10 < 10 * est + 10, s"est=$est est10=$est10")
+    assert(actionsFor("acb-join-auto") {
+      auto = SpatialJoin.join(left, layerAuto, cellLevel = SpatialJoin.AutoLevel,
+        leftPointsOnly = true)
+    } == 1)
+    assert(probes(fixed).length == 1 && probes(auto).length == 1)
+    assert(rows(auto) == rows(fixed) && rows(fixed).nonEmpty)
+  }
+
+  test("a budget one byte below the built index's size shuffles the cell join with the " +
+    "same rows; exactly its size probes") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val right = localBoxes
+    def join(budget: Long) = SpatialJoin.join(boxes, right, cellLevel = 4,
+      leftPointsOnly = true, maxBroadcastBytes = budget)
+    val bytes = probes(join(128L << 20)).map(_.stats.bytes) match {
+      case Seq(b) => b
+      case other => fail(s"expected one probe, got $other")
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // silence Spark's own size-based broadcast so the plan shows our choice
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (at, below) = (join(bytes), join(bytes - 1))
+      assert(probes(at).map(_.stats.bytes) == Seq(bytes))
+      val plan = physical(below)
+      assert(probes(below).isEmpty, plan)
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty, plan)
+      assert(plan.collect { case e: ShuffleExchangeLike => e }.nonEmpty, plan)
+      assert(rows(below) == rows(at) && rows(at).nonEmpty)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("join against a streaming right side starts no action and keeps the broadcast " +
+    "cell join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val stream = spark.readStream.format("rate").load().select(col("value").as("id"),
+      graft.functions.st.st_makeBox(lit(0.0), lit(0.0), lit(1.0), lit(1.0)).as("geometry"))
+    val left = boxes
+    var joined: org.apache.spark.sql.DataFrame = null
+    assert(actionsFor("acb-stream") {
+      joined = SpatialJoin.join(left, stream, cellLevel = 4, leftPointsOnly = true)
+    } == 0)
+    assert(joined.isStreaming)
+    val hints = joined.queryExecution.analyzed.collect { case h: ResolvedHint => h.hints }
+    assert(hints.exists(_.strategy.contains(BROADCAST)), hints)
   }
 
   /** `df`'s physical plan, before adaptive execution re-plans it. */

@@ -100,10 +100,10 @@ class SpatialJoinRuleSpec extends SparkSpec {
 
   test("guard: a bucketed DWithin join (cross-side equality) is untouched") {
     val (pts, boxes) = fixtures()
-    // not broadcast, so the join plans its cell equi-join, not the index probe
+    // a budget of one byte: the join plans its cell equi-join, not the probe
     val jw = graft.join.SpatialJoin.join(pts, boxes.withColumnRenamed("bgeom", "geometry"),
       graft.join.SpatialPredicate.DWithin(2.3), "inner", cellLevel = 4,
-      broadcastRight = false, leftPointsOnly = true)
+      leftPointsOnly = true, maxBroadcastBytes = 1L)
     // the rule must not re-bucket it: its cell equality already hash-joins,
     // so the plan keeps its one join and the right side's one explode, and
     // gains no row ids

@@ -89,7 +89,7 @@ class SpatialJoinSpec extends SparkSpec {
 
   test("non-broadcast (shuffled cell) path gives identical rows") {
     val res = SpatialJoin.join(points, polys, SpatialPredicate.Intersects, "inner",
-      broadcastRight = false)
+      maxBroadcastBytes = 1L)
     assert(res.collect().map(_.getDouble(1)).sorted.toSeq == Seq(2.0, 3.0))
   }
 
@@ -147,13 +147,6 @@ class SpatialJoinSpec extends SparkSpec {
       .select("v_left", "poly_id_right").collect()
       .map(r => (r.getDouble(0), r.getLong(1))).sorted
     assert(salted.length == bcast.length && salted.sameElements(bcast))
-    // sketch census (bounded Misra-Gries instead of exact groupBy): the hot
-    // SET is correctness-neutral, so rows must be identical
-    val sketchSalted = SpatialJoin.joinSalted(pts, layer, SpatialPredicate.Intersects,
-      nSalts = 4, skewThreshold = 500, censusSketchK = 64)
-      .select("v_left", "poly_id_right").collect()
-      .map(r => (r.getDouble(0), r.getLong(1))).sorted
-    assert(sketchSalted.sameElements(bcast))
     // every hot point is in poly 1; cold points i=0..29 fall in poly 2
     // (i=30 lands on the lon=-120 boundary, excluded by contains semantics)
     assert(salted.length == 2000 + 30)
@@ -334,28 +327,30 @@ class SpatialJoinSpec extends SparkSpec {
         if GeomKernel.stDistance(pw, gw) <= radius
       } yield (pid, gid)).toSet
       val unmatched = pts.map(_._2).toSet -- expect.map(_._1)
-      def join(joinType: String, broadcastRight: Boolean, leftPointsOnly: Boolean) =
+      // a budget of one byte shuffles
+      def join(joinType: String, budget: Long, leftPointsOnly: Boolean) =
         SpatialJoin.join(ptsDf, layer, within, joinType, cellLevel = 5,
-          broadcastRight = broadcastRight, leftPointsOnly = leftPointsOnly)
-      val probe = join("inner", broadcastRight = true, leftPointsOnly = true)
+          leftPointsOnly = leftPointsOnly, maxBroadcastBytes = budget)
+      val (broadcast, shuffled) = (128L << 20, 1L)
+      val probe = join("inner", broadcast, leftPointsOnly = true)
       assert(layerProbes(probe.queryExecution.executedPlan).map(_.predicate) == Seq(within))
       val inner = Seq("probe" -> probe,
-        "shuffled" -> join("inner", broadcastRight = false, leftPointsOnly = true),
-        "generic" -> join("inner", broadcastRight = true, leftPointsOnly = false),
+        "shuffled" -> join("inner", shuffled, leftPointsOnly = true),
+        "generic" -> join("inner", broadcast, leftPointsOnly = false),
         "salted" -> SpatialJoin.joinSalted(ptsDf, layer, within, cellLevel = 5, nSalts = 4,
           skewThreshold = 2))
       for ((name, df) <- inner)
         assert(pairs(df, "pid_left", "gid_right") == expect, s"$name, radius $radius")
       // left joins keep every point, the unmatched ones null-extended
-      val left = Seq("probe" -> join("left", broadcastRight = true, leftPointsOnly = true),
-        "shuffled" -> join("left", broadcastRight = false, leftPointsOnly = true),
-        "generic" -> join("left", broadcastRight = true, leftPointsOnly = false))
+      val left = Seq("probe" -> join("left", broadcast, leftPointsOnly = true),
+        "shuffled" -> join("left", shuffled, leftPointsOnly = true),
+        "generic" -> join("left", broadcast, leftPointsOnly = false))
       for ((name, df) <- left) assert(pairs(df, "pid_left", "gid_right") ==
         expect ++ unmatched.map(_ -> -1L), s"left $name, radius $radius")
     }
-    // joinAutoBroadcast measures the fan-out at the predicate's radius, so a
-    // wide radius picks a coarser level than the plain layer
-    def auto(predicate: SpatialPredicate) = SpatialJoin.joinAutoBroadcast(ptsDf, layer, predicate,
+    // AutoLevel measures the fan-out at the predicate's radius, so a wide
+    // radius picks a coarser level than the plain layer
+    def auto(predicate: SpatialPredicate) = SpatialJoin.join(ptsDf, layer, predicate,
       cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true)
     def level(df: DataFrame) = layerProbes(df.queryExecution.executedPlan).map(_.stats.level)
     val wide = auto(SpatialPredicate.DWithin(12.0))
@@ -406,8 +401,8 @@ class SpatialJoinSpec extends SparkSpec {
       "probe" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6, leftPointsOnly = true),
       "broadcast hash" -> SpatialJoin.join(ptsDf, onFile, within, cellLevel = 6,
         leftPointsOnly = true),
-      "shuffled" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6, broadcastRight = false,
-        leftPointsOnly = true),
+      "shuffled" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6, leftPointsOnly = true,
+        maxBroadcastBytes = 1L),
       "generic" -> SpatialJoin.join(ptsDf, layer, within, cellLevel = 6),
       "salted" -> SpatialJoin.joinSalted(ptsDf, layer, within, cellLevel = 6, nSalts = 2,
         skewThreshold = 1))
@@ -436,20 +431,18 @@ class SpatialJoinSpec extends SparkSpec {
       for ((name, layer, level, est) <- pins) {
         assert(SpatialJoin.autoCellLevel(layer) == level, name)
         assert(SpatialJoin.estimateCoveringBytes(layer, level) == est, name)
-        // joinAutoBroadcast decides from the same level and estimate: a
-        // budget of exactly the estimate broadcasts, one byte less does not
+        // join decides from the same level and estimate: a budget of
+        // exactly the estimate broadcasts, one byte less does not
         def broadcasts(budget: Long): Boolean =
-          SpatialJoin.joinAutoBroadcast(points, layer, cellLevel = SpatialJoin.AutoLevel,
+          SpatialJoin.join(points, layer, cellLevel = SpatialJoin.AutoLevel,
             maxBroadcastBytes = budget).queryExecution.executedPlan.toString
             .contains("BroadcastHashJoin")
         assert(broadcasts(est) && !broadcasts(est - 1), name)
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // fixed levels and a sample smaller than the layer
+    // fixed levels
     assert(SpatialJoin.estimateCoveringBytes(starLayer, 9) == 13660050L)
     assert(SpatialJoin.estimateCoveringBytes(bigBoxes, 0) == 4212L)
-    assert(SpatialJoin.autoCellLevel(starLayer, sampleRows = 50) == 6)
-    assert(SpatialJoin.estimateCoveringBytes(starLayer, 6, sampleRows = 50) == 1156143L)
   }
 
   test("point joins on the star layer equal brute-force JTS contains in full, " +
@@ -488,9 +481,9 @@ class SpatialJoinSpec extends SparkSpec {
       df.select(col("pid_left"), col("id_right")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val runs = Seq(
-      "auto, broadcast" -> SpatialJoin.joinAutoBroadcast(ptsDf, starLayer,
+      "auto, broadcast" -> SpatialJoin.join(ptsDf, starLayer,
         cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true),
-      "auto, shuffled" -> SpatialJoin.joinAutoBroadcast(ptsDf, starLayer,
+      "auto, shuffled" -> SpatialJoin.join(ptsDf, starLayer,
         cellLevel = SpatialJoin.AutoLevel, leftPointsOnly = true, maxBroadcastBytes = 1L)) ++
       Seq(3, 6, 9).map(l => s"level $l" ->
         SpatialJoin.join(ptsDf, starLayer, cellLevel = l, leftPointsOnly = true)) :+
@@ -543,18 +536,20 @@ class SpatialJoinSpec extends SparkSpec {
 
   test("auto decisions reject bad arguments, naming the argument and its value") {
     def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
-    assert(message(SpatialJoin.estimateCoveringBytes(polys, 9, rightRows = Some(-5)))
-      .contains("rightRows must be >= 0, got -5"))
-    assert(message(SpatialJoin.estimateCoveringBytes(polys, 9, sampleRows = 0))
-      .contains("sampleRows must be > 0, got 0"))
-    assert(message(SpatialJoin.joinAutoBroadcast(points, polys, rightRows = Some(-1L)))
-      .contains("rightRows must be >= 0, got -1"))
-    assert(message(SpatialJoin.joinAutoBroadcast(points, polys, sampleRows = -3))
-      .contains("sampleRows must be > 0, got -3"))
-    assert(message(SpatialJoin.autoCellLevel(polys, maxLevel = 31))
-      .contains("maxLevel must be in 0..30, got 31"))
-    assert(message(SpatialJoin.autoCellLevel(polys, targetFanOut = 0.5))
-      .contains("targetFanOut must be >= 1, got 0.5"))
+    // a streaming right side can be neither counted nor sampled: the
+    // decisions that need either name it, and a join at a fixed level
+    // decides without them
+    val stream = spark.readStream.format("rate").load()
+      .select(org.apache.spark.sql.functions.col("value").as("id"),
+        graft.functions.st.st_point(org.apache.spark.sql.functions.lit(0.0),
+          org.apache.spark.sql.functions.lit(0.0)).as("geometry"))
+    val streaming = "right is a streaming DataFrame, which cannot be counted or sampled"
+    assert(message(SpatialJoin.autoCellLevel(stream)).contains(streaming))
+    assert(message(SpatialJoin.estimateCoveringBytes(stream, 9)).contains(streaming))
+    assert(message(SpatialJoin.join(points, stream, cellLevel = SpatialJoin.AutoLevel,
+      leftPointsOnly = true)).contains(streaming))
+    assert(message(SpatialJoin.join(points, polys, maxBroadcastBytes = -1L))
+      .contains("maxBroadcastBytes must be >= 0, got -1"))
   }
 
   test("every DataFrame entry point rejects a bad cell level by name and value, " +
@@ -564,12 +559,10 @@ class SpatialJoinSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobGroup("bad-level", "bad-level", interruptOnCancel = false)
     val messages = try Seq(
-      // AutoLevel means "measure it" only to joinAutoBroadcast; as a level
-      // it is one bogus cell holding every point and polygon (all pairs refined)
-      message(SpatialJoin.join(pts, layer, cellLevel = SpatialJoin.AutoLevel)) ->
-        "cellLevel must be in 0..30, got -1",
-      message(SpatialJoin.join(pts, layer, cellLevel = -3)) -> "cellLevel must be in 0..30, got -3",
-      message(SpatialJoin.join(pts, layer, cellLevel = 31)) -> "cellLevel must be in 0..30, got 31",
+      message(SpatialJoin.join(pts, layer, cellLevel = -3)) ->
+        "cellLevel must be in 0..30 or AutoLevel (-1), got -3",
+      message(SpatialJoin.join(pts, layer, cellLevel = 31)) ->
+        "cellLevel must be in 0..30 or AutoLevel (-1), got 31",
       message(SpatialJoin.joinAutoBroadcast(pts, layer, cellLevel = -3)) ->
         "cellLevel must be in 0..30 or AutoLevel (-1), got -3",
       message(SpatialJoin.joinAutoBroadcast(pts, layer, cellLevel = 31)) ->
@@ -577,14 +570,23 @@ class SpatialJoinSpec extends SparkSpec {
       message(SpatialJoin.estimateCoveringBytes(layer, SpatialJoin.AutoLevel)) ->
         "cellLevel must be in 0..30, got -1",
       message(SpatialJoin.join(pts, layer, SpatialPredicate.DWithin(1.0), cellLevel = 31,
-        leftPointsOnly = true)) -> "cellLevel must be in 0..30, got 31",
+        leftPointsOnly = true)) -> "cellLevel must be in 0..30 or AutoLevel (-1), got 31",
       message(SpatialJoin.joinSalted(pts, layer, cellLevel = -2)) ->
         "cellLevel must be in 0..30, got -2",
+      // nSalts = 0 would reach pmod(_, 0) at execution; a negative count a
+      // descending salt sequence
+      message(SpatialJoin.joinSalted(pts, layer, nSalts = 0)) -> "nSalts must be >= 1, got 0",
+      message(SpatialJoin.joinSalted(pts, layer, nSalts = -4)) -> "nSalts must be >= 1, got -4",
+      message(SpatialJoin.joinSalted(pts, layer, skewThreshold = -1)) ->
+        "skewThreshold must be >= 0, got -1",
       message(SpatialJoin.prepare(layer, cellLevel = 40)) -> "cellLevel must be in 0..30, got 40")
     finally sc.clearJobGroup()
     for ((got, want) <- messages) assert(got.contains(want), s"'$got' lacks '$want'")
     org.apache.spark.graftbridge.SparkBridge.drainListenerBus(sc)
     assert(sc.statusTracker.getJobIdsForGroup("bad-level").isEmpty)
+    // AutoLevel is a level to join, which measures it
+    assert(SpatialJoin.join(pts, layer, cellLevel = SpatialJoin.AutoLevel)
+      .select("point_values_left").collect().map(_.getDouble(0)).sorted.toSeq == Seq(2.0, 3.0))
   }
 
   test("q_spatial_join plans the layer-index probe: a Generate, no nested loop and no " +

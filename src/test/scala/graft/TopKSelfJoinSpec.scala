@@ -87,4 +87,22 @@ class TopKSelfJoinSpec extends SparkSpec {
     val out = SelfJoin.pairs(df, Seq("bucket"), "id", nShards = 4, hotThreshold = 5)
     assert(out.filter(col("id_a") >= col("id_b")).isEmpty)
   }
+
+  test("selfjoin rejects a bad shard count or hot threshold by name and value, before any job") {
+    import spark.implicits._
+    val df = Seq((0L, 1L), (0L, 2L)).toDF("bucket", "id")
+    def message(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    var messages = Seq.empty[(String, String)]
+    val jobs = SparkSpec.jobsFor("selfjoin-bad-args") {
+      messages = Seq(
+        message(SelfJoin.pairs(df, Seq("bucket"), "id", nShards = 0)) ->
+          "nShards must be >= 1, got 0",
+        message(SelfJoin.pairs(df, Seq("bucket"), "id", nShards = -2)) ->
+          "nShards must be >= 1, got -2",
+        message(SelfJoin.pairs(df, Seq("bucket"), "id", hotThreshold = -1)) ->
+          "hotThreshold must be >= 0, got -1")
+    }
+    for ((got, want) <- messages) assert(got.contains(want), s"'$got' lacks '$want'")
+    assert(jobs == 0)
+  }
 }
