@@ -556,19 +556,25 @@ object GeomKernel {
 
   // ================= CRS =================
   // The reference reprojects vertex-wise via PROJ (ops/proj.rs:33-70). PROJ is
-  // unavailable offline; Proj.scala implements the projections the workload
-  // needs directly (4326, 3857, all 120 WGS84 UTM zones via 4th-order Krüger
-  // Transverse Mercator, and EPSG:3035 LAEA). Any supported pair routes
-  // through lon/lat, vertex-wise like the reference.
+  // unavailable offline; Proj.scala implements the projections directly.
+  // Every way of naming a CRS resolves to a ProjString.Spec (an EPSG code
+  // through ProjString's EPSG registry, the one list of supported codes),
+  // and one vertex loop routes each pair through the WGS84 lon/lat hub.
 
-  def stTransform(wkb: Array[Byte], fromSrid: Int, toSrid: Int): Array[Byte] = {
-    if (fromSrid == toSrid) return wkb
-    if (!Proj.isSupported(fromSrid)) Proj.toLonLat(fromSrid, 0, 0) // throws with message
-    if (!Proj.isSupported(toSrid)) Proj.fromLonLat(toSrid, 0, 0)
+  /** Numeric-EPSG to_crs. Both codes resolve first, so an unknown code
+   *  throws (naming it) even when the two are equal. */
+  def stTransform(wkb: Array[Byte], fromSrid: Int, toSrid: Int): Array[Byte] =
+    transform(wkb, ProjString.epsg(fromSrid), ProjString.epsg(toSrid))
+
+  /** Vertex-wise from -> WGS84 lon/lat -> to; the WKB is returned unchanged
+   *  when both sides resolve to the same Spec. */
+  private def transform(wkb: Array[Byte], from: ProjString.Spec,
+                        to: ProjString.Spec): Array[Byte] = {
+    if (from == to) return wkb
     val geom = g(wkb).copy()
     val filter: CoordinateFilter = { (c: Coordinate) =>
-      val (lon, lat) = Proj.toLonLat(fromSrid, c.x, c.y)
-      val (x, y) = Proj.fromLonLat(toSrid, lon, lat)
+      val (lon, lat) = ProjString.toLonLat(from, c.x, c.y)
+      val (x, y) = ProjString.fromLonLat(to, lon, lat)
       c.x = x; c.y = y
     }
     geom.apply(filter)
@@ -594,21 +600,9 @@ object GeomKernel {
     spec
   }
 
-  /** PROJ parameter-string / EPSG-authority to_crs, vertex-wise via the
-   *  lon/lat hub — the reference's general reprojection surface
-   *  (ops/proj.rs:33-70). Specs are parse-cached; per-vertex work is pure
-   *  projection math. */
-  def stTransformProj(wkb: Array[Byte], from: UTF8String, to: UTF8String): Array[Byte] = {
-    val fs = projSpec(from, 0)
-    val ts = projSpec(to, 2)
-    val geom = g(wkb).copy()
-    val filter: CoordinateFilter = { (c: Coordinate) =>
-      val (lon, lat) = ProjString.toLonLat(fs, c.x, c.y)
-      val (x, y) = ProjString.fromLonLat(ts, lon, lat)
-      c.x = x; c.y = y
-    }
-    geom.apply(filter)
-    geom.geometryChanged()
-    out(geom)
-  }
+  /** PROJ parameter-string / EPSG-authority / PROJJSON to_crs — the
+   *  reference's general reprojection surface (ops/proj.rs:33-70). Specs are
+   *  parse-cached; per-vertex work is pure projection math. */
+  def stTransformProj(wkb: Array[Byte], from: UTF8String, to: UTF8String): Array[Byte] =
+    transform(wkb, projSpec(from, 0), projSpec(to, 2))
 }

@@ -1,29 +1,19 @@
 package graft.geom
 
 /**
- * Pure-math CRS reprojection for the codes a web-map / analytics workload
- * actually hits, replacing the reference's PROJ pipeline dependency
- * (reference: geopolars/geopolars-geo/src/ops/proj.rs:33-70 — arbitrary PROJ
- * strings, vertex-wise; PROJ does not ship offline, so we implement the
- * projections themselves):
+ * Pure-math CRS reprojection, replacing the reference's PROJ pipeline
+ * dependency (reference: geopolars/geopolars-geo/src/ops/proj.rs:33-70 —
+ * arbitrary PROJ strings, vertex-wise; PROJ does not ship offline, so we
+ * implement the projections themselves). This object holds the projection
+ * math, the ellipsoids and the Helmert datum shift. Which EPSG codes are
+ * supported, and with which parameters, is ProjString's EPSG registry
+ * (`ProjString.epsgTable`): every way of naming a CRS resolves to a
+ * `ProjString.Spec`, and `toLonLat`/`fromLonLat(srid, …)` below only look
+ * the code up there.
  *
- *   - EPSG:4326            WGS84 lon/lat (the hub CRS)
- *   - EPSG:3857            Web-Mercator (sphere)
- *   - EPSG:32601..32660    WGS84 / UTM north zones  (Transverse Mercator)
- *   - EPSG:32701..32760    WGS84 / UTM south zones
- *   - EPSG:3035            ETRS89-extended / LAEA Europe (GRS80)
- *   - EPSG:3413 / 3031     NSIDC north / Antarctic Polar Stereographic
- *   - EPSG:28992           RD New (Oblique/double Stereographic, Bessel)
- *   - EPSG:2154            RGF93 / Lambert-93 (Lambert Conformal Conic 2SP)
- *   - EPSG:5070            NAD83 / Conus Albers (Albers Equal Area)
- *   - EPSG:2263            NAD83 / New York Long Island (ftUS) — LCC 2SP
- *                          with US-survey-foot axes (the nybb golden
- *                          dataset's native CRS)
- *   - EPSG:2230            NAD83 / California zone 6 (ftUS) — LCC 2SP, ftUS
- *
- * Datum semantics: the numeric EPSG dispatch below is the PROJECTION only —
- * geographic input is taken in the CRS's own datum (exactly PROJ's behavior
- * for a `+proj=... +ellps=...` string with no +towgs84). Full
+ * Datum semantics: an EPSG code names the PROJECTION only — geographic
+ * input is taken in the CRS's own datum (exactly PROJ's behavior for a
+ * `+proj=... +ellps=...` string with no +towgs84). Full
  * `EPSG:4326 -> EPSG:27700`-style parity including the official Helmert
  * datum shift is available through the PROJ-string surface
  * (`ProjString.parse` + `+towgs84=...`, see Helmert below), e.g. the OSGB36
@@ -36,7 +26,7 @@ package graft.geom
  * of the conformal latitude — sub-micrometer in-zone accuracy. LAEA follows
  * Snyder 1987 §24 (ellipsoidal case) with the authalic-latitude series
  * inverse. Everything is per-vertex scalar math: it runs inside whole-stage
- * codegen via GeomKernel.stTransform like every other kernel.
+ * codegen via GeomKernel's one transform loop like every other kernel.
  */
 object Proj {
 
@@ -662,7 +652,7 @@ object Proj {
     else (wrapLonDeg(lon0Deg + math.toDegrees((x - fe) / (ell.a * m))), lat)
   }
 
-  // ---------------- SRID dispatch ----------------
+  // ---------------- UTM zones ----------------
 
   final val UtmK0 = 0.9996
 
@@ -961,16 +951,6 @@ object Proj {
   /** Airy 1830 — the OSGB36 / British National Grid ellipsoid. */
   val Airy: Ellipsoid = Ellipsoid(6377563.396, 1.0 / 299.3249646)
 
-  /** EPSG:27700 (British National Grid): tmerc on Airy, natural origin
-   *  (49N, 2W), k0=0.9996012717, FE=400000, FN=-100000. The FN applies at
-   *  the origin LATITUDE, so the rectifying northing of 49N shifts out. */
-  private val OsgbK0 = 0.9996012717
-  private lazy val OsgbRefY = tmForward(Airy, -2.0, 49.0, -2.0, OsgbK0, 0.0, 0.0)._2
-
-  /** RD New (Amersfoort) natural origin: 52°09'22.178"N, 5°23'15.500"E. */
-  private val Rd0: (Double, Double) =
-    (52.0 + 9.0 / 60 + 22.178 / 3600, 5.0 + 23.0 / 60 + 15.500 / 3600)
-
   // ============ geodetic <-> geocentric + Helmert datum shifts ============
 
   /** Geodetic lon/lat degrees (ellipsoidal height 0) -> geocentric Cartesian
@@ -1046,106 +1026,11 @@ object Proj {
   def utmSrid(latDeg: Double, lonDeg: Double): Int =
     (if (latDeg >= 0) 32600 else 32700) + utmZone(lonDeg)
 
-  def isSupported(srid: Int): Boolean =
-    srid == 4326 || srid == 3857 || srid == 3035 ||
-      srid == 3413 || srid == 3031 || srid == 28992 || srid == 2154 ||
-      srid == 5070 || srid == 27700 || srid == 2263 || srid == 2230 ||
-      srid == 6933 || srid == 4087 || srid == 5514 ||
-      (srid > 32600 && srid <= 32660) || (srid > 32700 && srid <= 32760)
+  /** Projected CRS (an EPSG registry code) -> lon/lat degrees. */
+  def toLonLat(srid: Int, x: Double, y: Double): (Double, Double) =
+    ProjString.toLonLat(ProjString.epsg(srid), x, y)
 
-  /** US survey foot, 1200/3937 m exactly (EPSG unit 9003) — the projected-
-   *  axis unit of the state-plane ftUS CRSs below. The EPSG registry defines
-   *  their false origins in ftUS; we store them converted to meters and
-   *  convert the whole coordinate at the dispatch boundary (same fr_meter
-   *  semantics as ProjString's +units=us-ft). */
-  private val UsFt = 1200.0 / 3937.0
-  /** EPSG:2263 NAD83 / New York Long Island (ftUS): LCC 2SP, false origin
-   *  40°10'N 74°W, standard parallels 40°40'N / 41°02'N, FE 984250 ftUS
-   *  (= 300000 m exactly), FN 0. */
-  private val NyLat0 = 40.0 + 10.0 / 60; private val NyLon0 = -74.0
-  private val NyLat1 = 40.0 + 40.0 / 60; private val NyLat2 = 41.0 + 2.0 / 60
-  private val NyFe = 984250.0 * UsFt
-  /** EPSG:2230 NAD83 / California zone 6 (ftUS): LCC 2SP, false origin
-   *  32°10'N 116°15'W, standard parallels 32°47'N / 33°53'N,
-   *  FE 6561666.667 ftUS, FN 1640416.667 ftUS (EPSG's rounded-decimal ftUS
-   *  values, converted — hence the 0.1 mm tails PROJ also carries). */
-  private val CaLat0 = 32.0 + 10.0 / 60; private val CaLon0 = -116.25
-  private val CaLat1 = 32.0 + 47.0 / 60; private val CaLat2 = 33.0 + 53.0 / 60
-  private val CaFe = 6561666.667 * UsFt; private val CaFn = 1640416.667 * UsFt
-
-  /** EPSG:3413 (NSIDC Sea Ice Polar Stereographic North: lat_ts=70,
-   *  lon_0=−45) and EPSG:3031 (Antarctic Polar Stereographic: lat_ts=−71,
-   *  lon_0=0), both WGS84, variant B. k₀ precomputed from lat_ts once. */
-  private lazy val K3413 = stereK0FromTs(Wgs84, 70.0)
-  private lazy val K3031 = stereK0FromTs(Wgs84, -71.0)
-
-  private val R3857 = 6378137.0
-
-  /** Projected CRS -> lon/lat degrees. Identity for 4326. */
-  def toLonLat(srid: Int, x: Double, y: Double): (Double, Double) = srid match {
-    case 4326 => (x, y)
-    case 3857 =>
-      (math.toDegrees(x / R3857),
-        math.toDegrees(2 * math.atan(math.exp(y / R3857)) - math.Pi / 2))
-    case 3035 => laeaInverse(Grs80, x, y, 52.0, 10.0, 4321000.0, 3210000.0)
-    case 3413 => stereInverse(Wgs84, x, y, 90.0, -45.0, K3413, 0.0, 0.0)
-    case 3031 => stereInverse(Wgs84, x, y, -90.0, 0.0, K3031, 0.0, 0.0)
-    case 28992 => stereaInverse(Bessel, x, y, Rd0._1, Rd0._2, 0.9999079,
-      155000.0, 463000.0)
-    case 2154 => lccInverse(Grs80, x, y, 46.5, 3.0, 44.0, 49.0, 700000.0, 6600000.0)
-    case 2263 => lccInverse(Grs80, x * UsFt, y * UsFt,
-      NyLat0, NyLon0, NyLat1, NyLat2, NyFe, 0.0)
-    case 2230 => lccInverse(Grs80, x * UsFt, y * UsFt,
-      CaLat0, CaLon0, CaLat1, CaLat2, CaFe, CaFn)
-    case 5070 => albersInverse(Grs80, x, y, 23.0, -96.0, 29.5, 45.5, 0.0, 0.0)
-    case 6933 => ceaInverse(Wgs84, x, y, 0.0, Ease2K0, 0.0, 0.0)
-    case 4087 => eqcInverse(Wgs84, x, y, 0.0, 1.0, 0.0, 0.0)
-    case 5514 => krovakInverse(Bessel, x, y, 49.5, KrovakLon0, KrovakAlpha,
-      0.9999, 0.0, 0.0, czech = false)
-    case 27700 => tmInverse(Airy, x, y + OsgbRefY, -2.0, OsgbK0, 400000.0, -100000.0)
-    case z if z > 32600 && z <= 32660 =>
-      tmInverse(Wgs84, x, y, (z - 32600) * 6.0 - 183.0, UtmK0, 500000.0, 0.0)
-    case z if z > 32700 && z <= 32760 =>
-      tmInverse(Wgs84, x, y, (z - 32700) * 6.0 - 183.0, UtmK0, 500000.0, 10000000.0)
-    case other =>
-      throw new IllegalArgumentException(s"st_transform: unsupported CRS $other " +
-        "(supported: 4326, 3857, 3035, 3413, 3031, 28992, 2154, 2230, 2263, " +
-        "5070, 6933, 4087, 5514, 27700, 326xx/327xx UTM)")
-  }
-
-  /** lon/lat degrees -> projected CRS. Identity for 4326. */
-  def fromLonLat(srid: Int, lon: Double, lat: Double): (Double, Double) = srid match {
-    case 4326 => (lon, lat)
-    case 3857 =>
-      (math.toRadians(lon) * R3857,
-        math.log(math.tan(math.Pi / 4 + math.toRadians(lat) / 2)) * R3857)
-    case 3035 => laeaForward(Grs80, lon, lat, 52.0, 10.0, 4321000.0, 3210000.0)
-    case 3413 => stereForward(Wgs84, lon, lat, 90.0, -45.0, K3413, 0.0, 0.0)
-    case 3031 => stereForward(Wgs84, lon, lat, -90.0, 0.0, K3031, 0.0, 0.0)
-    case 28992 => stereaForward(Bessel, lon, lat, Rd0._1, Rd0._2, 0.9999079,
-      155000.0, 463000.0)
-    case 2154 => lccForward(Grs80, lon, lat, 46.5, 3.0, 44.0, 49.0, 700000.0, 6600000.0)
-    case 2263 =>
-      val (xm, ym) = lccForward(Grs80, lon, lat, NyLat0, NyLon0, NyLat1, NyLat2, NyFe, 0.0)
-      (xm / UsFt, ym / UsFt)
-    case 2230 =>
-      val (xm, ym) = lccForward(Grs80, lon, lat, CaLat0, CaLon0, CaLat1, CaLat2, CaFe, CaFn)
-      (xm / UsFt, ym / UsFt)
-    case 5070 => albersForward(Grs80, lon, lat, 23.0, -96.0, 29.5, 45.5, 0.0, 0.0)
-    case 6933 => ceaForward(Wgs84, lon, lat, 0.0, Ease2K0, 0.0, 0.0)
-    case 4087 => eqcForward(Wgs84, lon, lat, 0.0, 1.0, 0.0, 0.0)
-    case 5514 => krovakForward(Bessel, lon, lat, 49.5, KrovakLon0, KrovakAlpha,
-      0.9999, 0.0, 0.0, czech = false)
-    case 27700 =>
-      val (x27, y27) = tmForward(Airy, lon, lat, -2.0, OsgbK0, 400000.0, -100000.0)
-      (x27, y27 - OsgbRefY)
-    case z if z > 32600 && z <= 32660 =>
-      tmForward(Wgs84, lon, lat, (z - 32600) * 6.0 - 183.0, UtmK0, 500000.0, 0.0)
-    case z if z > 32700 && z <= 32760 =>
-      tmForward(Wgs84, lon, lat, (z - 32700) * 6.0 - 183.0, UtmK0, 500000.0, 10000000.0)
-    case other =>
-      throw new IllegalArgumentException(s"st_transform: unsupported CRS $other " +
-        "(supported: 4326, 3857, 3035, 3413, 3031, 28992, 2154, 2230, 2263, " +
-        "5070, 6933, 4087, 5514, 27700, 326xx/327xx UTM)")
-  }
+  /** lon/lat degrees -> projected CRS (an EPSG registry code). */
+  def fromLonLat(srid: Int, lon: Double, lat: Double): (Double, Double) =
+    ProjString.fromLonLat(ProjString.epsg(srid), lon, lat)
 }

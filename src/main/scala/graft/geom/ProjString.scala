@@ -29,7 +29,8 @@ import java.util.concurrent.ConcurrentHashMap
  *                  positive-southing/westing EPSG:5513 axes)
  *   +proj=webmerc  Pseudo Mercator (EPSG 1024 — EPSG:3857)
  *   +proj=longlat  identity (degrees)
- *   EPSG:nnnn      authority form, routed to the numeric dispatch
+ *   EPSG:nnnn      authority form, looked up in the EPSG registry
+ *                  (`epsgTable` below — the one list of supported codes)
  *
  * Recognized parameters: +ellps (WGS84 | GRS80 | intl | bessel | airy |
  * mod_airy | clrk66 | clrk80ign | krass | sphere), +a +b +rf +f +R overrides,
@@ -71,9 +72,9 @@ object ProjString {
 
   final case class Spec(proj: String, ell: Proj.Ellipsoid,
                         lat0: Double, lon0: Double, k0: Double,
-                        x0: Double, y0: Double, srid: Int,
+                        x0: Double, y0: Double,
                         /** rectifying-northing of lat_0 (tmerc origin shift) */
-                        tmRefY: Double,
+                        tmRefY: Double = 0.0,
                         /** standard parallels (lcc 2SP) */
                         lat1: Double = 0.0, lat2: Double = 0.0,
                         /** +towgs84 datum shift (local geocentric -> WGS84);
@@ -102,7 +103,7 @@ object ProjString {
     "WGS84" -> Proj.Wgs84,
     "GRS80" -> Proj.Grs80,
     "intl" -> Proj.Ellipsoid(6378388.0, 1.0 / 297.0),
-    "bessel" -> Proj.Ellipsoid(6377397.155, 1.0 / 299.1528128),
+    "bessel" -> Proj.Bessel,
     "airy" -> Proj.Airy,
     // defined a/b in PROJ's table; f = (a-b)/a
     "mod_airy" -> Proj.Ellipsoid(6377340.189, (6377340.189 - 6356034.446) / 6377340.189),
@@ -149,7 +150,7 @@ object ProjString {
     // and URN spellings pyproj emits.
     val sl = s.toLowerCase
     if (sl == "crs84" || sl == "ogc:crs84" || sl == "urn:ogc:def:crs:ogc:1.3:crs84")
-      return Spec("longlat", Proj.Wgs84, 0, 0, 1, 0, 0, 0, 0)
+      return epsg(4326)
     // urn:ogc:def:crs:EPSG::nnnn -> the EPSG authority form
     if (sl.startsWith("urn:ogc:def:crs:epsg:"))
       s = "EPSG:" + s.substring(s.lastIndexOf(':') + 1)
@@ -161,8 +162,7 @@ object ProjString {
       val srid = try s.substring(5).trim.toInt catch {
         case _: NumberFormatException => fail(s, "bad EPSG code")
       }
-      if (!Proj.isSupported(srid)) Proj.toLonLat(srid, 0, 0) // throws with the srid list
-      return Spec("epsg", Proj.Wgs84, 0, 0, 1, 0, 0, srid, 0)
+      return epsg(srid)
     }
     if (!s.startsWith("+")) fail(s, "expected +proj=... or EPSG:nnnn")
     var kv = Map.empty[String, String]
@@ -389,22 +389,18 @@ object ProjString {
                      x0: Double, y0: Double,
                      lat1: Double = 0.0, lat2: Double = 0.0): Spec =
     proj match {
-      case "longlat" => Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0)
-      case "merc" => Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0)
+      // laea: all aspects — oblique/equatorial (Snyder 24-17..24-20) and the
+      // polar forms (24-23..24-25), selected inside Proj.laeaForward.
+      // sterea: Oblique ("double") Stereographic, EPSG method 9809 — the
+      // Gauss conformal-sphere construction (RD New / EPSG:28992). Any aspect.
+      case "longlat" | "merc" | "laea" | "sterea" =>
+        Spec(proj, ell, lat0, lon0, k0, x0, y0)
       case "tmerc" =>
         // +lat_0 shifts the northing origin by the (scaled) rectifying
         // northing of lat_0 on the central meridian
         val refY = if (lat0 == 0.0) 0.0
           else Proj.tmForward(ell, lon0, lat0, lon0, k0, 0.0, 0.0)._2
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, refY)
-      case "laea" =>
-        // all aspects: oblique/equatorial (Snyder 24-17..24-20) and the
-        // polar forms (24-23..24-25), selected inside Proj.laeaForward
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0)
-      case "sterea" =>
-        // Oblique ("double") Stereographic, EPSG method 9809 — the Gauss
-        // conformal-sphere construction (RD New / EPSG:28992). Any aspect.
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0, refY)
       case "lcc" =>
         // Lambert Conformal Conic, 2SP (Snyder §15; EPSG 9802 — Lambert-93,
         // US State Plane) and 1SP (EPSG 9801 — Jamaica National Grid):
@@ -412,12 +408,12 @@ object ProjString {
         // n = sin(lat_1) and k0 scales the radii (GN 7-2 r = a·F·tⁿ·k0).
         if (lat1 == 0.0 && lat2 == 0.0)
           fail(s, "+proj=lcc needs +lat_1 (and +lat_2 for the 2SP form)")
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0, lat1, lat2)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0, lat1 = lat1, lat2 = lat2)
       case "aea" =>
         // Albers Equal Area conic (Snyder §14; EPSG 9822 — CONUS Albers)
         if (lat1 == 0.0 && lat2 == 0.0)
           fail(s, "+proj=aea needs +lat_1/+lat_2")
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0, lat1, lat2)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0, lat1 = lat1, lat2 = lat2)
       case "cea" | "eqc" =>
         // Lambert Cylindrical Equal Area (Snyder §10; EPSG 9835 —
         // EASE-Grid 2.0) / Equidistant Cylindrical (Snyder §12; EPSG 1028 —
@@ -427,16 +423,16 @@ object ProjString {
           fail(s, s"+lat_0 is not a parameter of +proj=$proj — remove it")
         if (k0 <= 0.0)
           fail(s, s"+k_0=$k0 must be positive for +proj=$proj")
-        Spec(proj, ell, 0, lon0, k0, x0, y0, 0, 0)
+        Spec(proj, ell, 0, lon0, k0, x0, y0)
       case "omerc" | "omerca" =>
         // Hotine Oblique Mercator: lat1/lat2 carry the initial-line azimuth
         // and rectified-grid angle (degrees); "omerca" is the +no_uoff
         // variant A (EPSG 9812)
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0, lat1, lat2)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0, lat1 = lat1, lat2 = lat2)
       case "krovak" | "krovakcz" =>
         // Krovak: lat1 carries the centre-line azimuth; "krovakcz" is the
         // +czech positive southing/westing variant (EPSG:5513 axes)
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0, lat1, 0)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0, lat1 = lat1)
       case "sinu" | "moll" =>
         // Sinusoidal (Snyder §30 — the MODIS Land grid on its authalic
         // sphere via +R) / Mollweide (Snyder §31 — ESRI:54009 World
@@ -444,7 +440,7 @@ object ProjString {
         // exists in either projection.
         if (lat0 != 0.0)
           fail(s, s"+lat_0 is not a parameter of +proj=$proj — remove it")
-        Spec(proj, ell, 0, lon0, 1.0, x0, y0, 0, 0)
+        Spec(proj, ell, 0, lon0, 1.0, x0, y0)
       case "webmerc" =>
         // PROJ 5+'s +proj=webmerc (EPSG 1024 Popular Visualisation Pseudo
         // Mercator): spherical Mercator formulas on the base ellipsoid's
@@ -452,7 +448,7 @@ object ProjString {
         // The method fixes lat_0 = 0 and has no scale factor.
         if (lat0 != 0.0 || k0 != 1.0)
           fail(s, "+proj=webmerc fixes +lat_0=0 and has no +k_0 — remove them")
-        Spec("merc", Proj.Ellipsoid(ell.a, 0.0), 0, lon0, 1.0, x0, y0, 0, 0)
+        Spec("merc", Proj.Ellipsoid(ell.a, 0.0), 0, lon0, 1.0, x0, y0)
       case "stere" =>
         // POLAR aspects only (Snyder 21-30..21-39; EPSG 9810/9829 — the
         // EPSG:3413/3031 family). The oblique/equatorial ellipsoidal
@@ -462,9 +458,78 @@ object ProjString {
         if (!Proj.stereIsPolar(lat0))
           fail(s, s"+proj=stere lat_0=$lat0: only the polar aspects" +
             " (lat_0=+-90) are implemented")
-        Spec(proj, ell, lat0, lon0, k0, x0, y0, 0, 0)
+        Spec(proj, ell, lat0, lon0, k0, x0, y0)
       case other => fail(s, s"unsupported +proj=$other")
     }
+
+  // ---------- the EPSG registry: the one list of supported numeric CRSs.
+  // Numeric st_transform, `EPSG:n` and `urn:ogc:def:crs:EPSG::n` all resolve
+  // here, so an EPSG code is just a name for the Spec its PROJ definition
+  // parses to. Parameters are the registry's defining values (DMS as exact
+  // sums; ftUS false origins converted to meters, the axis unit applied on
+  // output like +units=us-ft). Geographic input is taken in each CRS's own
+  // datum: the codes name the projection only, no datum shift. ----------
+
+  private val epsgTable: Map[Int, Spec] = {
+    def reg(proj: String, ell: Proj.Ellipsoid, lat0: Double, lon0: Double,
+            k0: Double, x0: Double, y0: Double,
+            lat1: Double = 0.0, lat2: Double = 0.0): Spec =
+      mkSpec(s"EPSG registry +proj=$proj", proj, ell, lat0, lon0, k0, x0, y0, lat1, lat2)
+    val usFt = knownUnits("us-ft")
+    // WGS84 / UTM zones 1..60: 326zz north, 327zz south (FN 10,000,000)
+    val utm = for (zone <- 1 to 60; (base, fn) <- Seq(32600 -> 0.0, 32700 -> 10000000.0))
+      yield (base + zone) ->
+        reg("tmerc", Proj.Wgs84, 0.0, zone * 6.0 - 183.0, Proj.UtmK0, 500000.0, fn)
+    Map(
+      4326 -> reg("longlat", Proj.Wgs84, 0, 0, 1, 0, 0),
+      // Web-Mercator: the closed form R·ln tan(π/4 + φ/2) on the sphere of
+      // the WGS84 semi-major axis (see project/unproject)
+      3857 -> Spec("pseudomerc", Proj.Ellipsoid(Proj.Wgs84.a, 0.0), 0, 0, 1, 0, 0),
+      // ETRS89-extended / LAEA Europe
+      3035 -> reg("laea", Proj.Grs80, 52.0, 10.0, 1, 4321000.0, 3210000.0),
+      // NSIDC Sea Ice Polar Stereographic North (lat_ts 70) / Antarctic Polar
+      // Stereographic (lat_ts -71): variant B, k0 from the standard parallel
+      3413 -> reg("stere", Proj.Wgs84, 90.0, -45.0, Proj.stereK0FromTs(Proj.Wgs84, 70.0), 0, 0),
+      3031 -> reg("stere", Proj.Wgs84, -90.0, 0.0, Proj.stereK0FromTs(Proj.Wgs84, -71.0), 0, 0),
+      // Amersfoort / RD New: origin 52°09'22.178"N 5°23'15.500"E
+      28992 -> reg("sterea", Proj.Bessel, 52.0 + 9.0 / 60 + 22.178 / 3600,
+        5.0 + 23.0 / 60 + 15.500 / 3600, 0.9999079, 155000.0, 463000.0),
+      // RGF93 / Lambert-93
+      2154 -> reg("lcc", Proj.Grs80, 46.5, 3.0, 1, 700000.0, 6600000.0, 44.0, 49.0),
+      // NAD83 / New York Long Island (ftUS): FE 984250 ftUS (= 300000 m)
+      2263 -> reg("lcc", Proj.Grs80, 40.0 + 10.0 / 60, -74.0, 1, 984250.0 * usFt, 0.0,
+        40.0 + 40.0 / 60, 41.0 + 2.0 / 60).copy(toMeter = usFt),
+      // NAD83 / California zone 6 (ftUS): EPSG's rounded-decimal ftUS false
+      // origin, converted — hence the 0.1 mm tails PROJ also carries
+      2230 -> reg("lcc", Proj.Grs80, 32.0 + 10.0 / 60, -116.25, 1,
+        6561666.667 * usFt, 1640416.667 * usFt,
+        32.0 + 47.0 / 60, 33.0 + 53.0 / 60).copy(toMeter = usFt),
+      // NAD83 / Conus Albers
+      5070 -> reg("aea", Proj.Grs80, 23.0, -96.0, 1, 0, 0, 29.5, 45.5),
+      // WGS 84 / NSIDC EASE-Grid 2.0 Global (standard parallel 30)
+      6933 -> reg("cea", Proj.Wgs84, 0, 0, Proj.Ease2K0, 0, 0),
+      // WGS 84 / World Equidistant Cylindrical
+      4087 -> reg("eqc", Proj.Wgs84, 0, 0, 1, 0, 0),
+      // S-JTSK / Krovak East North
+      5514 -> reg("krovak", Proj.Bessel, 49.5, Proj.KrovakLon0, 0.9999, 0, 0, Proj.KrovakAlpha),
+      // OSGB36 / British National Grid: natural origin 49N 2W, the FN applies
+      // at the origin latitude (tmerc's lat_0 shift)
+      27700 -> reg("tmerc", Proj.Airy, 49.0, -2.0, 0.9996012717, 400000.0, -100000.0)
+    ) ++ utm
+  }
+
+  /** The registry's codes, ascending, runs of consecutive codes as a..b. */
+  private lazy val epsgCodes: String =
+    epsgTable.keys.toSeq.sorted.foldLeft(List.empty[(Int, Int)]) {
+      case ((a, b) :: rest, c) if c == b + 1 => (a, c) :: rest
+      case (runs, c) => (c, c) :: runs
+    }.reverse.map { case (a, b) => if (a == b) s"$a" else s"$a..$b" }.mkString(", ")
+
+  /** The Spec an EPSG code names; an unknown code throws, naming it and the
+   *  registry's codes. */
+  private[geom] def epsg(code: Int): Spec = epsgTable.getOrElse(code,
+    throw new IllegalArgumentException(
+      s"st_transform: unsupported CRS EPSG:$code (supported: $epsgCodes)"))
 
   // ---------- PROJJSON (the reference Python wrapper's CRS interchange:
   // py-geopolars/python/geopolars/internals/geoseries.py:257-261 serializes
@@ -568,35 +633,23 @@ object ProjString {
     }
   }
 
-  /** EPSG conversion-method codes -> this repo's projection kernels. */
-  private val projJsonMethods: Map[Int, String] = Map(
-    9807 -> "tmerc", // Transverse Mercator
-    9804 -> "merc",  // Mercator (variant A)
-    9805 -> "mercb", // Mercator (variant B) — standard parallel, no k0
-    1024 -> "webmerc", // Popular Visualisation Pseudo Mercator
-    9820 -> "laea",  // Lambert Azimuthal Equal Area
-    9810 -> "stere", // Polar Stereographic (variant A)
-    9829 -> "stere", // Polar Stereographic (variant B)
-    9809 -> "sterea", // Oblique Stereographic (Gauss double)
-    9801 -> "lcc1sp", // Lambert Conic Conformal (1SP)
-    9802 -> "lcc",   // Lambert Conic Conformal (2SP)
-    9822 -> "aea",   // Albers Equal Area
-    9835 -> "cea",   // Lambert Cylindrical Equal Area — standard parallel
-    1028 -> "eqc")   // Equidistant Cylindrical — standard parallel
-  private val projJsonMethodNames: Map[String, String] = Map(
-    "transverse mercator" -> "tmerc",
-    "mercator (variant a)" -> "merc",
-    "mercator (variant b)" -> "mercb",
-    "popular visualisation pseudo mercator" -> "webmerc",
-    "lambert azimuthal equal area" -> "laea",
-    "polar stereographic (variant a)" -> "stere",
-    "polar stereographic (variant b)" -> "stere",
-    "oblique stereographic" -> "sterea",
-    "lambert conic conformal (1sp)" -> "lcc1sp",
-    "lambert conic conformal (2sp)" -> "lcc",
-    "albers equal area" -> "aea",
-    "lambert cylindrical equal area" -> "cea",
-    "equidistant cylindrical" -> "eqc")
+  /** PROJJSON conversion methods: (EPSG method code, lower-case method
+   *  name, this repo's projection kernel). A method is found by its EPSG id
+   *  first, then by name. */
+  private val projJsonMethods: Seq[(Int, String, String)] = Seq(
+    (9807, "transverse mercator", "tmerc"),
+    (9804, "mercator (variant a)", "merc"),
+    (9805, "mercator (variant b)", "mercb"), // standard parallel, no k0
+    (1024, "popular visualisation pseudo mercator", "webmerc"),
+    (9820, "lambert azimuthal equal area", "laea"),
+    (9810, "polar stereographic (variant a)", "stere"),
+    (9829, "polar stereographic (variant b)", "stere"),
+    (9809, "oblique stereographic", "sterea"), // Gauss double
+    (9801, "lambert conic conformal (1sp)", "lcc1sp"),
+    (9802, "lambert conic conformal (2sp)", "lcc"),
+    (9822, "albers equal area", "aea"),
+    (9835, "lambert cylindrical equal area", "cea"), // standard parallel
+    (1028, "equidistant cylindrical", "eqc")) // standard parallel
 
   private def parseProjJson(raw: String): Spec = {
     def fail(why: String): Nothing =
@@ -638,12 +691,12 @@ object ProjString {
           case Some(id: Map[String @unchecked, Any @unchecked])
             if id.get("authority").contains("EPSG") =>
             id.get("code").collect { case c: Double => c.toInt }
-              .flatMap(projJsonMethods.get)
+              .flatMap(c => projJsonMethods.find(_._1 == c)).map(_._3)
           case _ => None
         }
         val proj = byCode
           .orElse(method.get("name").collect { case n: String => n }
-            .flatMap(n => projJsonMethodNames.get(n.toLowerCase)))
+            .flatMap(n => projJsonMethods.find(_._2 == n.toLowerCase)).map(_._3))
           .getOrElse(fail(s"unsupported conversion method ${method.get("name")}"))
         var lat0 = 0.0; var lon0 = 0.0; var k0 = 1.0; var x0 = 0.0; var y0 = 0.0
         var latTs = Option.empty[Double]
@@ -784,8 +837,10 @@ object ProjString {
   }
 
   private def project(spec: Spec, lon: Double, lat: Double): (Double, Double) = spec.proj match {
-    case "epsg" => Proj.fromLonLat(spec.srid, lon, lat)
     case "longlat" => (lon, lat)
+    case "pseudomerc" => // EPSG:3857's closed form, R = the sphere's radius
+      (math.toRadians(lon) * spec.ell.a,
+        math.log(math.tan(math.Pi / 4 + math.toRadians(lat) / 2)) * spec.ell.a)
     case "merc" => Proj.mercForward(spec.ell, lon, lat, spec.lon0, spec.k0, spec.x0, spec.y0)
     case "tmerc" =>
       val (x, y) = Proj.tmForward(spec.ell, lon, lat, spec.lon0, spec.k0, spec.x0, spec.y0)
@@ -822,8 +877,10 @@ object ProjString {
   }
 
   private def unproject(spec: Spec, x: Double, y: Double): (Double, Double) = spec.proj match {
-    case "epsg" => Proj.toLonLat(spec.srid, x, y)
     case "longlat" => (x, y)
+    case "pseudomerc" =>
+      (math.toDegrees(x / spec.ell.a),
+        math.toDegrees(2 * math.atan(math.exp(y / spec.ell.a)) - math.Pi / 2))
     case "merc" => Proj.mercInverse(spec.ell, x, y, spec.lon0, spec.k0, spec.x0, spec.y0)
     case "tmerc" => Proj.tmInverse(spec.ell, x, y + spec.tmRefY, spec.lon0, spec.k0,
       spec.x0, spec.y0)

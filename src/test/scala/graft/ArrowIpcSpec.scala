@@ -13,6 +13,7 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("cities.arrow: 202 rows of (name, wkb point) — the affine bench input") {
     // reference benches/affine.rs:23-31 runs translate(10,10) over this file
+    assumeRefFiles(RefData.CitiesArrow)
     val df = ArrowIpc.read(spark, RefData.CitiesArrow)
     assert(df.schema == StructType(Seq(
       StructField("name", StringType, nullable = true),
@@ -24,6 +25,8 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("naturalearth_cities (243 rows, the conftest.py:7 fixture) and " +
     "naturalearth_lowres (177 countries) parse with valid geometries") {
+    assumeRefFiles(RefData.dataset("naturalearth_cities.arrow"),
+      RefData.dataset("naturalearth_lowres.arrow"))
     val cities = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     assert(cities.count() == 243) // test_geoseries.py:4-5 pins this
     val countries = ArrowIpc.read(spark, RefData.dataset("naturalearth_lowres.arrow"))
@@ -45,16 +48,6 @@ class ArrowIpcSpec extends SparkSpec {
 
   test("geo schema metadata surfaces (CRS routing); timestamps/dates decode " +
     "to Spark microsecond/day semantics") {
-    // the reference golden files carry GeoParquet-style `geo` metadata
-    val md = ArrowIpc.metadataOf(RefData.dataset("naturalearth_lowres.arrow"))
-    assert(md.contains("geo") && md("geo").contains("\"geometry\""))
-    assert(md("geo").contains("crs"))
-    // the embedded PROJJSON CRS routes straight into the CRS machinery:
-    // naturalearth is WGS84 geographic -> the longlat identity spec
-    val crs = ArrowIpc.crsOf(RefData.dataset("naturalearth_lowres.arrow"))
-    assert(crs.isDefined && crs.get.contains("GeographicCRS"))
-    val spec = graft.geom.ProjString.parse(crs.get)
-    assert(spec.proj == "longlat" && spec.ell == graft.geom.Proj.Wgs84)
     // a file with no geo metadata yields None
     assert(ArrowIpc.crsOf(getClass.getResource("/compressed_dict.arrow").getPath).isEmpty)
 
@@ -102,6 +95,18 @@ class ArrowIpcSpec extends SparkSpec {
     assert(rows(1).isNullAt(rows(1).fieldIndex("ts")) &&
       rows(1).isNullAt(rows(1).fieldIndex("d")))
     java.nio.file.Files.delete(java.nio.file.Paths.get(path))
+
+    assumeRefFiles(RefData.dataset("naturalearth_lowres.arrow"))
+    // the reference golden files carry GeoParquet-style `geo` metadata
+    val md = ArrowIpc.metadataOf(RefData.dataset("naturalearth_lowres.arrow"))
+    assert(md.contains("geo") && md("geo").contains("\"geometry\""))
+    assert(md("geo").contains("crs"))
+    // the embedded PROJJSON CRS routes straight into the CRS machinery:
+    // naturalearth is WGS84 geographic -> the longlat identity spec
+    val crs = ArrowIpc.crsOf(RefData.dataset("naturalearth_lowres.arrow"))
+    assert(crs.isDefined && crs.get.contains("GeographicCRS"))
+    val spec = graft.geom.ProjString.parse(crs.get)
+    assert(spec.proj == "longlat" && spec.ell == graft.geom.Proj.Wgs84)
   }
 
   test("pyarrow LZ4-compressed batches + dictionary-encoded column decode " +
@@ -161,6 +166,7 @@ class ArrowIpcSpec extends SparkSpec {
     // REAL data round trip: reference WKB bytes survive export byte-identical,
     // and the geo metadata (incl. the source's PROJJSON CRS) rides along so
     // geoarrow-aware consumers recognize the geometry column
+    assumeRefFiles(RefData.dataset("naturalearth_cities.arrow"))
     val dir2 = java.nio.file.Files.createTempDirectory("ipc_ne").toString
     val ne = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     val srcCrs = ArrowIpc.crsOf(RefData.dataset("naturalearth_cities.arrow"))
@@ -200,6 +206,8 @@ class ArrowIpcSpec extends SparkSpec {
   }
 
   test("nybb.arrow: uint8 widens losslessly; multiple files union by schema") {
+    assumeRefFiles(RefData.dataset("nybb.arrow"), RefData.CitiesArrow,
+      RefData.dataset("naturalearth_cities.arrow"))
     val nybb = ArrowIpc.read(spark, RefData.dataset("nybb.arrow"))
     assert(nybb.count() == 5)
     assert(nybb.schema("BoroCode").dataType == ShortType) // arrow uint8

@@ -182,7 +182,8 @@ class ProjSpec extends AnyFunSuite {
     // polar-aspect laea parses since r5 (it used to be a documented refusal)
     assert(ProjString.parse("+proj=laea +lat_0=90 +ellps=WGS84").proj == "laea")
     // EPSG:2154 (Lambert-93) parses since r5 session 2 (LCC landed)
-    assert(ProjString.parse("EPSG:2154").srid == 2154)
+    assert(ProjString.parse("EPSG:2154") == ProjString.parse("+proj=lcc +lat_0=46.5 " +
+      "+lon_0=3 +lat_1=44 +lat_2=49 +x_0=700000 +y_0=6600000 +ellps=GRS80"))
     intercept[IllegalArgumentException](ProjString.parse("EPSG:2056"))
     // the zero shift every exported WGS84 string carries is accepted
     assert(ProjString.parse("+proj=merc +ellps=WGS84 +towgs84=0,0,0").proj == "merc")
@@ -864,13 +865,102 @@ class ProjSpec extends AnyFunSuite {
       assert(spec.proj == "longlat" && spec.helmert.isEmpty)
       assert(ProjString.fromLonLat(spec, 12.5, -33.25) == ((12.5, -33.25)))
     }
-    // urn EPSG form routes to the numeric dispatch
+    // urn EPSG form resolves through the EPSG registry
     val urn = ProjString.parse("urn:ogc:def:crs:EPSG::3857")
-    assert(urn.proj == "epsg" && urn.srid == 3857)
+    assert(urn == ProjString.parse("EPSG:3857"))
     assert(ProjString.fromLonLat(urn, 10.0, 45.0) ==
       graft.geom.Proj.fromLonLat(3857, 10.0, 45.0))
     intercept[IllegalArgumentException](
       ProjString.parse("urn:ogc:def:crs:EPSG::99999"))
+  }
+
+  test("EPSG registry: numeric, EPSG:n and URN spellings agree bit for bit on " +
+    "every code, all 120 UTM zones included, and round-trip") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.st
+    val spark = SparkSpec.spark
+    // one point inside each code's area of use; UTM zones 1 degree east of
+    // their central meridian at 30N / 30S
+    val named = Seq(4326 -> (10.0, 50.0), 3857 -> (11.6, 48.1), 3035 -> (10.0, 52.0),
+      3413 -> (-45.0, 75.0), 3031 -> (0.0, -75.0), 28992 -> (5.4, 52.1),
+      2154 -> (3.0, 46.5), 2263 -> (-73.9, 40.7), 2230 -> (-117.0, 33.0),
+      5070 -> (-96.0, 38.0), 6933 -> (10.0, 40.0), 4087 -> (10.0, 40.0),
+      5514 -> (15.0, 50.0), 27700 -> (-2.0, 53.0))
+    val utm = for (z <- 1 to 60; (base, lat) <- Seq(32600 -> 30.0, 32700 -> -30.0))
+      yield (base + z) -> ((z * 6.0 - 183.0 + 1.0, lat))
+    val points = named ++ utm
+    assert(points.size == 134)
+    // an unlisted code fails with the registry's own list: exactly these codes
+    val msg = intercept[IllegalArgumentException](ProjString.parse("EPSG:9999")).getMessage
+    assert(msg.contains("EPSG:9999"), msg)
+    val listed = "supported: (.*)\\)".r.findFirstMatchIn(msg).get.group(1).split(", ")
+      .flatMap(_.split("\\.\\.") match {
+        case Array(a, b) => a.toInt to b.toInt
+        case Array(a) => Seq(a.toInt)
+      })
+    assert(listed.toSeq == points.map(_._1).sorted, msg)
+
+    val rows = spark.createDataFrame(points.map { case (c, (lo, la)) => (c, lo, la) })
+      .toDF("code", "lon", "lat")
+    val pt = st.st_point(col("lon"), col("lat"))
+    val epsg = concat(lit("EPSG:"), col("code"))
+    val urn = concat(lit("urn:ogc:def:crs:EPSG::"), col("code"))
+    val fwd = Seq(
+      st.st_transform(pt, lit(4326), col("code")),
+      st.st_transform_crs(pt, lit("EPSG:4326"), epsg),
+      st.st_transform_crs(pt, lit("urn:ogc:def:crs:EPSG::4326"), urn))
+    val inv = Seq(
+      st.st_transform(fwd(0), col("code"), lit(4326)),
+      st.st_transform_crs(fwd(0), epsg, lit("EPSG:4326")),
+      st.st_transform_crs(fwd(0), urn, lit("urn:ogc:def:crs:EPSG::4326")))
+    val xy = (fwd ++ inv).flatMap(g => Seq(st.st_x(g), st.st_y(g)))
+    val out = rows.select(col("code") +: col("lon") +: col("lat") +: xy: _*).collect()
+    assert(out.length == points.size)
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    out.foreach { r =>
+      val code = r.getInt(0); val lon = r.getDouble(1); val lat = r.getDouble(2)
+      val v = (3 until 15).map(r.getDouble)
+      // the three spellings: forward (v0..v5) and inverse (v6..v11), bitwise
+      for (k <- Seq(0, 6); j <- 1 to 2; c <- 0 to 1)
+        assert(bits(v(k + c)) == bits(v(k + 2 * j + c)), s"EPSG:$code spelling $j: $v")
+      // the driver-side numeric API is the same Spec
+      val (ex, ey) = Proj.fromLonLat(code, lon, lat)
+      assert(bits(ex) == bits(v(0)) && bits(ey) == bits(v(1)), s"EPSG:$code forward")
+      assert(math.abs(v(6) - lon) < 1e-9 && math.abs(v(7) - lat) < 1e-9,
+        s"EPSG:$code round trip ($lon,$lat) -> (${v(6)},${v(7)})")
+    }
+  }
+
+  test("st_transform: one validation order for both spellings; equal CRSs return " +
+    "the input") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.st
+    import graft.geom.GeomKernel
+    val wkb = GeomKernel.stPoint(11.6, 48.1)
+    def u(s: String) = UTF8String.fromString(s)
+    // an unknown code is rejected, named, even when from == to
+    for (thunk <- Seq(() => GeomKernel.stTransform(wkb, 9999, 9999),
+      () => GeomKernel.stTransform(wkb, 4326, 9999),
+      () => GeomKernel.stTransformProj(wkb, u("EPSG:9999"), u("EPSG:9999")))) {
+      val e = intercept[IllegalArgumentException](thunk())
+      assert(e.getMessage.contains("EPSG:9999") && e.getMessage.contains("3857"),
+        e.getMessage)
+    }
+    // both sides resolving to the same Spec returns the WKB itself
+    assert(GeomKernel.stTransform(wkb, 3857, 3857) eq wkb)
+    assert(GeomKernel.stTransformProj(wkb, u("EPSG:3857"),
+      u("urn:ogc:def:crs:EPSG::3857")) eq wkb)
+    // and through the Spark surface, both spellings fail the query
+    def causes(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val spark = SparkSpec.spark
+    val p = spark.range(1).select(st.st_point(col("id").cast("double"), lit(1.0)).as("g"))
+    for (c <- Seq(st.st_transform(col("g"), lit(9999), lit(9999)),
+      st.st_transform(col("g"), "EPSG:9999", "EPSG:9999"))) {
+      val e = intercept[Exception](p.select(c).collect())
+      assert(causes(e).contains("EPSG:9999"), causes(e))
+    }
   }
 
   test("LCC 1SP (EPSG 9801): GN 7-2 Jamaica sample, k0 scaling, PROJJSON (r5)") {

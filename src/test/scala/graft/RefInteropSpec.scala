@@ -20,6 +20,7 @@ class RefInteropSpec extends SparkSpec {
       .map(_.getAs[Array[Byte]](0).toSeq).toSet
 
   test("naturalearth_cities (243 points) survives GeoJSONSeq bit-exactly") {
+    assumeRefFiles(RefData.dataset("naturalearth_cities.arrow"))
     val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     assert(src.count() == 243)
     val dir = java.nio.file.Files.createTempDirectory("ref-gj").toString
@@ -34,6 +35,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("naturalearth_lowres (177 country polygons) survives GeoJSONSeq bit-exactly") {
+    assumeRefFiles(RefData.dataset("naturalearth_lowres.arrow"))
     val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_lowres.arrow"))
     assert(src.count() == 177)
     val dir = java.nio.file.Files.createTempDirectory("ref-gj-cty").toString
@@ -44,6 +46,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("naturalearth_cities survives a Shapefile round-trip bit-exactly") {
+    assumeRefFiles(RefData.dataset("naturalearth_cities.arrow"))
     val src = ArrowIpc.read(spark, RefData.dataset("naturalearth_cities.arrow"))
     val dir = java.nio.file.Files.createTempDirectory("ref-shp").toString
     Shapefile.write(src, dir)
@@ -55,6 +58,7 @@ class RefInteropSpec extends SparkSpec {
   }
 
   test("nybb boroughs (5 multipolygons) survive a Shapefile round-trip: equal areas") {
+    assumeRefFiles(RefData.dataset("nybb.arrow"))
     val src = ArrowIpc.read(spark, RefData.dataset("nybb.arrow"))
     assert(src.count() == 5)
     val dir = java.nio.file.Files.createTempDirectory("ref-shp-nybb").toString

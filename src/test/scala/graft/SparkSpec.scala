@@ -58,6 +58,15 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Cancels the test, naming the file, when a reference dataset is absent
+   *  (a host without the reference checkout); a canceled test never
+   *  counts as a pass. */
+  protected def assumeRefFiles(paths: String*): Unit =
+    paths.foreach { p =>
+      assume(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
+        s"reference file $p is missing")
+    }
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     super.beforeAll()
